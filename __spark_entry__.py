@@ -300,9 +300,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .build()
             .run()
         )
-        return res.filter(F.col("distance") != F.lit(INF)).select(
-            "vertex_id", F.col("distance").cast("long").alias("hops")
-        )
+        return res.filter(
+            ~F.isnan("distance") & (F.col("distance") != F.lit(INF))
+        ).select("vertex_id", F.col("distance").cast("long").alias("hops"))
 
     def cc_frontier_q(spark, sf):
         """Second ``with_active_filter`` oracle row: min-label connected

@@ -28,7 +28,22 @@ from pregel_rs_spark.columns import (
     subject,
 )
 from pregel_rs_spark.graphframe import GraphFrame
-from pregel_rs_spark.pregel import MessageReceiver, PregelBuilder, truncate_plan
+from pregel_rs_spark.pregel import (
+    MessageReceiver,
+    PregelBuilder,
+    _free_checkpoint,
+    truncate_plan,
+)
+
+
+def _with_out_degrees(
+    graph: GraphFrame, prepartitioned_edges: bool = False
+) -> GraphFrame:
+    """``graph`` over its memoized degree table (GraphFrame._degree_table),
+    or ``graph`` itself when its vertices already carry ``out_degree``."""
+    if "out_degree" in graph.vertices.columns:
+        return graph
+    return graph.with_vertices(graph._degree_table(prepartitioned_edges))
 
 
 def pagerank(
@@ -74,38 +89,28 @@ def pagerank(
 
     Returns ``(vertex_id, …props, out_degree, rank)``.
     """
-    # Materialize the degree-annotated vertex table ONCE (truncate_plan):
-    # the n/dangling counts, superstep-0 init, and the loop then all read
-    # the in-memory copy instead of re-deriving distinct(src ∪ dst) ⋈
-    # degrees per consumer (that double derivation measured ~3 s/superstep
-    # equivalent on a 60M-edge 10-step run).
+    # The graph's memoized degree table: built on the first call,
+    # hash-partitioned like the Pregel state, so the n / dangling counts,
+    # the superstep-0 init and the loop all read the in-memory copy, and
+    # later calls on the same graph shuffle nothing but their messages.
+    g = _with_out_degrees(graph, prepartitioned_edges)
     if weight is not None:
-        # Degree-annotated + total outgoing weight (the weighted fan-out
-        # denominator).  One extra hash agg + join, once, before the loop.
-        out_w = graph.edges.groupBy(F.col(SUBJECT).alias(VERTEX_ID)).agg(
-            F.sum(F.col(weight)).cast("double").alias("out_weight")
-        )
-        verts = (
-            graph.out_degrees_full()
-            .join(out_w, VERTEX_ID, "left")
-            .withColumn(
+        # Total outgoing weight (the weighted fan-out denominator),
+        # aggregated from the edge layout, which is already clustered on
+        # the group key: no exchange on either side of the join.
+        out_w = g._edge_layout(prepartitioned_edges).groupBy(
+            edge_(SUBJECT).alias(VERTEX_ID)
+        ).agg(F.sum(edge_(weight)).cast("double").alias("out_weight"))
+        g = g.with_vertices(
+            g.vertices.join(out_w, VERTEX_ID, "left").withColumn(
                 "out_weight", F.coalesce(F.col("out_weight"), F.lit(0.0))
             )
         )
-        g = GraphFrame(truncate_plan(verts), graph.edges, closed=graph.closed)
-    else:
-        g = GraphFrame(
-            truncate_plan(graph.out_degrees_full()), graph.edges,
-            closed=graph.closed,
-        ) if "out_degree" not in graph.vertices.columns else graph
     if init_ranks is not None:
         prev = init_ranks.select(
             VERTEX_ID, F.col("rank").alias("__warm_rank__")
         )
-        g = GraphFrame(
-            truncate_plan(g.vertices.join(prev, VERTEX_ID, "left")),
-            g.edges, closed=g.closed,
-        )
+        g = g.with_vertices(g.vertices.join(prev, VERTEX_ID, "left"))
     counts = g.vertices.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum((F.col("out_degree") == 0).cast("long")).alias("n_dangling"),
@@ -163,14 +168,6 @@ def pagerank(
     res = engine.run(resume=resume)
     if init_ranks is not None:
         res = res.drop("__warm_rank__")
-    # the final state is its own checkpoint; free the materialized vertex
-    # table (safe: lineage was severed at every superstep)
-    vrdd = getattr(g.vertices, "_ck_rdd", None)
-    if vrdd is not None:
-        try:
-            vrdd.unpersist(False)
-        except Exception:
-            pass
     # expose per-superstep metrics to benchmarks (supersteps/hour is the
     # BASELINE.json north metric); plain Python attribute on the DataFrame
     res.pregel_metrics = engine.metrics
@@ -256,7 +253,10 @@ def connected_components(
     )
     if checkpoint_store is not None:
         builder = builder.with_checkpoint(checkpoint_store, 5)
-    return builder.build().run()
+    try:
+        return builder.build().run()
+    finally:
+        g.unpersist()  # the symmetrized graph lives only inside this call
 
 
 def connected_components_star(
@@ -335,12 +335,7 @@ def connected_components_star(
         sig = (sig_row["n"], sig_row["h"])
         prev = E
         E = nxt
-        prev_rdd = getattr(prev, "_ck_rdd", None)
-        if prev_rdd is not None:
-            try:
-                prev_rdd.unpersist(False)
-            except Exception:
-                pass
+        _free_checkpoint(prev)
         if sig == prev_sig:
             break
         prev_sig = sig
@@ -417,12 +412,7 @@ def label_propagation(
             nxt = truncate_plan(nxt)
             prev = labels
             labels = nxt
-            prev_rdd = getattr(prev, "_ck_rdd", None)
-            if prev_rdd is not None:
-                try:
-                    prev_rdd.unpersist(False)
-                except Exception:
-                    pass
+            _free_checkpoint(prev)
     finally:
         sym.unpersist()
     return labels
@@ -612,9 +602,7 @@ def personalized_pagerank(
     """
     if not sources:
         raise ValueError("personalized_pagerank needs ≥1 source vertex")
-    g = GraphFrame(
-        truncate_plan(graph.out_degrees_full()), graph.edges, closed=graph.closed
-    ) if "out_degree" not in graph.vertices.columns else graph
+    g = _with_out_degrees(graph)
     n_dangling = g.vertices.agg(
         F.sum((F.col("out_degree") == 0).cast("long")).alias("nd")
     ).collect()[0]["nd"]
@@ -654,14 +642,7 @@ def personalized_pagerank(
                 F.lit(0.0),
             ),
         )
-    res = builder.build().run()
-    vrdd = getattr(g.vertices, "_ck_rdd", None)
-    if vrdd is not None:
-        try:
-            vrdd.unpersist(False)
-        except Exception:
-            pass
-    return res
+    return builder.build().run()
 
 
 def sssp(
@@ -783,14 +764,6 @@ def strongly_connected_components(
     active_e = edges0
     assigned = None
 
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
-
     rounds = 0
     while rounds < max_rounds:
         rounds += 1
@@ -816,6 +789,7 @@ def strongly_connected_components(
             VERTEX_ID, F.col("max_value").alias("color")
         )
         colors = truncate_plan(colors)
+        g_fwd.unpersist()
 
         # 2. backward flag within color classes, from the roots
         sc = colors.select(
@@ -840,6 +814,7 @@ def strongly_connected_components(
             closed=True,
         )
         flags = max_value(g_bwd, max_iterations=max_iterations)
+        g_bwd.unpersist()
 
         done = flags.filter(F.col("max_value") == 1).select(
             VERTEX_ID, F.col("color").alias("component")
@@ -852,10 +827,10 @@ def strongly_connected_components(
             active_v.join(done.select(VERTEX_ID), VERTEX_ID, "left_anti")
         )
         for df in (active_v, colors):
-            _free(df)
+            _free_checkpoint(df)
         if assigned is not None:
-            _free(assigned)
-        _free(e_act)
+            _free_checkpoint(assigned)
+        _free_checkpoint(e_act)
         assigned, active_v = new_assigned, new_active
         active_e = edges0
     else:
@@ -870,7 +845,7 @@ def strongly_connected_components(
             "component", F.col(VERTEX_ID)
         ).limit(0)
     res = graph.vertices.join(assigned, VERTEX_ID, "inner")
-    _free(active_v)
+    _free_checkpoint(active_v)
     return res
 
 
@@ -910,14 +885,6 @@ def k_core(
     )
     und = truncate_plan(und)
 
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
-
     def _degrees(e: DataFrame) -> DataFrame:
         return (
             e.select(F.col("a").alias(VERTEX_ID))
@@ -941,7 +908,7 @@ def k_core(
         nxt = truncate_plan(nxt)
         # one O(1) scalar per round; fixpoint when no edge was peeled
         n_prev, n_now = und.count(), nxt.count()
-        _free(und)
+        _free_checkpoint(und)
         und = nxt
         if n_now == n_prev:
             break
@@ -951,7 +918,7 @@ def k_core(
     # materialize the (small, O(V)) result BEFORE freeing the edge blocks it
     # reads — the returned frame is lazy and must not depend on them
     res = truncate_plan(_degrees(und).filter(F.col("degree") >= k))
-    _free(und)
+    _free_checkpoint(und)
     return res
 
 
@@ -983,14 +950,6 @@ def k_truss(
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     from pregel_rs_spark.pregel import truncate_plan
-
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
 
     def _support(e: DataFrame) -> DataFrame:
         tris = _triangles_from_undirected(e)
@@ -1026,13 +985,13 @@ def k_truss(
             .select("a", "b")
         )
         n_prev, n_now = und.count(), nxt.count()
-        _free(und)
+        _free_checkpoint(und)
         und = nxt
         if n_now == n_prev or n_now == 0:
             break
 
     res = truncate_plan(_support(und))
-    _free(und)
+    _free_checkpoint(und)
     return res
 
 
@@ -1342,14 +1301,6 @@ def _hyperball_rounds(graph, k, log2m, portable):
     sketch = truncate_plan(sketch)
     yield sketch
 
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
-
     for _ in range(k):
         inc = edges.join(
             sketch, edges[OBJECT] == sketch[VERTEX_ID], "inner"
@@ -1362,7 +1313,7 @@ def _hyperball_rounds(graph, k, log2m, portable):
         )
         # the new table is materialized; the previous round's checkpoint
         # blocks are dead weight (consumers only ever read the latest)
-        _free(prev)
+        _free_checkpoint(prev)
         yield sketch
 
 
@@ -1764,18 +1715,6 @@ def degree_assortativity(graph: GraphFrame) -> DataFrame:
             F.corr(F.col("__od__").cast("double"), F.col("__id__").cast("double")), 6
         ).alias("assortativity"),
     )
-
-
-def _free_checkpoint(df: DataFrame) -> None:
-    """Unpersist the in-memory RDD behind a ``truncate_plan`` frame (no-op
-    for plain frames) — frees superseded per-round state eagerly instead
-    of waiting for GC."""
-    rdd = getattr(df, "_ck_rdd", None)
-    if rdd is not None:
-        try:
-            rdd.unpersist(False)
-        except Exception:
-            pass
 
 
 def _und_simple(edges: DataFrame) -> DataFrame:
@@ -2253,7 +2192,7 @@ def trustrank(
     function's docstring points to: a production trusted-seed list (or a
     whole TLD whitelist) is itself a table of millions of rows, which
     must never ride the query plan as a literal.  One broadcast-or-hash
-    left join annotates the vertex table once, before the loop; the
+    left join annotates the vertex table before the loop; the
     per-superstep plan (single message shuffle, zero-job stats,
     broadcast dangling column) is byte-identical to PageRank's.
 
@@ -2266,10 +2205,7 @@ def trustrank(
     seed_ids = seeds.select(
         F.col(seeds.columns[0]).cast("long").alias(VERTEX_ID)
     ).distinct()
-    g0 = GraphFrame(
-        truncate_plan(graph.out_degrees_full()), graph.edges,
-        closed=graph.closed,
-    ) if "out_degree" not in graph.vertices.columns else graph
+    g0 = _with_out_degrees(graph)
     marked = g0.vertices.join(
         seed_ids.withColumn("__seed__", F.lit(1)), VERTEX_ID, "left"
     )
@@ -2290,7 +2226,7 @@ def trustrank(
             F.lit(0.0)
         ),
     ).drop("__seed__")
-    g = GraphFrame(truncate_plan(verts), g0.edges, closed=g0.closed)
+    g = g0.with_vertices(verts)
 
     from pregel_rs_spark.pregel import PregelContext
 
@@ -2322,14 +2258,7 @@ def trustrank(
                 F.lit(0.0),
             ),
         )
-    res = builder.build().run()
-    vrdd = getattr(g.vertices, "_ck_rdd", None)
-    if vrdd is not None:
-        try:
-            vrdd.unpersist(False)
-        except Exception:
-            pass
-    return res
+    return builder.build().run()
 
 
 def spam_mass(
@@ -2485,10 +2414,10 @@ def salsa(
     """
     from pregel_rs_spark.columns import object_
 
-    verts = graph.out_degrees_full().join(
+    verts = graph._degree_table().join(
         graph.in_degrees_full().select(VERTEX_ID, "in_degree"), VERTEX_ID
     )
-    g = GraphFrame(truncate_plan(verts), graph.edges, closed=graph.closed)
+    g = graph.with_vertices(truncate_plan(verts))
 
     null_d = F.lit(None).cast("double")
 
@@ -2525,12 +2454,7 @@ def salsa(
         res = res.withColumn(
             "auth", F.col("auth") / F.lit(float(sa))
         ).withColumn("hub", F.col("hub") / F.lit(float(sh)))
-    vrdd = getattr(g.vertices, "_ck_rdd", None)
-    if vrdd is not None:
-        try:
-            vrdd.unpersist(False)
-        except Exception:
-            pass
+    _free_checkpoint(g.vertices)
     return res
 
 
@@ -2599,14 +2523,6 @@ def maximal_independent_set(
     mis = spark.createDataFrame([], "vertex_id long")
     excluded = spark.createDataFrame([], "vertex_id long")
 
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
-
     rounds = 0
     while max_rounds is None or rounds < max_rounds:
         rounds += 1
@@ -2652,9 +2568,9 @@ def maximal_independent_set(
             )
         )
         n_left = nxt.count()
-        _free(undecided)
-        _free(winners)
-        _free(newly_excluded)
+        _free_checkpoint(undecided)
+        _free_checkpoint(winners)
+        _free_checkpoint(newly_excluded)
         undecided = nxt
         if n_left == 0:
             break
@@ -2668,7 +2584,7 @@ def maximal_independent_set(
     )
     res = truncate_plan(res)
     for df in (sym, mis, excluded, undecided):
-        _free(df)
+        _free_checkpoint(df)
     return res
 
 
@@ -2738,6 +2654,7 @@ def bowtie_classes(
         """Fixpoint max-propagation of a 0/1 seed flag along ``e``."""
         g = GraphFrame(seed_flags, e, closed=True)
         res = max_value(g, max_iterations=max_iterations)
+        g.unpersist()
         return truncate_plan(
             res.select(VERTEX_ID, (F.col("max_value") == 1).alias(out_name))
         )

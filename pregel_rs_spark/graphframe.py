@@ -13,6 +13,13 @@ Scale notes (100 TB / 10^12-doc design point):
     join unless the zero-degree-preserving variant is requested.
   * ids should be 64-bit (``F.xxhash64(url)`` upstream) so shuffles move
     fixed-width keys, never strings.
+  * the physical layout belongs to the graph, as in GraphX (Gonzalez et al.,
+    OSDI 2014: partition once, memoize degrees): on first use the graph
+    materializes its edges hash-partitioned and sorted on ``subject`` and
+    its out-degree vertex table hash-partitioned on ``vertex_id``, both at
+    ``spark.sql.shuffle.partitions``; every later Pregel run reuses them
+    until :meth:`GraphFrame.unpersist`.  Like ``DataFrame.cache`` the
+    layout is a snapshot of the inputs at first use.
 """
 
 from __future__ import annotations
@@ -20,7 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pregel_rs_spark.columns import OBJECT, SUBJECT, VERTEX_ID
+from pregel_rs_spark.columns import OBJECT, SUBJECT, VERTEX_ID, alias, edge_
+from pregel_rs_spark.pregel import (
+    _LOOP_CONF,
+    _free_checkpoint,
+    _session_conf,
+    truncate_plan,
+)
 
 
 class MissingColumnError(ValueError):
@@ -55,13 +68,48 @@ class GraphFrame:
             raise MissingColumnError.subject()
         if OBJECT not in edges.columns:
             raise MissingColumnError.object_()
-        self.vertices = vertices
-        self.edges = edges
+        self._vertices = vertices
+        self._edges = edges
         # closed-world: every edge endpoint is guaranteed present in
         # ``vertices`` (true by construction for from_edges) — lets the
         # Pregel engine drop vertex-side triplet joins whose only remaining
         # purpose would be endpoint filtering.
         self.closed = closed
+        # Materialized layouts keyed by spark.sql.shuffle.partitions.  The
+        # edge layouts are shared with every graph derived by
+        # with_vertices (same edges); the degree tables are this graph's.
+        self._edge_layouts: dict[int, DataFrame] = {}
+        self._degree_tables: dict[int, DataFrame] = {}
+
+    # Read-only, so a memoized layout can never describe other data than
+    # the graph it belongs to; derive a new graph instead.
+    @property
+    def vertices(self) -> DataFrame:
+        return self._vertices
+
+    @property
+    def edges(self) -> DataFrame:
+        return self._edges
+
+    def with_vertices(self, vertices: DataFrame) -> "GraphFrame":
+        """The same graph over a new vertex table — the same vertex ids
+        with other property columns (e.g. annotated with ranks or seeds).
+        The result shares this graph's edge layout, so a Pregel run on it
+        does not lay the edges out again."""
+        g = GraphFrame(vertices, self._edges, closed=self.closed)
+        g._edge_layouts = self._edge_layouts
+        return g
+
+    def unpersist(self) -> "GraphFrame":
+        """Free the materialized edge layouts and degree tables.  Graphs
+        derived by :meth:`with_vertices` share the edge layout, so they
+        lose it too; any of them rebuilds it on next use."""
+        for table in (*self._edge_layouts.values(),
+                      *self._degree_tables.values()):
+            _free_checkpoint(table)
+        self._edge_layouts.clear()
+        self._degree_tables.clear()
+        return self
 
     # -- constructors ---------------------------------------------------------
 
@@ -113,3 +161,48 @@ class GraphFrame:
         return self.vertices.join(counts, VERTEX_ID, "left").withColumn(
             "in_degree", F.coalesce(F.col("in_degree"), F.lit(0))
         )
+
+    # -- physical layout -----------------------------------------------------
+
+    def _edge_layout(self, prepartitioned: bool = False) -> DataFrame:
+        """The ``edge.*``-prefixed edges, hash-partitioned on
+        ``edge.subject`` at ``spark.sql.shuffle.partitions``, sorted within
+        partitions, and materialized with that partitioning and ordering
+        advertised — the Pregel triplet join's edge side, and the input
+        of an exchange-free out-degree aggregate.  Built once per
+        partition count; ``prepartitioned`` (the edges are already
+        hash-clustered on ``subject``, e.g. a bucketed scan) builds it by
+        the sort alone."""
+        spark = self._edges.sparkSession
+        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if p not in self._edge_layouts:
+            edges = self._edges.select(
+                *[F.col(c).alias(alias("edge", c)) for c in self._edges.columns]
+            )
+            key = edge_(SUBJECT)
+            if not prepartitioned:
+                edges = edges.repartition(p, key)
+            with _session_conf(spark, _LOOP_CONF):
+                self._edge_layouts[p] = truncate_plan(
+                    edges.sortWithinPartitions(key)
+                )
+        return self._edge_layouts[p]
+
+    def _degree_table(self, prepartitioned: bool = False) -> DataFrame:
+        """:meth:`out_degrees_full`, materialized and hash-partitioned on
+        ``vertex_id`` at ``spark.sql.shuffle.partitions`` — the layout
+        the Pregel state keeps, so a run starting from it never
+        re-exchanges the state.  The counts aggregate the edge layout,
+        which is already clustered on the group key: no edge exchange."""
+        spark = self._edges.sparkSession
+        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if p not in self._degree_tables:
+            counts = self._edge_layout(prepartitioned).groupBy(
+                edge_(SUBJECT).alias(VERTEX_ID)
+            ).agg(F.count(edge_(OBJECT)).alias("out_degree"))
+            table = self._vertices.join(counts, VERTEX_ID, "left").withColumn(
+                "out_degree", F.coalesce(F.col("out_degree"), F.lit(0))
+            )
+            with _session_conf(spark, _LOOP_CONF):
+                self._degree_tables[p] = truncate_plan(table)
+        return self._degree_tables[p]

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pregel_rs_spark.columns import OBJECT, SUBJECT
-from pregel_rs_spark.pregel import truncate_plan
+from pregel_rs_spark.pregel import _free_checkpoint, truncate_plan
 
 
 def resolve_redirects(
@@ -104,12 +104,7 @@ def resolve_redirects(
         # .drop() returns a fresh DataFrame object: carry the checkpoint-
         # block handle over so the next round can free THIS round's blocks
         state._ck_rdd = getattr(nxt, "_ck_rdd", None)
-        prev_rdd = getattr(prev, "_ck_rdd", None)
-        if prev_rdd is not None:
-            try:
-                prev_rdd.unpersist(False)
-            except Exception:
-                pass
+        _free_checkpoint(prev)
         if n_active == 0:
             break
 

@@ -97,6 +97,14 @@ class CheckpointStore:
         }
         self._write_manifest(superstep, payload)
 
+    def _mark_final(self, superstep: int) -> None:
+        """Re-publish an already-written superstep's manifest as the run's
+        final checkpoint — the state table is not rewritten."""
+        with open(self._manifest_path(superstep)) as f:
+            payload = json.load(f)
+        payload["final"] = True
+        self._write_manifest(superstep, payload)
+
     def latest(self) -> Optional[tuple[int, DataFrame]]:
         """Newest complete checkpoint as (superstep, state DataFrame);
         validates config hash and row counts against the manifest."""

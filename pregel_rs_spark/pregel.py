@@ -31,8 +31,11 @@ Deliberate divergences (documented in SURVEY §5.3):
   * multi-column state via ``with_state_column`` (reference supports one).
 
 Scale design (10^12-doc / 100 TB):
-  * edges are repartitioned by ``subject`` once and persisted — superstep
-    join #1 reuses that partitioning every iteration (no edge re-shuffle).
+  * edges are laid out once per GraphFrame, not per run: hash-partitioned
+    on ``subject`` at ``spark.sql.shuffle.partitions``, sorted within
+    partitions and materialized (``GraphFrame._edge_layout``), then reused
+    by every superstep join and every later run on the same graph until
+    ``GraphFrame.unpersist()`` (no edge re-shuffle per iteration or run).
   * message aggregation relies on Spark's map-side partial aggregation
     (hub receivers collapse to ≤ numPartitions partial rows before the
     shuffle); an explicit salted two-phase path is available via
@@ -49,13 +52,15 @@ Scale design (10^12-doc / 100 TB):
 from __future__ import annotations
 
 import inspect
+import math
 import os
 import sys
 import time
 import warnings
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import Callable, Optional, Union
+from typing import TYPE_CHECKING, Callable, Iterator, Optional, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -282,6 +287,45 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
 _TRUNCATE_FALLBACK_WARNED = False
 
 
+def _free_checkpoint(df: DataFrame) -> None:
+    """Unpersist the in-memory RDD behind a ``truncate_plan`` frame (no-op
+    for plain frames) — frees superseded state eagerly instead of waiting
+    for the JVM GC / ContextCleaner."""
+    rdd = getattr(df, "_ck_rdd", None)
+    if rdd is not None:
+        try:
+            rdd.unpersist(False)
+        except Exception:
+            pass
+
+
+# The superstep loop's join strategy (see Pregel._run_locked): every join is
+# co-partitioned, so AQE re-planning and broadcasts can only cost.  Graph
+# layouts are built under the same settings so they come out
+# hash-partitioned at exactly ``spark.sql.shuffle.partitions``.
+_LOOP_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
+@contextmanager
+def _session_conf(spark, settings: dict[str, str]) -> Iterator[None]:
+    """Set session SQL configs for the block; restore (or unset) the
+    caller's values on every exit path, exceptions included."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is not None:
+                spark.conf.set(k, v)
+            else:
+                spark.conf.unset(k)
+
+
 class MessageReceiver(Enum):
     """Who receives a message generated on a triplet (pregel.rs:156-171)."""
 
@@ -413,10 +457,11 @@ class Pregel:
     # divergence SURVEY §5.3).
     first_send_only: bool = False
     # edges already arrive hash-clustered on ``subject`` (e.g. a bucketed
-    # table scan — sources/bucketed.py): skip the loop's one-time
-    # repartition so the 100 TB edge table is never shuffled at job start
-    # at all.  Safe either way: if the claim is wrong, the superstep join
-    # plans its own Exchange (slower, never incorrect).
+    # table scan — sources/bucketed.py): if the graph's edge layout is not
+    # built yet, build it by a within-partition sort only, so the 100 TB
+    # edge table is never shuffled at all.  Safe either way: if the claim
+    # is wrong, the superstep join plans its own Exchange (slower, never
+    # incorrect).
     edges_prepartitioned: bool = False
     metrics: list[SuperstepMetrics] = field(default_factory=list)
 
@@ -448,21 +493,27 @@ class Pregel:
                 "run it on spark.newSession() instead"
             )
         _ACTIVE_LOOP_SESSIONS.add(sess_key)
-        # outer snapshot/restore also covers exceptions thrown during plan
-        # PREP (e.g. a payload that fails Catalyst analysis) — those happen
-        # before the loop's own try/finally is entered
-        scoped = ("spark.sql.adaptive.enabled",
-                  "spark.sql.autoBroadcastJoinThreshold")
-        prev = {k: spark.conf.get(k, None) for k in scoped}
+        # The scope also covers exceptions thrown during plan PREP (e.g. a
+        # payload that fails Catalyst analysis).  Join strategy inside the
+        # loop: every join is already co-partitioned (the graph's sorted
+        # edge layout; state partitioning preserved through the checkpoint
+        # rewrap; aggregated messages come out of the groupBy
+        # hash-partitioned) — so a broadcast join can never save a shuffle
+        # here, it only adds a driver-side collect+broadcast of a join side
+        # each superstep.  Catalyst's row-count estimates for the
+        # aggregated-message side are unreliable enough that it DID pick
+        # broadcast at 120M-edge scale (6M-row broadcast per superstep, ~5×
+        # superstep blowup) — so broadcasts are disabled for the loop and
+        # restored after.  Forcing shuffled-hash was likewise tried and
+        # rejected (multi-million-row hash build per superstep + JIT
+        # churn); plain sort-merge over the pre-sorted sides wins.
+        conf = dict(_LOOP_CONF)
+        conf["spark.sql.adaptive.enabled"] = str(self.adaptive).lower()
         try:
-            return self._run_locked(resume)
+            with _session_conf(spark, conf):
+                return self._run_locked(resume)
         finally:
             _ACTIVE_LOOP_SESSIONS.discard(sess_key)
-            for k, v in prev.items():
-                if v is not None:
-                    spark.conf.set(k, v)
-                else:
-                    spark.conf.unset(k)
 
     def _run_locked(self, resume: bool) -> DataFrame:
         vertices = self.graph.vertices
@@ -472,41 +523,14 @@ class Pregel:
         # exchange); multi-executor runs re-exchange state each superstep
         # instead of remote-fetching checkpoint blocks — see truncate_plan.
         single_jvm = spark.sparkContext.master.startswith("local[")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", str(self.adaptive).lower())
-        # Join strategy inside the loop: every join is already co-partitioned
-        # (pre-shuffled sorted edge cache; state partitioning preserved
-        # through the checkpoint rewrap; aggregated messages come out of the
-        # groupBy hash-partitioned) — so a broadcast join can never save a
-        # shuffle here, it only adds a driver-side collect+broadcast of a
-        # join side each superstep.  Catalyst's row-count estimates for the
-        # aggregated-message side are unreliable enough that it DID pick
-        # broadcast at 120M-edge scale (6M-row broadcast per superstep,
-        # ~5× superstep blowup) — so broadcasts are disabled for the loop
-        # and restored after.  Forcing shuffled-hash was likewise tried and
-        # rejected (multi-million-row hash build per superstep + JIT churn);
-        # plain sort-merge over the pre-sorted sides wins.
-        prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
-        # Edges: prefix once, repartition by the join key once, pre-sort
-        # within partitions (sort-merge join then skips re-sorting the edge
-        # side every superstep), persist — no edge re-shuffle per iteration.
-        edges = self.graph.edges.select(
-            *[F.col(c).alias(alias("edge", c)) for c in self.graph.edges.columns]
-        )
-        edge_key = _q(alias("edge", SUBJECT))
-        if self.edges_prepartitioned:
-            # caller guarantees hash clustering on subject (bucketed scan):
-            # only the exchange-free within-partition sort remains.
-            edges = edges.sortWithinPartitions(edge_key).persist()
-        else:
-            edges = (
-                edges.repartition(edge_key)
-                .sortWithinPartitions(edge_key)
-                .persist()
-            )
-        edges.count()  # materialize the cache now, not inside superstep 1
+        # Edges: the graph's memoized layout — ``edge.*``-prefixed,
+        # hash-partitioned by the join key, sorted within partitions (the
+        # sort-merge join then skips re-sorting the edge side every
+        # superstep) and materialized.  Built on the graph's first run and
+        # reused by every later run on it: no edge shuffle per iteration,
+        # and none per run once the graph is laid out.
+        edges = self.graph._edge_layout(self.edges_prepartitioned)
 
         start_step = 1
         current = None
@@ -584,6 +608,7 @@ class Pregel:
             }
 
         iteration = start_step
+        last_written = None  # superstep of the last interval checkpoint
         try:
             while iteration <= self.max_iterations:
                 t0 = time.monotonic()
@@ -597,7 +622,9 @@ class Pregel:
                 # subject/object triplet sides NOR the apply join re-shuffle
                 # the state; with AQE off the partition count is stable and
                 # the aggregated-message side lines up too.  Superstep 1
-                # pays one bootstrap shuffle (source partitioning unknown).
+                # pays one bootstrap shuffle unless the vertex table already
+                # came hash-partitioned at the shuffle width (a graph's
+                # degree table, GraphFrame._degree_table).
                 base = current
 
                 # -- triplets: subject ⋈ edge ⋈ object (pregel.rs:791-808) --
@@ -871,12 +898,7 @@ class Pregel:
                 current = nxt.drop(*prev_names.values(), "__msg_cnt__")
                 current._ck_rdd = getattr(nxt, "_ck_rdd", None)
                 state_cols = current.columns
-                prev_rdd = getattr(prev, "_ck_rdd", None)
-                if prev_rdd is not None:
-                    try:
-                        prev_rdd.unpersist(False)
-                    except Exception:
-                        pass
+                _free_checkpoint(prev)
 
                 self.metrics.append(
                     SuperstepMetrics(
@@ -896,11 +918,21 @@ class Pregel:
                         file=sys.stderr,
                     )
 
+                if self.tolerance is not None and delta is not None \
+                        and not math.isfinite(delta):
+                    # NaN <= tol is False: without this the run would
+                    # silently spin on to max_iterations
+                    raise ValueError(
+                        f"superstep {iteration}: convergence delta is "
+                        f"{delta}; v_prog produced a non-finite "
+                        f"'{vcol}' value"
+                    )
                 if self.checkpoint_store is not None and self.checkpoint_interval \
                         and iteration % self.checkpoint_interval == 0:
                     self.checkpoint_store.write(
                         iteration, current, self.metrics[-1]
                     )
+                    last_written = iteration
 
                 if self.tolerance is not None and delta is not None \
                         and delta <= self.tolerance:
@@ -908,16 +940,20 @@ class Pregel:
                 if self.check_exact and changed == 0:
                     break
                 iteration += 1
-        finally:
-            edges.unpersist()
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
+        except BaseException:
+            _free_checkpoint(current)
+            raise
 
         if self.checkpoint_store is not None:
-            self.checkpoint_store.write(
-                min(iteration, self.max_iterations), current,
-                self.metrics[-1] if self.metrics else None, final=True,
-            )
+            final_step = min(iteration, self.max_iterations)
+            if final_step == last_written:
+                # the interval rule already wrote this superstep's state
+                self.checkpoint_store._mark_final(final_step)
+            else:
+                self.checkpoint_store.write(
+                    final_step, current,
+                    self.metrics[-1] if self.metrics else None, final=True,
+                )
         return current
 
 
@@ -997,18 +1033,20 @@ class PregelBuilder:
 
     def with_prepartitioned_edges(self, on: bool = True) -> "PregelBuilder":
         """Declare the edge table already hash-clustered on ``subject``
-        (a bucketed-table scan, sources/bucketed.py) so the loop skips its
-        one-time edge repartition — at web scale that is the difference
-        between shuffling the full edge table at every job start/resume
-        and never shuffling it at all (the layout was paid once, at write
-        time).  If the declaration is wrong the superstep join inserts its
-        own Exchange: slower, never incorrect.
+        (a bucketed-table scan, sources/bucketed.py) so the graph's edge
+        layout, when this run is the one that first builds it, is made by a
+        within-partition sort with no exchange — at web scale that is the
+        difference between shuffling the full edge table once per graph and
+        never shuffling it at all (the layout was paid once, at write
+        time).  A layout the graph already holds is reused as it is.  If
+        the declaration is wrong the superstep join inserts its own
+        Exchange: slower, never incorrect.
 
         For the in-loop triplet joins to stay exchange-free the bucket
         count must equal ``spark.sql.shuffle.partitions`` (the state side
         is hash-clustered at that width); with a different count Catalyst
         re-exchanges one side per superstep — correct, but it forfeits
-        the benefit beyond the skipped startup shuffle."""
+        the benefit beyond the skipped layout shuffle."""
         self._p.edges_prepartitioned = on
         return self
 
@@ -1064,5 +1102,5 @@ class PregelBuilder:
         return self._p
 
 
-# late import for type reference only
-from pregel_rs_spark.graphframe import GraphFrame  # noqa: E402  (cycle-free)
+if TYPE_CHECKING:
+    from pregel_rs_spark.graphframe import GraphFrame

@@ -3,15 +3,21 @@
 At 100 TB the edge table is the fact table every job touches, and almost
 every operator keys it the same way (``subject``): degree aggregation,
 the Pregel triplet join, triangle orientation, domain rollups.  A plain
-parquet scan makes each of those jobs pay a full-table Exchange to get
-hash clustering on the key; ``repartition().persist()`` amortizes it only
-WITHIN one job.  Spark's native bucketing moves that shuffle to write
-time: ``bucketBy(n, key)`` fixes file-to-bucket assignment by
-``hash(key) % n``, the catalog remembers it, and any later scan exposes
-``HashPartitioning(key, n)`` to the planner — so a ``groupBy(key)`` or a
+parquet scan makes the first of those jobs pay a full-table Exchange to
+get hash clustering on the key.  A ``GraphFrame`` lays its edges out once
+and reuses that layout for every Pregel run on the same graph object
+(``GraphFrame._edge_layout``), but the layout lives in executor memory:
+it is paid again by every new session, every new ``GraphFrame`` over the
+same table, and every resume in a fresh process.  Spark's native
+bucketing moves that shuffle to write time: ``bucketBy(n, key)`` fixes
+file-to-bucket assignment by ``hash(key) % n``, the catalog remembers
+it, and any later scan exposes ``HashPartitioning(key, n)`` to the
+planner — so a ``groupBy(key)`` or a
 join against an identically-bucketed table plans with ZERO Exchange, in
 every job, forever, including the fresh process a checkpoint resume
-starts in (tests/test_bucketed.py pins both plan shapes).
+starts in (tests/test_bucketed.py pins both plan shapes).  With
+``with_prepartitioned_edges`` the graph's edge layout is then built from
+the bucketed scan by a within-partition sort alone.
 
 This is deliberately the reference's missing storage layer re-thought for
 Spark (weso/pregel-rs holds edges in a transient in-memory Polars frame —

@@ -28,12 +28,18 @@ def test_checkpoint_manifests(spark, tmp_path):
     e = spark.createDataFrame(EDGES_A, "subject long, object long")
     g = GraphFrame.from_edges(e)
     store = CheckpointStore(spark, str(tmp_path / "ck"), config_token="t1")
+    written = []
+    write = store.tables.write
+    store.tables.write = lambda name, df: (written.append(name), write(name, df))
     p = build(g, store)
     p.run()
     ms = store.manifests()
-    # every=2 over 6 supersteps → checkpoints at 2,4,6 + final
+    # every=2 over 6 supersteps → checkpoints at 2,4,6; the final superstep
+    # is one of them, so its manifest is re-published, not its table
     steps = [m["superstep"] for m in ms]
-    assert 2 in steps and 4 in steps and 6 in steps
+    assert steps == [2, 4, 6]
+    assert written == ["state_00002", "state_00004", "state_00006"]
+    assert [m["final"] for m in ms] == [False, False, True]
     last = ms[-1]
     assert last["final"] is True
     assert last["rows"] == 5

@@ -604,3 +604,25 @@ def test_active_filter_closure_and_closed_world_pruning(spark, graph_b):
     got = {r.vertex_id: r.aux for r in p.run().collect()}
     # superstep 1: active senders are vertex_id < 2 → edges 0→1, 1→0, 1→3
     assert got == {0: 1, 1: 1, 2: 0, 3: 1}
+
+
+def test_non_finite_delta_fails_loudly(spark, graph_b):
+    """NaN <= tol is False, so a v_prog that yields NaN used to run on
+    silently to max_iterations.  The run must stop at the first such
+    superstep with an error naming it, and release the session configs."""
+    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    engine = (
+        PregelBuilder(graph_b)
+        .max_iterations(5)
+        .with_vertex_column("x")
+        .initial_message(F.lit(1.0))
+        .send_messages(MessageReceiver.OBJECT, subject("x"))
+        .aggregate_messages(F.sum(msg()))
+        .v_prog(F.lit(float("nan")))
+        .with_tolerance(1e-6)
+        .build()
+    )
+    with pytest.raises(ValueError, match="superstep 1: convergence delta is nan"):
+        engine.run()
+    assert [m.superstep for m in engine.metrics] == [1]
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
