@@ -276,69 +276,67 @@ def connected_components_star(
       * small-star: each vertex attaches its smaller-or-equal neighbours
         (and itself) to that minimum.
 
-    Per round: 2 groupBy + 2 equi-joins + a distinct — all shuffle on
-    vertex ids, no driver-side data.  Convergence is detected by an O(1)
+    Per round, each shuffling on vertex ids: the neighbourhood-min
+    aggregate, the join back to it, the small-star window on ``x`` and a
+    distinct — no driver-side data.  Convergence is detected by an O(1)
     (count, bit_xor of row hashes) signature of the edge set — one tiny
     action per round, O(log n) rounds total vs O(diameter) supersteps for
     min-label (a 10^8-long chain needs ~27 rounds here, 10^8 there).
 
     Returns ``(vertex_id, …props, component)`` — identical output contract
-    and values (component = min vertex id) as method="label".
+    and values (component = min vertex id) as method="label"; the lazy
+    result reads the graph's memoized vertex table until graph.unpersist().
     """
-    # canonical undirected pairs stored as (x, c) with c < x
-    edges = (
-        graph.edges.select(
-            F.greatest(SUBJECT, OBJECT).alias("x"),
-            F.least(SUBJECT, OBJECT).alias("c"),
-        )
-        .filter(F.col("x") != F.col("c"))
-        .distinct()
-    )
-    E = truncate_plan(edges)
+    if max_iterations < 1:
+        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
+    from pyspark.sql.window import Window
+
+    # round 1 reads the edge layout as is (large-star symmetrizes its input
+    # and ignores repeats); later rounds' edges are oriented x > c
+    E = graph._edge_layout().select(
+        edge_(SUBJECT).alias("x"), edge_(OBJECT).alias("c")
+    ).filter(F.col("x") != F.col("c"))
     prev_sig = None
-    rounds = 0
-    while rounds < max_iterations:
-        rounds += 1
-        # -- large-star: neighbourhood over BOTH directions --------------
-        d = E.select(F.col("x").alias("u"), F.col("c").alias("v")).unionAll(
-            E.select(F.col("c").alias("u"), F.col("x").alias("v"))
-        )
-        mins = d.groupBy("u").agg(F.min("v").alias("mv"))
-        mins = mins.select("u", F.least(F.col("mv"), F.col("u")).alias("m"))
-        # attach strictly-larger neighbours v to m(u); m ≤ u < v keeps the
-        # (x, c) orientation invariant
-        large = (
-            d.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("x"), F.col("m").alias("c"))
-            .distinct()
-        )
-        # -- small-star: already oriented x > c --------------------------
-        mins2 = large.groupBy("x").agg(F.min("c").alias("m"))
-        small = (
-            large.join(mins2, "x")
-            .select(F.col("c").alias("nx"), F.col("m").alias("nc"))
-            .unionAll(
-                mins2.select(F.col("x").alias("nx"), F.col("m").alias("nc"))
+    try:
+        for rounds in range(1, max_iterations + 1):
+            # -- large-star: neighbourhood over BOTH directions ----------
+            d = E.select(F.col("x").alias("u"), F.col("c").alias("v")).unionAll(
+                E.select(F.col("c").alias("u"), F.col("x").alias("v"))
             )
-        )
-        nxt = (
-            small.filter(F.col("nx") != F.col("nc"))
-            .select(F.col("nx").alias("x"), F.col("nc").alias("c"))
-            .distinct()
-        )
-        nxt = truncate_plan(nxt)
-        sig_row = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(x, c))").alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
-        prev = E
-        E = nxt
-        _free_checkpoint(prev)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+            mins = d.groupBy("u").agg(F.min("v").alias("mv"))
+            mins = mins.select("u", F.least(F.col("mv"), F.col("u")).alias("m"))
+            # attach strictly-larger neighbours v to m(u); m ≤ u < v keeps
+            # the (x, c) orientation invariant; repeats die in the distinct
+            large = (
+                d.join(mins, "u")
+                .filter(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("x"), F.col("m").alias("c"))
+            )
+            # -- small-star: x and each of its c attach to min(c) --------
+            nxt = (
+                large.withColumn("m", F.min("c").over(Window.partitionBy("x")))
+                .select(F.explode(F.array(
+                    F.struct(F.col("c").alias("x"), F.col("m").alias("c")),
+                    F.struct("x", F.col("m").alias("c")),
+                )).alias("e"))
+                .select("e.x", "e.c")
+                .filter(F.col("x") != F.col("c"))
+                .distinct()
+            )
+            nxt = truncate_plan(nxt)
+            _free_checkpoint(E)  # a no-op on round 1's view of the layout
+            E = nxt
+            sig_row = E.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.expr("bit_xor(xxhash64(x, c))").alias("h"),
+            ).collect()[0]
+            sig = (sig_row["n"], sig_row["h"])
+            if sig == prev_sig:
+                break
+            prev_sig = sig
+    except BaseException:
+        _free_checkpoint(E)
+        raise
 
     # fixpoint: every row is (vertex, component-min); vertices with no row
     # (isolated or the minimum itself) are their own component
@@ -346,7 +344,9 @@ def connected_components_star(
         F.min("c").alias("__comp__")
     )
     res = (
-        graph.vertices.join(mapping, VERTEX_ID, "left")
+        graph._degree_table()
+        .select(*graph.vertices.columns)
+        .join(mapping, VERTEX_ID, "left")
         .withColumn(
             "component", F.coalesce(F.col("__comp__"), F.col(VERTEX_ID))
         )

@@ -193,16 +193,23 @@ class GraphFrame:
         ``vertex_id`` at ``spark.sql.shuffle.partitions`` — the layout
         the Pregel state keeps, so a run starting from it never
         re-exchanges the state.  The counts aggregate the edge layout,
-        which is already clustered on the group key: no edge exchange."""
+        which is already clustered on the group key: no edge exchange.
+        A vertex table that already carries ``out_degree`` keeps its own
+        column, so the table holds every vertex column unchanged: it is
+        also the graph's memoized vertex table."""
         spark = self._edges.sparkSession
         p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         if p not in self._degree_tables:
-            counts = self._edge_layout(prepartitioned).groupBy(
-                edge_(SUBJECT).alias(VERTEX_ID)
-            ).agg(F.count(edge_(OBJECT)).alias("out_degree"))
-            table = self._vertices.join(counts, VERTEX_ID, "left").withColumn(
-                "out_degree", F.coalesce(F.col("out_degree"), F.lit(0))
-            )
+            table = self._vertices
+            if "out_degree" not in table.columns:
+                counts = self._edge_layout(prepartitioned).groupBy(
+                    edge_(SUBJECT).alias(VERTEX_ID)
+                ).agg(F.count(edge_(OBJECT)).alias("out_degree"))
+                table = table.join(counts, VERTEX_ID, "left").withColumn(
+                    "out_degree", F.coalesce(F.col("out_degree"), F.lit(0))
+                )
+            # a no-op over the join, whose output is laid out so already
+            table = table.repartition(p, VERTEX_ID)
             with _session_conf(spark, _LOOP_CONF):
                 self._degree_tables[p] = truncate_plan(table)
         return self._degree_tables[p]

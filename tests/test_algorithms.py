@@ -330,6 +330,59 @@ def test_connected_components_star_isolated_and_random(spark):
     assert star[60] == 60
 
 
+# (edges, vertex table or None for from_edges, expected output rows)
+STAR_EDGE_CASES = {
+    "self_loops": (
+        [(1, 1), (1, 2), (3, 3)], None, [(1, 1), (2, 1), (3, 3)],
+    ),
+    "reciprocal_and_repeated": (
+        [(1, 2), (2, 1), (1, 2), (3, 2), (5, 4), (4, 5)], None,
+        [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)],
+    ),
+    "isolated_vertices": (
+        [(2, 3)], ([(i,) for i in range(1, 6)], "vertex_id long"),
+        [(1, 1), (2, 2), (3, 2), (4, 4), (5, 5)],
+    ),
+    "vertex_properties": (
+        [(3, 2), (2, 1), (4, 4)],
+        ([(i, f"v{i}") for i in range(1, 6)], "vertex_id long, name string"),
+        [(1, "v1", 1), (2, "v2", 1), (3, "v3", 1), (4, "v4", 4), (5, "v5", 5)],
+    ),
+    "vertex_out_degree_column": (
+        [(3, 2), (2, 1), (5, 4)],
+        ([(i, 10 * i) for i in range(1, 6)], "vertex_id long, out_degree long"),
+        [(1, 10, 1), (2, 20, 1), (3, 30, 1), (4, 40, 4), (5, 50, 4)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(STAR_EDGE_CASES))
+def test_connected_components_star_edge_cases(spark, case):
+    """star == label == expected, whole rows: vertex property columns
+    (a vertex table's own ``out_degree`` included) survive unchanged, and
+    no ``out_degree`` leaks from the graph's degree table."""
+    edges, vertices, expected = STAR_EDGE_CASES[case]
+    e = spark.createDataFrame(edges, "subject long, object long")
+    g = (GraphFrame.from_edges(e) if vertices is None
+         else GraphFrame(spark.createDataFrame(*vertices), e))
+    star = connected_components(g, method="star")
+    label = connected_components(g)
+    assert star.columns == label.columns == [*g.vertices.columns, "component"]
+    rows = [sorted(map(tuple, r.collect())) for r in (star, label)]
+    assert rows[0] == rows[1] == expected
+    g.unpersist()
+
+
+def test_connected_components_star_rejects_no_rounds(spark):
+    e = spark.createDataFrame(EDGES_C, "subject long, object long")
+    g = GraphFrame.from_edges(e)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_iterations"):
+            connected_components_star(g, max_iterations=bad)
+    with pytest.raises(ValueError, match="max_iterations"):
+        connected_components(g, max_iterations=0, method="star")
+
+
 def test_label_propagation(spark):
     e = spark.createDataFrame(EDGES_C, "subject long, object long")
     res = label_propagation(GraphFrame.from_edges(e), max_iterations=5)

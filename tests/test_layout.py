@@ -1,14 +1,19 @@
 """The graph's physical layout: the ``subject``-partitioned edge table and
 the out-degree vertex table are built once per GraphFrame (per
-``spark.sql.shuffle.partitions``) and reused by every Pregel run on it,
-until ``GraphFrame.unpersist()``."""
+``spark.sql.shuffle.partitions``) and reused by every Pregel run and
+star connected-components call on it, until ``GraphFrame.unpersist()``."""
+
+import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from pregel_rs_spark import GraphFrame
+from pregel_rs_spark import algorithms as algorithms_mod
 from pregel_rs_spark import graphframe as graphframe_mod
-from pregel_rs_spark.algorithms import pagerank, spam_mass
+from pregel_rs_spark.algorithms import connected_components, pagerank, spam_mass
+from pregel_rs_spark.columns import OBJECT, SUBJECT, edge_
 from pregel_rs_spark.pregel import _free_checkpoint
 
 HUB_FAN_IN = 600
@@ -47,14 +52,21 @@ def _shuffle_records(spark, group: str) -> list[int]:
     return records
 
 
-def _ranks(spark, graph, group: str, **kw) -> dict:
+def _in_group(spark, group: str, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        res = pagerank(graph, **kw)
-        return {r.vertex_id: r.rank for r in res.select("vertex_id", "rank").collect()}
+        return fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _ranks(spark, graph, group: str, **kw) -> dict:
+    def run():
+        res = pagerank(graph, **kw)
+        return {r.vertex_id: r.rank for r in res.select("vertex_id", "rank").collect()}
+
+    return _in_group(spark, group, run)
 
 
 def _persistent_rdds(spark) -> set[int]:
@@ -142,3 +154,89 @@ def test_vertices_and_edges_are_read_only(spark, star):
     ranked = star.with_vertices(star.vertices.withColumn("x", F.lit(1)))
     assert ranked.closed and ranked.edges is star.edges
     assert ranked._edge_layouts is star._edge_layouts
+
+
+@pytest.fixture
+def forest(spark):
+    """Four 60-vertex paths over shuffled ids, each with random chords:
+    301 edges, four components, five star rounds."""
+    rng = random.Random(5)
+    ids = list(range(1, 241))
+    rng.shuffle(ids)
+    blocks = [ids[i:i + 60] for i in range(0, 240, 60)]
+    edges = {(b[i], b[i + 1]) for b in blocks for i in range(59)}
+    while len(edges) < 301:
+        edges.add(tuple(rng.sample(rng.choice(blocks), 2)))
+    g = GraphFrame.from_edges(
+        spark.createDataFrame(sorted(edges), "subject long, object long")
+    )
+    yield g
+    g.unpersist()
+
+
+def _layout_rdds(graph) -> set[int]:
+    return {
+        int(t._ck_rdd.id())
+        for t in (*graph._edge_layouts.values(), *graph._degree_tables.values())
+    }
+
+
+def test_second_star_cc_reads_the_layout(spark, forest):
+    baseline = _persistent_rdds(spark)
+    # what from_edges' vertex distinct writes, measured on its own
+    _in_group(spark, "star-vertices", forest.vertices.collect)
+    vertex_distinct = _shuffle_records(spark, "star-vertices")
+    results, labels = [], []
+    for group in ("star-first", "star-second"):
+        def run():
+            res = connected_components(forest, method="star")
+            results.append(res)
+            return sorted(map(tuple, res.select("vertex_id", "component").collect()))
+
+        labels.append(_in_group(spark, group, run))
+    assert labels[0] == labels[1]
+    assert len({c for _, c in labels[0]}) == 4
+
+    cold = Counter(_shuffle_records(spark, "star-first"))
+    warm = Counter(_shuffle_records(spark, "star-second"))
+    # The second call repeats the first one's rounds but neither the edge
+    # repartition (one record per edge) nor the vertex distinct.  (Round 1
+    # also moves one record per edge: its join and window exchanges.)
+    assert cold - warm == Counter([301, *vertex_distinct]), (cold, warm)
+    assert not warm - cold, (cold, warm)
+    # each round's exchanges once — neighbourhood min, join, small-star
+    # window, distinct — plus its signature; then the result's mapping
+    assert sum(warm.values()) <= 5 * results[1].cc_rounds + 1, warm
+
+    layout = _layout_rdds(forest)
+    assert len(layout) == 2
+    persisted = _persistent_rdds(spark) - baseline
+    assert layout <= persisted
+    # every round's block is freed but each result's final edge table
+    own = persisted - layout
+    assert len(own) == 2, persisted
+    forest.unpersist()
+    assert _persistent_rdds(spark) - baseline == own
+
+
+def test_star_cc_frees_its_blocks_on_error(spark, forest, monkeypatch):
+    baseline = _persistent_rdds(spark)
+    calls = []
+    real = algorithms_mod.truncate_plan
+
+    def failing_in_round_2(df, *a, **kw):
+        calls.append(df.columns)
+        if len(calls) == 2:
+            raise RuntimeError("round 2 fails")
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(algorithms_mod, "truncate_plan", failing_in_round_2)
+    with pytest.raises(RuntimeError, match="round 2 fails"):
+        connected_components(forest, method="star")
+    layout = _layout_rdds(forest)
+    assert len(layout) == 1  # the edge layout; the vertex table comes last
+    assert _persistent_rdds(spark) - baseline == layout
+    # freeing round 1's view of the layout never frees the layout
+    view = forest._edge_layout().select(edge_(SUBJECT), edge_(OBJECT))
+    _free_checkpoint(view)
+    assert _persistent_rdds(spark) - baseline == layout
