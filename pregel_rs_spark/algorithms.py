@@ -34,6 +34,7 @@ from pregel_rs_spark.pregel import (
     _free_checkpoint,
     truncate_plan,
 )
+from pregel_rs_spark.unionfind import contract_partition
 
 
 def _with_out_degrees(
@@ -276,6 +277,24 @@ def connected_components_star(
       * small-star: each vertex attaches its smaller-or-equal neighbours
         (and itself) to that minimum.
 
+    Before round 1, the graph's edge layout is contracted where it lies:
+    its partitions are coalesced (no shuffle) to one per core, and one
+    ``mapInArrow`` pass runs a NumPy union-find over each one's edges
+    (:func:`pregel_rs_spark.unionfind.contract_edges`), emitting
+    ``(v, local minimum of v)`` for every vertex that is not its local
+    component's minimum — a forest of stars, oriented ``x > c``, never
+    larger than the partition's edges, and correct for any partitioning
+    (the layout's clustering on ``subject`` only makes it shrink more).
+    One task per core, not per layout partition, because each Python task
+    costs a fixed ~0.3 CPU-s of worker set-up.  The pass shuffles nothing
+    and is materialized once, as round 1's input.  Each Python worker folds
+    its partition's Arrow batches into a running forest
+    (:func:`pregel_rs_spark.unionfind.contract_partition`), so it holds
+    O(partition vertices + one batch) memory, not the partition's edges;
+    that memory is outside Spark's memory manager
+    (``spark.executor.pyspark.memory`` caps it, if set).  The workers need
+    NumPy and pyarrow on the executors.
+
     Per round, each shuffling on vertex ids: the neighbourhood-min
     aggregate, the join back to it, the small-star window on ``x`` and a
     distinct — no driver-side data.  Convergence is detected by an O(1)
@@ -291,11 +310,26 @@ def connected_components_star(
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     from pyspark.sql.window import Window
 
-    # round 1 reads the edge layout as is (large-star symmetrizes its input
-    # and ignores repeats); later rounds' edges are oriented x > c
-    E = graph._edge_layout().select(
+    # round 1 starts from the edge layout with each partition contracted to
+    # its local stars, so every round's edges are oriented x > c; the
+    # filter keeps self-loops (no connectivity, though the union-find would
+    # shrug them off) and null ids (NumPy has none) on the JVM side
+    layout = graph._edge_layout().select(
         edge_(SUBJECT).alias("x"), edge_(OBJECT).alias("c")
     ).filter(F.col("x") != F.col("c"))
+    # the result's vertex table, built before the contraction: on a call
+    # that has just built the layout, this job also refreshes the
+    # scheduler's record of where the layout's blocks are (the layout's
+    # own job left it empty), so the coalesce below groups partitions by
+    # block location on every call, not by index on the first one only
+    vertices = graph._degree_table().select(*graph.vertices.columns)
+    # one contraction task per core, not per layout partition: a Python
+    # task costs a fixed ~0.3 CPU-s of worker set-up whatever it carries,
+    # and merging co-located partitions (no shuffle) only contracts more
+    cores = layout.sparkSession.sparkContext.defaultParallelism
+    E = truncate_plan(
+        layout.coalesce(cores).mapInArrow(contract_partition, layout.schema)
+    )
     prev_sig = None
     try:
         for rounds in range(1, max_iterations + 1):
@@ -324,7 +358,7 @@ def connected_components_star(
                 .distinct()
             )
             nxt = truncate_plan(nxt)
-            _free_checkpoint(E)  # a no-op on round 1's view of the layout
+            _free_checkpoint(E)
             E = nxt
             sig_row = E.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -344,8 +378,7 @@ def connected_components_star(
         F.min("c").alias("__comp__")
     )
     res = (
-        graph._degree_table()
-        .select(*graph.vertices.columns)
+        vertices
         .join(mapping, VERTEX_ID, "left")
         .withColumn(
             "component", F.coalesce(F.col("__comp__"), F.col(VERTEX_ID))
@@ -413,6 +446,9 @@ def label_propagation(
             prev = labels
             labels = nxt
             _free_checkpoint(prev)
+    except BaseException:
+        _free_checkpoint(labels)
+        raise
     finally:
         sym.unpersist()
     return labels

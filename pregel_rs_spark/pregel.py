@@ -444,12 +444,6 @@ class Pregel:
     # All vertices still receive + run v_prog (NULL message if nothing
     # arrives) — this shrinks the send/shuffle side, not the state.
     active_filter: Optional[ExprLike] = None
-    # AQE inside the superstep loop (default off): the loop's partitioning
-    # is fixed and uniform per iteration, so adaptive re-planning only adds
-    # per-stage scheduling latency AND defeats exchange reuse; hub skew is
-    # handled by salting / map-side partial aggregation.  Opt back in for
-    # exploratory runs with wildly skewed unknown inputs.
-    adaptive: bool = False
     # reference Q1 emulation (pregel.rs:825-834): the reference aliases every
     # chained send to the same two output names, so only the FIRST send's
     # messages survive the select — opt in to reproduce that exactly.
@@ -507,10 +501,8 @@ class Pregel:
         # restored after.  Forcing shuffled-hash was likewise tried and
         # rejected (multi-million-row hash build per superstep + JIT
         # churn); plain sort-merge over the pre-sorted sides wins.
-        conf = dict(_LOOP_CONF)
-        conf["spark.sql.adaptive.enabled"] = str(self.adaptive).lower()
         try:
-            with _session_conf(spark, conf):
+            with _session_conf(spark, _LOOP_CONF):
                 return self._run_locked(resume)
         finally:
             _ACTIVE_LOOP_SESSIONS.discard(sess_key)
@@ -1023,12 +1015,6 @@ class PregelBuilder:
         pregel.rs:825-834).  Off by default — the default is union
         semantics, the documented divergence (SURVEY §5.3)."""
         self._p.first_send_only = on
-        return self
-
-    def with_adaptive(self, on: bool = True) -> "PregelBuilder":
-        """Re-enable AQE inside the superstep loop (off by default — see
-        ``Pregel.adaptive``)."""
-        self._p.adaptive = on
         return self
 
     def with_prepartitioned_edges(self, on: bool = True) -> "PregelBuilder":

@@ -373,6 +373,43 @@ def test_connected_components_star_edge_cases(spark, case):
     g.unpersist()
 
 
+@pytest.mark.parametrize("partitions", [1, 64])
+@pytest.mark.parametrize("id_type", ["int", "bigint", "string"])
+def test_connected_components_star_extremes(spark, id_type, partitions):
+    """star == label for every id type, when one partition contracts the
+    whole graph, and when most partitions of the edge layout are empty
+    (64 partitions, 30 edges)."""
+    import random
+
+    rng = random.Random(13)
+    pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(30)]
+    # string ids order differently from their numbers ("10" < "9"), and
+    # non-ASCII ones by UTF-8 bytes ("é" > "z")
+    to_id = {"int": int, "bigint": int,
+             "string": lambda i: ("é" if i % 7 == 0 else "") + str(i)}[id_type]
+    edges = [(to_id(a), to_id(b)) for a, b in pairs]
+    key = "spark.sql.shuffle.partitions"
+    p0 = spark.conf.get(key)
+    spark.conf.set(key, str(partitions))
+    try:
+        e = spark.createDataFrame(edges, f"subject {id_type}, object {id_type}")
+        g = GraphFrame.from_edges(e)
+        star = connected_components(g, method="star")
+        rows = [
+            sorted(map(tuple, r.select("vertex_id", "component").collect()))
+            for r in (star, connected_components(g))
+        ]
+        assert dict(star.dtypes)["component"] == id_type
+        g.unpersist()
+    finally:
+        spark.conf.set(key, p0)
+    assert rows[0] == rows[1]
+    assert len({c for _, c in rows[0]}) > 1
+    if partitions == 1:
+        # the contraction alone finishes the job; round 2 only confirms it
+        assert star.cc_rounds == 2
+
+
 def test_connected_components_star_rejects_no_rounds(spark):
     e = spark.createDataFrame(EDGES_C, "subject long, object long")
     g = GraphFrame.from_edges(e)
@@ -391,6 +428,29 @@ def test_label_propagation(spark):
     assert len({lab[1], lab[2], lab[3]}) == 1
     assert lab[10] == lab[11]
     assert lab[1] != lab[10]
+
+
+def test_label_propagation_frees_its_blocks_on_error(spark, monkeypatch):
+    from pregel_rs_spark import algorithms as algorithms_mod
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    baseline = persistent()
+    calls = []
+    real = algorithms_mod.truncate_plan
+
+    def failing_in_iteration_2(df, *a, **kw):
+        calls.append(df.columns)
+        if len(calls) == 3:  # the initial labels, iteration 1, iteration 2
+            raise RuntimeError("iteration 2 fails")
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(algorithms_mod, "truncate_plan", failing_in_iteration_2)
+    e = spark.createDataFrame(EDGES_C, "subject long, object long")
+    with pytest.raises(RuntimeError, match="iteration 2 fails"):
+        label_propagation(GraphFrame.from_edges(e), max_iterations=5)
+    assert persistent() <= baseline
 
 
 def test_triangle_count(spark):

@@ -110,3 +110,44 @@ def test_pagerank_matches_between_local_and_cluster(cluster_spark):
         assert abs(cluster_ranks[v] - r[idx[v]]) < 1e-6, (
             v, cluster_ranks[v], r[idx[v]]
         )
+
+
+def _component_min(edges) -> dict:
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def test_star_cc_matches_between_local_and_cluster(cluster_spark):
+    """Star CC's per-partition contraction runs in the executors' Python
+    workers, on the layout's partitions as they lie on each executor; the
+    labels must be the single-JVM ones (component = min id) — also when the
+    layout is not clustered on ``subject`` at all."""
+    import random
+
+    from pregel_rs_spark.algorithms import connected_components
+
+    rng = random.Random(11)
+    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
+    edges += [(1000 + i, 1001 + i) for i in range(40)]  # a 41-vertex chain
+    expected = _component_min(edges)
+    df = cluster_spark.createDataFrame(edges, "subject long, object long")
+    for clustered in (True, False):
+        g = GraphFrame.from_edges(df if clustered else df.repartition(3))
+        if not clustered:
+            # declared clustered, laid out round-robin: every partition
+            # holds an arbitrary slice of the edges
+            g._edge_layout(prepartitioned=True)
+        res = connected_components(g, method="star")
+        got = {r.vertex_id: r.component for r in res.collect()}
+        assert got == expected, clustered
+        g.unpersist()

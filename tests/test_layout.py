@@ -201,7 +201,8 @@ def test_second_star_cc_reads_the_layout(spark, forest):
     warm = Counter(_shuffle_records(spark, "star-second"))
     # The second call repeats the first one's rounds but neither the edge
     # repartition (one record per edge) nor the vertex distinct.  (Round 1
-    # also moves one record per edge: its join and window exchanges.)
+    # also moves one record per edge here: every part of a forest is a
+    # forest, so the contraction drops no edge.)
     assert cold - warm == Counter([301, *vertex_distinct]), (cold, warm)
     assert not warm - cold, (cold, warm)
     # each round's exchanges once — neighbourhood min, join, small-star
@@ -226,7 +227,7 @@ def test_star_cc_frees_its_blocks_on_error(spark, forest, monkeypatch):
 
     def failing_in_round_2(df, *a, **kw):
         calls.append(df.columns)
-        if len(calls) == 2:
+        if len(calls) == 3:  # the contraction, round 1, round 2
             raise RuntimeError("round 2 fails")
         return real(df, *a, **kw)
 
@@ -234,9 +235,82 @@ def test_star_cc_frees_its_blocks_on_error(spark, forest, monkeypatch):
     with pytest.raises(RuntimeError, match="round 2 fails"):
         connected_components(forest, method="star")
     layout = _layout_rdds(forest)
-    assert len(layout) == 1  # the edge layout; the vertex table comes last
+    # the edge layout and the vertex table, which star CC builds before
+    # its contraction; both are the graph's, freed by graph.unpersist()
+    assert len(layout) == 2
     assert _persistent_rdds(spark) - baseline == layout
     # freeing round 1's view of the layout never frees the layout
     view = forest._edge_layout().select(edge_(SUBJECT), edge_(OBJECT))
     _free_checkpoint(view)
     assert _persistent_rdds(spark) - baseline == layout
+
+
+@pytest.fixture
+def crawl(spark):
+    """Three 40-page sites over shuffled ids, each page linking to 15 pages
+    of its own site: 1,800 edges on 120 vertices, so each partition of the
+    edge layout holds more edges than vertices, as a web crawl's does.  (On a
+    forest, such as ``forest`` above, no contraction can drop an edge.)"""
+    rng = random.Random(7)
+    ids = list(range(1, 121))
+    rng.shuffle(ids)
+    sites = [ids[i:i + 40] for i in range(0, 120, 40)]
+    edges = [(p, q) for site in sites for p in site
+             for q in rng.sample([q for q in site if q != p], 15)]
+    g = GraphFrame.from_edges(
+        spark.createDataFrame(edges, "subject long, object long")
+    )
+    yield g
+    g.unpersist()
+
+
+def test_star_cc_contracts_each_partition_once_per_call(spark, crawl, monkeypatch):
+    """Round 1 starts from the layout contracted partition by partition:
+    one materialized ``MapInArrow`` plan per call (left lazy, it would
+    re-run for every reader of round 1's edges), and on a warm call no
+    exchange moves one record per edge."""
+    contractions = []
+    real = algorithms_mod.truncate_plan
+
+    def recording(df, *a, **kw):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        contractions.append(plan.count("MapInArrow"))
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(algorithms_mod, "truncate_plan", recording)
+    labels = []
+    for group in ("contract-first", "contract-second"):
+        contractions.clear()
+        res = _in_group(
+            spark, group, lambda: connected_components(crawl, method="star")
+        )
+        labels.append(_in_group(spark, group, res.collect))
+        # the first block materialized is the contraction, alone; no
+        # later plan reads it as anything but that block
+        assert contractions[0] == 1 and not any(contractions[1:]), contractions
+    assert sorted(labels[0]) == sorted(labels[1])
+    assert len({r.component for r in labels[0]}) == 3
+    warm = _shuffle_records(spark, "contract-second")
+    assert warm and max(warm) < 1800, warm
+
+
+def test_star_cc_contracts_on_one_task_per_core(spark, crawl, monkeypatch):
+    """The contraction coalesces the layout's partitions to one per core
+    (each Python task has a fixed cost), whatever the partition count."""
+    cores = spark.sparkContext.defaultParallelism
+    parts = []
+    real = algorithms_mod.truncate_plan
+
+    def recording(df, *a, **kw):
+        parts.append(df.rdd.getNumPartitions())
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(algorithms_mod, "truncate_plan", recording)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(4 * cores))
+    try:
+        res = connected_components(crawl, method="star").collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert parts[0] == cores, parts
+    assert len({r.component for r in res}) == 3
