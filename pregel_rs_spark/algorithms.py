@@ -10,8 +10,9 @@ Scale notes per algorithm are inline; the common ones:
   * every algorithm works on ``(subject, object)`` edge tables of arbitrary
     size — no driver-side collection of vertices or edges, ever;
   * the only driver-side scalars are O(1) aggregates (vertex count,
-    dangling mass, convergence delta), each one Spark action per superstep,
-    executed against the in-memory checkpointed state.
+    dangling mass, convergence delta); inside a loop they are observed on
+    the round's materialization jobs (``pregel.iterate``), never an action
+    of their own.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from pregel_rs_spark.pregel import (
     MessageReceiver,
     PregelBuilder,
     _free_checkpoint,
+    iterate,
     truncate_plan,
 )
 from pregel_rs_spark.unionfind import contract_partition
@@ -298,9 +300,10 @@ def connected_components_star(
     Per round, each shuffling on vertex ids: the neighbourhood-min
     aggregate, the join back to it, the small-star window on ``x`` and a
     distinct — no driver-side data.  Convergence is detected by an O(1)
-    (count, bit_xor of row hashes) signature of the edge set — one tiny
-    action per round, O(log n) rounds total vs O(diameter) supersteps for
-    min-label (a 10^8-long chain needs ~27 rounds here, 10^8 there).
+    (count, bit_xor of row hashes) signature of the edge set, observed on
+    the round's own materialization job (no action of its own); O(log n)
+    rounds total vs O(diameter) supersteps for min-label (a 10^8-long
+    chain needs ~27 rounds here, 10^8 there).
 
     Returns ``(vertex_id, …props, component)`` — identical output contract
     and values (component = min vertex id) as method="label"; the lazy
@@ -327,50 +330,44 @@ def connected_components_star(
     # task costs a fixed ~0.3 CPU-s of worker set-up whatever it carries,
     # and merging co-located partitions (no shuffle) only contracts more
     cores = layout.sparkSession.sparkContext.defaultParallelism
-    E = truncate_plan(
-        layout.coalesce(cores).mapInArrow(contract_partition, layout.schema)
+    contracted = layout.coalesce(cores).mapInArrow(
+        contract_partition, layout.schema
     )
-    prev_sig = None
-    try:
-        for rounds in range(1, max_iterations + 1):
-            # -- large-star: neighbourhood over BOTH directions ----------
-            d = E.select(F.col("x").alias("u"), F.col("c").alias("v")).unionAll(
-                E.select(F.col("c").alias("u"), F.col("x").alias("v"))
-            )
-            mins = d.groupBy("u").agg(F.min("v").alias("mv"))
-            mins = mins.select("u", F.least(F.col("mv"), F.col("u")).alias("m"))
-            # attach strictly-larger neighbours v to m(u); m ≤ u < v keeps
-            # the (x, c) orientation invariant; repeats die in the distinct
-            large = (
-                d.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("x"), F.col("m").alias("c"))
-            )
-            # -- small-star: x and each of its c attach to min(c) --------
-            nxt = (
-                large.withColumn("m", F.min("c").over(Window.partitionBy("x")))
-                .select(F.explode(F.array(
-                    F.struct(F.col("c").alias("x"), F.col("m").alias("c")),
-                    F.struct("x", F.col("m").alias("c")),
-                )).alias("e"))
-                .select("e.x", "e.c")
-                .filter(F.col("x") != F.col("c"))
-                .distinct()
-            )
-            nxt = truncate_plan(nxt)
-            _free_checkpoint(E)
-            E = nxt
-            sig_row = E.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr("bit_xor(xxhash64(x, c))").alias("h"),
-            ).collect()[0]
-            sig = (sig_row["n"], sig_row["h"])
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-    except BaseException:
-        _free_checkpoint(E)
-        raise
+
+    def star_round(E: DataFrame, r) -> tuple[DataFrame, bool]:
+        # -- large-star: neighbourhood over BOTH directions ----------------
+        d = E.select(F.col("x").alias("u"), F.col("c").alias("v")).unionAll(
+            E.select(F.col("c").alias("u"), F.col("x").alias("v"))
+        )
+        mins = d.groupBy("u").agg(F.min("v").alias("mv"))
+        mins = mins.select("u", F.least(F.col("mv"), F.col("u")).alias("m"))
+        # attach strictly-larger neighbours v to m(u); m ≤ u < v keeps the
+        # (x, c) orientation invariant; repeats die in the distinct
+        large = (
+            d.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("x"), F.col("m").alias("c"))
+        )
+        # -- small-star: x and each of its c attach to min(c) --------------
+        nxt = (
+            large.withColumn("m", F.min("c").over(Window.partitionBy("x")))
+            .select(F.explode(F.array(
+                F.struct(F.col("c").alias("x"), F.col("m").alias("c")),
+                F.struct("x", F.col("m").alias("c")),
+            )).alias("e"))
+            .select("e.x", "e.c")
+            .filter(F.col("x") != F.col("c"))
+            .distinct()
+        )
+        # fixpoint when the edge set's (count, hash) signature repeats
+        E = r.keep(
+            nxt, n=F.count(F.lit(1)), h=F.expr("bit_xor(xxhash64(x, c))")
+        )
+        return E, r.seen == r.prev
+
+    E, rounds, _ = iterate(
+        lambda r: r.keep(contracted), star_round, max_iterations
+    )
 
     # fixpoint: every row is (vertex, component-min); vertices with no row
     # (isolated or the minimum itself) are their own component
@@ -412,46 +409,38 @@ def label_propagation(
         edges.select(F.col(OBJECT).alias(SUBJECT), F.col(SUBJECT).alias(OBJECT))
     ).distinct().repartition(F.col(SUBJECT)).persist()
 
-    labels = truncate_plan(graph.vertices.select(
-        F.col(VERTEX_ID), F.col(VERTEX_ID).alias("label")
-    ))
+    def vote(labels: DataFrame, r) -> tuple[DataFrame, bool]:
+        neigh = sym.join(
+            labels, sym[SUBJECT] == labels[VERTEX_ID], "inner"
+        ).select(F.col(OBJECT).alias("dst"), F.col("label"))
+        # self-inclusion: each vertex votes for its own current label
+        neigh = neigh.unionByName(
+            labels.select(F.col(VERTEX_ID).alias("dst"), F.col("label"))
+        )
+        counts = neigh.groupBy("dst", "label").agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+        # mode with deterministic min-label tie-break: max_by over
+        # struct(cnt, -label) — larger cnt wins, then smaller label
+        # (negated for max ordering).
+        new = counts.groupBy("dst").agg(
+            F.max_by(
+                F.col("label"), F.struct(F.col("cnt"), -F.col("label"))
+            ).alias("new_label")
+        )
+        nxt = labels.join(new, labels[VERTEX_ID] == new["dst"], "left").select(
+            F.col(VERTEX_ID),
+            F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
+        )
+        return r.keep(nxt), False
 
+    labels = graph.vertices.select(
+        F.col(VERTEX_ID), F.col(VERTEX_ID).alias("label")
+    )
     try:
-        for _ in range(max_iterations):
-            neigh = sym.join(
-                labels, sym[SUBJECT] == labels[VERTEX_ID], "inner"
-            ).select(F.col(OBJECT).alias("dst"), F.col("label"))
-            # self-inclusion: each vertex votes for its own current label
-            neigh = neigh.unionByName(
-                labels.select(F.col(VERTEX_ID).alias("dst"), F.col("label"))
-            )
-            counts = neigh.groupBy("dst", "label").agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            # mode with deterministic min-label tie-break:
-            # max_by over struct(cnt, -label) — larger cnt wins, then
-            # smaller label (negated for max ordering).
-            new = counts.groupBy("dst").agg(
-                F.max_by(
-                    F.col("label"), F.struct(F.col("cnt"), -F.col("label"))
-                ).alias("new_label")
-            )
-            nxt = labels.join(
-                new, labels[VERTEX_ID] == new["dst"], "left"
-            ).select(
-                F.col(VERTEX_ID),
-                F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-            )
-            nxt = truncate_plan(nxt)
-            prev = labels
-            labels = nxt
-            _free_checkpoint(prev)
-    except BaseException:
-        _free_checkpoint(labels)
-        raise
+        return iterate(lambda r: r.keep(labels), vote, max_iterations).state
     finally:
         sym.unpersist()
-    return labels
 
 
 def _triangles_from_undirected(und: DataFrame) -> DataFrame:
@@ -523,10 +512,7 @@ def triangle_count(graph: GraphFrame) -> DataFrame:
 
     Returns ``(vertex_id, triangles)`` for ALL vertices (0 for none).
     """
-    und = graph.edges.select(
-        F.least(SUBJECT, OBJECT).alias("a"), F.greatest(SUBJECT, OBJECT).alias("b")
-    ).filter(F.col("a") != F.col("b")).distinct()
-    tris = _triangles_from_undirected(und)
+    tris = _triangles_from_undirected(_und_simple(graph.edges))
 
     corners = (
         tris.select(F.col("u").alias(VERTEX_ID))
@@ -756,6 +742,18 @@ def sssp(
     return res.drop("changed") if frontier else res
 
 
+def _max_value_over(
+    vertices: DataFrame, edges: DataFrame, max_iterations: int
+) -> DataFrame:
+    """:func:`max_value` over a graph built for this one run, whose layout
+    is freed on every exit path."""
+    g = GraphFrame(vertices, edges, closed=True)
+    try:
+        return max_value(g, max_iterations=max_iterations)
+    finally:
+        g.unpersist()
+
+
 def strongly_connected_components(
     graph: GraphFrame,
     max_rounds: int = 50,
@@ -796,18 +794,14 @@ def strongly_connected_components(
         .filter(F.col(SUBJECT) != F.col(OBJECT))
         .distinct()
     )
-    active_v = truncate_plan(ids)
-    active_e = edges0
-    assigned = None
 
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        if active_v.limit(1).count() == 0:
-            break
+    def color_round(state, r):
+        active_v, assigned = state
+        if r.prev["n"] == 0:
+            return state, True
         # edges of the live subgraph (both endpoints unassigned)
-        e_act = (
-            active_e.join(
+        e_act = r.keep(
+            edges0.join(
                 active_v.select(F.col(VERTEX_ID).alias(SUBJECT)), SUBJECT,
                 "left_semi",
             ).join(
@@ -815,17 +809,14 @@ def strongly_connected_components(
                 "left_semi",
             )
         )
-        e_act = truncate_plan(e_act)
 
         # 1. forward coloring: color(v) = max id reaching v
-        g_fwd = GraphFrame(
-            active_v.withColumn("value", F.col(VERTEX_ID)), e_act, closed=True
+        fwd = r.keep(_max_value_over(
+            active_v.withColumn("value", F.col(VERTEX_ID)), e_act, max_iterations
+        ))
+        colors = r.keep(
+            fwd.select(VERTEX_ID, F.col("max_value").alias("color"))
         )
-        colors = max_value(g_fwd, max_iterations=max_iterations).select(
-            VERTEX_ID, F.col("max_value").alias("color")
-        )
-        colors = truncate_plan(colors)
-        g_fwd.unpersist()
 
         # 2. backward flag within color classes, from the roots
         sc = colors.select(
@@ -841,48 +832,43 @@ def strongly_connected_components(
                 F.col(OBJECT).alias(SUBJECT), F.col(SUBJECT).alias(OBJECT)
             )
         )
-        g_bwd = GraphFrame(
+        flags = r.keep(_max_value_over(
             colors.withColumn(
-                "value",
-                (F.col("color") == F.col(VERTEX_ID)).cast("long"),
+                "value", (F.col("color") == F.col(VERTEX_ID)).cast("long")
             ),
             rev,
-            closed=True,
-        )
-        flags = max_value(g_bwd, max_iterations=max_iterations)
-        g_bwd.unpersist()
+            max_iterations,
+        ))
 
         done = flags.filter(F.col("max_value") == 1).select(
             VERTEX_ID, F.col("color").alias("component")
         )
-        new_assigned = (
-            done if assigned is None else assigned.unionByName(done)
-        )
-        new_assigned = truncate_plan(new_assigned)
-        new_active = truncate_plan(
-            active_v.join(done.select(VERTEX_ID), VERTEX_ID, "left_anti")
-        )
-        for df in (active_v, colors):
-            _free_checkpoint(df)
-        if assigned is not None:
-            _free_checkpoint(assigned)
-        _free_checkpoint(e_act)
-        assigned, active_v = new_assigned, new_active
-        active_e = edges0
-    else:
+        return (
+            r.keep(
+                active_v.join(done.select(VERTEX_ID), VERTEX_ID, "left_anti"),
+                n=F.count(F.lit(1)),
+            ),
+            r.keep(done if assigned is None else assigned.unionByName(done)),
+        ), False
+
+    (active_v, assigned), _, converged = iterate(
+        lambda r: (r.keep(ids, n=F.count(F.lit(1))), None),
+        color_round,
+        max_rounds,
+    )
+    _free_checkpoint(active_v)
+    if not converged:
+        _free_checkpoint(assigned)
         raise RuntimeError(
             f"strongly_connected_components did not converge in {max_rounds} "
             "rounds — the graph has a long monotone-id SCC chain; raise "
             "max_rounds (the algorithm makes progress every round)"
         )
-
     if assigned is None:  # zero-vertex graph
         return graph.vertices.withColumn(
             "component", F.col(VERTEX_ID)
         ).limit(0)
-    res = graph.vertices.join(assigned, VERTEX_ID, "inner")
-    _free_checkpoint(active_v)
-    return res
+    return graph.vertices.join(assigned, VERTEX_ID, "inner")
 
 
 def k_core(
@@ -903,54 +889,33 @@ def k_core(
     semi-joins (induced subgraph) on the shrinking edge set — O(E_t)
     shuffle per round, no driver-side data, lineage truncated per round
     (the surviving-edge frame is checkpointed so round t+1's plan does not
-    re-derive rounds 1..t).  Rounds = peeling depth of the graph, typically
-    ≪ diameter on web graphs for small k.
+    re-derive rounds 1..t), and the fixpoint test's edge count rides that
+    materialization — no action of its own.  Rounds = peeling depth of the
+    graph, typically ≪ diameter on web graphs for small k.
 
     Returns ``(vertex_id, degree)`` — the surviving vertices with their
     degree in the (possibly partially peeled) subgraph.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    und = truncate_plan(und)
+    und = _und_simple(graph.edges)
 
-    def _degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("a").alias(VERTEX_ID))
-            .unionAll(e.select(F.col("b")))
-            .groupBy(VERTEX_ID)
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
-        rounds += 1
-        deg = _degrees(und)
-        keep = deg.filter(F.col("degree") >= k).select(VERTEX_ID)
-        nxt = (
+    def peel(und: DataFrame, r) -> tuple[DataFrame, bool]:
+        keep = _degrees(und).filter(F.col("degree") >= k).select(VERTEX_ID)
+        nxt = r.keep(
             und.join(
                 keep.select(F.col(VERTEX_ID).alias("a")), "a", "left_semi"
             ).join(
                 keep.select(F.col(VERTEX_ID).alias("b")), "b", "left_semi"
-            )
+            ),
+            n=F.count(F.lit(1)),
         )
-        nxt = truncate_plan(nxt)
-        # one O(1) scalar per round; fixpoint when no edge was peeled
-        n_prev, n_now = und.count(), nxt.count()
-        _free_checkpoint(und)
-        und = nxt
-        if n_now == n_prev:
-            break
-        if n_now == 0:
-            break
+        # fixpoint when no edge was peeled
+        return nxt, r.seen["n"] in (r.prev["n"], 0)
 
+    und = iterate(
+        lambda r: r.keep(und, n=F.count(F.lit(1))), peel, max_rounds
+    ).state
     # materialize the (small, O(V)) result BEFORE freeing the edge blocks it
     # reads — the returned frame is lazy and must not depend on them
     res = truncate_plan(_degrees(und).filter(F.col("degree") >= k))
@@ -977,15 +942,14 @@ def k_truss(
     edge can drop another edge's support, so the loop runs to fixpoint
     (or ``max_rounds`` — a bounded prefix is deterministic and is what
     the driver row verifies, mirroring ``kcore3_r2``).  Each round ends
-    in a ``truncate_plan`` materialization + an O(1) count action for the
-    fixpoint test; previous-round blocks are freed.
+    in one materialization, whose job also observes the edge count the
+    fixpoint test reads; previous-round blocks are freed.
 
     Returns the surviving canonical undirected edges with their support
     measured ON THE FINAL SUBGRAPH: ``(a, b, support)``, a < b.
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    from pregel_rs_spark.pregel import truncate_plan
 
     def _support(e: DataFrame) -> DataFrame:
         tris = _triangles_from_undirected(e)
@@ -1004,28 +968,17 @@ def k_truss(
             "support", F.coalesce(F.col("support"), F.lit(0)).cast("long")
         )
 
-    und = truncate_plan(
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
+    def peel(und: DataFrame, r) -> tuple[DataFrame, bool]:
+        nxt = r.keep(
+            _support(und).filter(F.col("support") >= k - 2).select("a", "b"),
+            n=F.count(F.lit(1)),
         )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
-        rounds += 1
-        nxt = truncate_plan(
-            _support(und)
-            .filter(F.col("support") >= k - 2)
-            .select("a", "b")
-        )
-        n_prev, n_now = und.count(), nxt.count()
-        _free_checkpoint(und)
-        und = nxt
-        if n_now == n_prev or n_now == 0:
-            break
+        return nxt, r.seen["n"] in (r.prev["n"], 0)
 
+    und = _und_simple(graph.edges)
+    und = iterate(
+        lambda r: r.keep(und, n=F.count(F.lit(1))), peel, max_rounds
+    ).state
     res = truncate_plan(_support(und))
     _free_checkpoint(und)
     return res
@@ -1242,12 +1195,14 @@ def neighborhood_sizes(graph: GraphFrame, k: int) -> DataFrame:
     reach = graph.vertices.select(
         F.col(VERTEX_ID).alias("src"), F.col(VERTEX_ID).alias("member")
     )
-    reach = truncate_plan(reach)
-    for _ in range(k):
+
+    def expand(reach: DataFrame, r) -> tuple[DataFrame, bool]:
         step = reach.join(
             edges, reach["member"] == edges[SUBJECT], "inner"
         ).select("src", F.col(OBJECT).alias("member"))
-        reach = truncate_plan(reach.unionAll(step).distinct())
+        return r.keep(reach.unionAll(step).distinct()), False
+
+    reach = iterate(lambda r: r.keep(reach), expand, k).state
     return reach.groupBy(F.col("src").alias(VERTEX_ID)).agg(
         F.count(F.lit(1)).alias("ball_size")
     )
@@ -1308,14 +1263,16 @@ def hyperball_registers(
     log2 edge cases.  Integer-exact end-to-end, so a SQL oracle can
     verify the full pipeline bit-for-bit (``portable=True``).
     """
-    sketch = None
-    for sketch in _hyperball_rounds(graph, k, log2m, portable):
-        pass
-    return sketch
+    return _hyperball(graph, k, log2m, portable, lambda *_: (None, False))[0]
 
 
-def _hyperball_rounds(graph, k, log2m, portable):
-    """Yield the (materialized) register table after round 0..k."""
+def _hyperball(graph, k, log2m, portable, fold):
+    """Run HyperBall for up to ``k`` rounds.  After the register table of
+    each round (round 0 included) is materialized, ``fold(acc, sketch, r)``
+    folds it into the caller's accumulator (None at round 0) and returns
+    ``(acc, converged)``; ``r`` is the :func:`iterate` round, so a fold
+    materializes with ``r.keep``.  Returns the final ``(sketch, acc)``; the
+    sketch's blocks are the caller's."""
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
     if not 4 <= log2m <= 16:
@@ -1326,31 +1283,32 @@ def _hyperball_rounds(graph, k, log2m, portable):
     edges = graph.edges.select(SUBJECT, OBJECT).distinct()
     h = _hyperball_hash(F.col(VERTEX_ID), portable)
     w = F.shiftrightunsigned(h, log2m)
-    sketch = graph.vertices.select(
-        F.col(VERTEX_ID),
-        h.bitwiseAND(F.lit(m - 1)).cast("long").alias("reg"),
-        F.when(w == 0, F.lit(w_bits + 1))
-        .otherwise(F.lit(w_bits + 1) - F.length(F.bin(w)))
-        .cast("long")
-        .alias("val"),
-    )
-    sketch = truncate_plan(sketch)
-    yield sketch
 
-    for _ in range(k):
+    def init(r):
+        sketch = r.keep(graph.vertices.select(
+            F.col(VERTEX_ID),
+            h.bitwiseAND(F.lit(m - 1)).cast("long").alias("reg"),
+            F.when(w == 0, F.lit(w_bits + 1))
+            .otherwise(F.lit(w_bits + 1) - F.length(F.bin(w)))
+            .cast("long")
+            .alias("val"),
+        ))
+        return sketch, fold(None, sketch, r)[0]
+
+    def union(state, r):
+        sketch, acc = state
         inc = edges.join(
             sketch, edges[OBJECT] == sketch[VERTEX_ID], "inner"
         ).select(edges[SUBJECT].alias(VERTEX_ID), "reg", "val")
-        prev = sketch
-        sketch = truncate_plan(
+        sketch = r.keep(
             sketch.unionAll(inc)
             .groupBy(VERTEX_ID, "reg")
             .agg(F.max("val").alias("val"))
         )
-        # the new table is materialized; the previous round's checkpoint
-        # blocks are dead weight (consumers only ever read the latest)
-        _free_checkpoint(prev)
-        yield sketch
+        acc, converged = fold(acc, sketch, r)
+        return (sketch, acc), converged
+
+    return iterate(init, union, k).state
 
 
 def hyperball(
@@ -1429,10 +1387,10 @@ def effective_diameter(
     pairs within ≤x hops — first reaches ``q`` of its final value.
 
     Runs HyperBall rounds, summing the per-vertex ball estimates after
-    each (ONE scalar aggregation action per round — the register table is
-    already materialized for the next round, so this adds no extra
-    shuffle), and stops when N grows by < ``rel_stop`` relative or
-    ``max_k`` is hit.  Driver state is one float per round.
+    each (the sum is observed on the estimates' materialization, one job
+    per round that reads the already-materialized register table), and
+    stops when N grows by < ``rel_stop`` relative or ``max_k`` is hit.
+    Driver state is one float per round.
 
     Returns ``{"effective_diameter": x, "rounds": r, "nf": [N(0)..N(r)]}``
     — an O(1) summary statistic, computed distributed.
@@ -1440,15 +1398,14 @@ def effective_diameter(
     if not 0 < q <= 1:
         raise ValueError(f"q must be in (0,1], got {q}")
     totals: list[float] = []
-    for sketch in _hyperball_rounds(graph, max_k, log2m, portable):
-        tot = (
-            _hll_estimates(sketch, log2m)
-            .agg(F.sum("ball_size_est").alias("s"))
-            .collect()[0]["s"]
-        )
-        totals.append(float(tot))
-        if len(totals) >= 2 and totals[-1] <= totals[-2] * (1.0 + rel_stop):
-            break
+
+    def total(acc, sketch, r):
+        # N(t) rides the materialization of the per-vertex estimates
+        r.keep(_hll_estimates(sketch, log2m), s=F.sum("ball_size_est"))
+        totals.append(float(r.seen["s"]))
+        return None, len(totals) >= 2 and totals[-1] <= totals[-2] * (1.0 + rel_stop)
+
+    _free_checkpoint(_hyperball(graph, max_k, log2m, portable, total)[0])
     target = q * totals[-1]
     x = float(len(totals) - 1)
     for t, n in enumerate(totals):
@@ -1596,21 +1553,24 @@ def harmonic_centrality(
         + [1.0 / t - 1.0 / (t + 1) for t in range(1, k)]
         + [1.0 / k]
     )
-    acc = None
-    for t, sketch in enumerate(_hyperball_rounds(g, k, log2m, portable)):
+
+    def fold(acc, sketch, r):
         est = _hll_estimates(sketch, log2m).select(
             VERTEX_ID, F.col("ball_size_est").alias("__e__")
         )
-        term = F.lit(coeffs[t]) * F.col("__e__")
+        term = F.lit(coeffs[r.n]) * F.col("__e__")
         if acc is None:
             acc = est.select(VERTEX_ID, term.alias("harmonic"))
         else:
             acc = acc.join(est, VERTEX_ID).select(
                 VERTEX_ID, (F.col("harmonic") + term).alias("harmonic")
             )
-        # materialize so the generator's freeing of the previous round's
-        # register blocks can never force a recompute of this fold step
-        acc = truncate_plan(acc)
+        # materialized, so freeing the previous round's register blocks
+        # never forces a recompute of this fold step
+        return r.keep(acc), False
+
+    sketch, acc = _hyperball(g, k, log2m, portable, fold)
+    _free_checkpoint(sketch)
     return acc
 
 
@@ -1629,19 +1589,8 @@ def clustering_coefficient(graph: GraphFrame) -> DataFrame:
     vertices (degree < 2 → coefficient 0.0).
     """
     tri = triangle_count(graph)
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias(VERTEX_ID))
-        .unionAll(und.select(F.col("b")))
-        .groupBy(VERTEX_ID)
-        .agg(F.count(F.lit(1)).alias("und_degree"))
+    deg = _degrees(_und_simple(graph.edges)).withColumnRenamed(
+        "degree", "und_degree"
     )
     d = F.col("und_degree")
     return (
@@ -1750,6 +1699,16 @@ def degree_assortativity(graph: GraphFrame) -> DataFrame:
         F.round(
             F.corr(F.col("__od__").cast("double"), F.col("__id__").cast("double")), 6
         ).alias("assortativity"),
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """``(vertex_id, degree)`` of a canonical undirected edge table."""
+    return (
+        und.select(F.col("a").alias(VERTEX_ID))
+        .unionAll(und.select(F.col("b")))
+        .groupBy(VERTEX_ID)
+        .agg(F.count(F.lit(1)).alias("degree"))
     )
 
 
@@ -1950,26 +1909,31 @@ def katz_centrality(
     e = graph.edges.select(SUBJECT, OBJECT).distinct()
     w = graph.vertices.select(VERTEX_ID, F.lit(1).cast("long").alias("w"))
     score = graph.vertices.select(VERTEX_ID, F.lit(0.0).alias("katz"))
-    beta_i = 1.0
-    for _ in range(k):
-        beta_i = beta_i * beta
+
+    def walk(state, r):
+        w, score, beta_i = state
+        beta_i *= beta
         msgs = (
             e.join(w, e[SUBJECT] == w[VERTEX_ID])
             .groupBy(F.col(OBJECT).alias(VERTEX_ID))
             .agg(F.sum("w").alias("w"))
         )
-        w = truncate_plan(
+        w = r.keep(
             graph.vertices.select(VERTEX_ID)
             .join(msgs, VERTEX_ID, "left")
             .select(VERTEX_ID, F.coalesce(F.col("w"), F.lit(0)).alias("w"))
         )
-        score = truncate_plan(
+        score = r.keep(
             score.join(w, VERTEX_ID)
             .select(
                 VERTEX_ID,
                 (F.col("katz") + F.lit(beta_i) * F.col("w")).alias("katz"),
             )
         )
+        return (w, score, beta_i), False
+
+    w, score, _ = iterate(lambda r: (w, score, 1.0), walk, k).state
+    _free_checkpoint(w)
     return score.select(VERTEX_ID, F.round("katz", 6).alias("katz"))
 
 
@@ -2038,20 +2002,22 @@ def neighborhood_function_frame(
 
     Returns ``(hop, nf)`` with k+1 rows; ``nf`` is N(hop) × 10^6.
     """
-    rows = []
-    for t, sketch in enumerate(_hyperball_rounds(graph, k, log2m, portable)):
-        rows.append(
-            truncate_plan(
-                _hll_estimates(sketch, log2m)
-                .agg(
-                    F.sum(
-                        F.round(F.col("ball_size_est") * F.lit(1000000.0), 0)
-                        .cast("long")
-                    ).alias("nf")
-                )
-                .select(F.lit(t).cast("long").alias("hop"), "nf")
+
+    def fold(rows, sketch, r):
+        row = r.keep(
+            _hll_estimates(sketch, log2m)
+            .agg(
+                F.sum(
+                    F.round(F.col("ball_size_est") * F.lit(1000000.0), 0)
+                    .cast("long")
+                ).alias("nf")
             )
+            .select(F.lit(r.n).cast("long").alias("hop"), "nf")
         )
+        return (*(rows or ()), row), False
+
+    sketch, rows = _hyperball(graph, k, log2m, portable, fold)
+    _free_checkpoint(sketch)
     out = rows[0]
     for r in rows[1:]:
         out = out.unionAll(r)
@@ -2531,8 +2497,8 @@ def maximal_independent_set(
     undecided×undecided (shrinking every round), one min-aggregation per
     vertex for the neighbor priority floor, one distinct neighbor
     expansion for exclusion — all hash-partitioned on vertex id, no
-    driver-side data beyond one O(1) count per round; lineage truncated
-    per round.
+    driver-side data beyond one O(1) count per round, observed on the
+    round's last materialization; lineage truncated per round.
 
     ``max_rounds=None`` runs to fixpoint (every vertex decided: the set
     is then independent AND maximal).  A fixed budget returns the
@@ -2542,26 +2508,14 @@ def maximal_independent_set(
     Returns ``(vertex_id, state)`` with state in
     ``('mis', 'excluded', 'undecided')``.
     """
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _und_simple(graph.edges)
     # both directions: neighbor lookups are one equi-join on "a"
     sym = und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = truncate_plan(sym)
+    spark = graph.edges.sparkSession
+    empty = spark.createDataFrame([], "vertex_id long")
 
-    undecided = truncate_plan(graph.vertices.select(VERTEX_ID))
-    spark = undecided.sparkSession
-    mis = spark.createDataFrame([], "vertex_id long")
-    excluded = spark.createDataFrame([], "vertex_id long")
-
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
-        rounds += 1
+    def luby(state, r):
+        sym, undecided, mis, excluded = state
         u_a = undecided.select(F.col(VERTEX_ID).alias("a"))
         u_b = undecided.select(F.col(VERTEX_ID).alias("b"))
         e_act = sym.join(u_a, "a", "left_semi").join(u_b, "b", "left_semi")
@@ -2574,7 +2528,7 @@ def maximal_independent_set(
                 )
             ).alias("nbr")
         )
-        winners = (
+        winners = r.keep(
             undecided.join(floor, VERTEX_ID, "left")
             .filter(
                 F.col("nbr").isNull()
@@ -2588,39 +2542,39 @@ def maximal_independent_set(
             )
             .select(VERTEX_ID)
         )
-        winners = truncate_plan(winners)
-        newly_excluded = truncate_plan(
+        newly_excluded = r.keep(
             e_act.join(
                 winners.select(F.col(VERTEX_ID).alias("a")), "a", "left_semi"
             )
             .select(F.col("b").alias(VERTEX_ID))
             .distinct()
         )
-        mis = truncate_plan(mis.unionAll(winners))
-        excluded = truncate_plan(excluded.unionAll(newly_excluded))
-        nxt = truncate_plan(
+        mis = r.keep(mis.unionAll(winners))
+        excluded = r.keep(excluded.unionAll(newly_excluded))
+        undecided = r.keep(
             undecided.join(winners, VERTEX_ID, "left_anti").join(
                 newly_excluded, VERTEX_ID, "left_anti"
-            )
+            ),
+            n=F.count(F.lit(1)),
         )
-        n_left = nxt.count()
-        _free_checkpoint(undecided)
-        _free_checkpoint(winners)
-        _free_checkpoint(newly_excluded)
-        undecided = nxt
-        if n_left == 0:
-            break
+        return (sym, undecided, mis, excluded), r.seen["n"] == 0
 
-    res = (
+    state = iterate(
+        lambda r: (
+            r.keep(sym), r.keep(graph.vertices.select(VERTEX_ID)), empty, empty
+        ),
+        luby,
+        max_rounds,
+    ).state
+    _, undecided, mis, excluded = state
+    res = truncate_plan(
         mis.select(VERTEX_ID, F.lit("mis").alias("state"))
         .unionAll(excluded.select(VERTEX_ID, F.lit("excluded").alias("state")))
         .unionAll(
             undecided.select(VERTEX_ID, F.lit("undecided").alias("state"))
         )
     )
-    res = truncate_plan(res)
-    for df in (sym, mis, excluded, undecided):
-        _free_checkpoint(df)
+    _free_checkpoint(state)
     return res
 
 
@@ -2688,9 +2642,7 @@ def bowtie_classes(
 
     def _reach(seed_flags: DataFrame, e: DataFrame, out_name: str) -> DataFrame:
         """Fixpoint max-propagation of a 0/1 seed flag along ``e``."""
-        g = GraphFrame(seed_flags, e, closed=True)
-        res = max_value(g, max_iterations=max_iterations)
-        g.unpersist()
+        res = _max_value_over(seed_flags, e, max_iterations)
         return truncate_plan(
             res.select(VERTEX_ID, (F.col("max_value") == 1).alias(out_name))
         )
@@ -2764,8 +2716,9 @@ def coreness(
     core), two hash aggs, one tiny window — all key-partitioned, no
     driver-side data; lineage truncated per round.
 
-    ``max_rounds=None`` iterates to the fixpoint (one O(1) convergence
-    action per round); a fixed ``max_rounds`` runs exactly that budget —
+    ``max_rounds=None`` iterates to the fixpoint, detected by the sum of
+    the values (they only fall), observed on each round's materialization
+    job — no action of its own; a fixed ``max_rounds`` bounds the rounds —
     the deterministic prefix the driver-gate oracle unrolls in SQL.
 
     Returns ``(vertex_id, coreness)`` for every vertex with ≥ 1 edge
@@ -2774,26 +2727,22 @@ def coreness(
     """
     from pyspark.sql.window import Window
 
-    und = truncate_plan(_und_simple(graph.edges))
-    nbrs = und.select(
-        F.col("a").alias(VERTEX_ID), F.col("b").alias("nbr")
-    ).unionAll(und.select(F.col("b"), F.col("a")))
-
-    core = truncate_plan(
-        nbrs.groupBy(VERTEX_ID).agg(
-            F.count(F.lit(1)).cast("long").alias("coreness")
-        )
-    )
+    def nbrs_of(und: DataFrame) -> DataFrame:
+        return und.select(
+            F.col("a").alias(VERTEX_ID), F.col("b").alias("nbr")
+        ).unionAll(und.select(F.col("b"), F.col("a")))
 
     w = (
         Window.partitionBy(VERTEX_ID)
         .orderBy(F.desc("val"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
-        rounds += 1
-        nbr_vals = nbrs.join(
+    # values only fall, so a round changed none iff their sum held
+    total = F.sum("coreness")
+
+    def h_index(state, r):
+        und, core = state
+        nbr_vals = nbrs_of(und).join(
             core.select(
                 F.col(VERTEX_ID).alias("nbr"), F.col("coreness").alias("val")
             ),
@@ -2807,31 +2756,26 @@ def coreness(
             .groupBy(VERTEX_ID)
             .agg(F.max(F.least(F.col("val"), F.col("cnt_ge"))).alias("h"))
         )
-        nxt = truncate_plan(
+        nxt = r.keep(
             core.join(h, VERTEX_ID).select(
                 VERTEX_ID,
                 F.least(F.col("coreness"), F.col("h"))
                 .cast("long")
                 .alias("coreness"),
-            )
+            ),
+            total=total,
         )
-        if max_rounds is None:
-            changed = (
-                nxt.join(
-                    core.select(
-                        VERTEX_ID, F.col("coreness").alias("prev")
-                    ),
-                    VERTEX_ID,
-                )
-                .filter(F.col("coreness") != F.col("prev"))
-                .count()
-            )
-            if changed == 0:
-                _free_checkpoint(core)
-                core = nxt
-                break
-        _free_checkpoint(core)
-        core = nxt
+        return (und, nxt), r.seen["total"] == r.prev["total"]
+
+    def init(r):
+        und = r.keep(_und_simple(graph.edges))
+        core = nbrs_of(und).groupBy(VERTEX_ID).agg(
+            F.count(F.lit(1)).cast("long").alias("coreness")
+        )
+        return und, r.keep(core, total=total)
+
+    und, core = iterate(init, h_index, max_rounds).state
+    _free_checkpoint(und)
     return core
 
 
@@ -2870,36 +2814,39 @@ def landmark_distances(
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     spark = graph.edges.sparkSession
     edges = graph.edges.select(SUBJECT, OBJECT).distinct()
-    settled = truncate_plan(
-        spark.createDataFrame(
-            [(int(l), int(l), 0) for l in sorted(set(landmarks))],
-            schema=f"{VERTEX_ID} long, landmark long, dist int",
-        )
+    landmarks0 = spark.createDataFrame(
+        [(int(l), int(l), 0) for l in sorted(set(landmarks))],
+        schema=f"{VERTEX_ID} long, landmark long, dist int",
     )
-    frontier = settled
-    for hop in range(1, max_hops + 1):
-        nxt = (
+
+    def hop(state, r):
+        settled, frontier = state
+        nxt = r.keep(
             frontier.join(edges, frontier[VERTEX_ID] == edges[SUBJECT])
             .select(
                 F.col(OBJECT).alias(VERTEX_ID),
                 "landmark",
-                F.lit(hop).cast("int").alias("dist"),
+                F.lit(r.n).cast("int").alias("dist"),
             )
             .distinct()
             .join(
                 settled.select(VERTEX_ID, "landmark"),
                 [VERTEX_ID, "landmark"],
                 "left_anti",
-            )
+            ),
+            n=F.count(F.lit(1)),
         )
-        nxt = truncate_plan(nxt)
-        if nxt.isEmpty():
-            _free_checkpoint(nxt)
-            break
-        new_settled = truncate_plan(settled.unionByName(nxt))
-        _free_checkpoint(settled)
+        if r.seen["n"] == 0:
+            return state, True
+        return (r.keep(settled.unionByName(nxt)), nxt), False
+
+    def init(r):
+        settled = r.keep(landmarks0)
+        return settled, settled
+
+    settled, frontier = iterate(init, hop, max_hops).state
+    if frontier is not settled:
         _free_checkpoint(frontier)
-        settled, frontier = new_settled, nxt
     return settled
 
 
@@ -2941,22 +2888,16 @@ def maximal_matching(
     """
     if max_rounds is None:
         max_rounds = 50
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .withColumn("pri", _edge_priority(F.col("a"), F.col("b")))
+    und = _und_simple(graph.edges).withColumn(
+        "pri", _edge_priority(F.col("a"), F.col("b"))
     )
-    und = truncate_plan(und)
     spark = graph.edges.sparkSession
     matched = spark.createDataFrame([], "vertex_a long, vertex_b long")
-    for _ in range(max_rounds):
-        if und.isEmpty():
-            _free_checkpoint(und)
-            return matched
+
+    def handshake(state, r):
+        und, matched = state
+        if r.prev["n"] == 0:
+            return state, True
         e = F.struct("pri", "a", "b")
         inc = und.select(F.col("a").alias("v"), e.alias("e")).unionByName(
             und.select(F.col("b").alias("v"), e.alias("e"))
@@ -2974,7 +2915,7 @@ def maximal_matching(
             .filter((F.col("ea") == e) & (F.col("eb") == e))
             .select("a", "b")
         )
-        new = truncate_plan(
+        matched = r.keep(
             matched.unionByName(
                 cand.select(
                     F.col("a").alias("vertex_a"), F.col("b").alias("vertex_b")
@@ -2986,14 +2927,21 @@ def maximal_matching(
             .unionByName(cand.select(F.col("b").alias("v")))
             .distinct()
         )
-        nxt = truncate_plan(
+        und = r.keep(
             und.join(mv.select(F.col("v").alias("a")), "a", "left_anti")
-            .join(mv.select(F.col("v").alias("b")), "b", "left_anti")
+            .join(mv.select(F.col("v").alias("b")), "b", "left_anti"),
+            n=F.count(F.lit(1)),
         )
-        _free_checkpoint(und)
+        return (und, matched), False
+
+    (und, matched), _, converged = iterate(
+        lambda r: (r.keep(und, n=F.count(F.lit(1))), matched),
+        handshake,
+        max_rounds,
+    )
+    _free_checkpoint(und)
+    if strict and not converged:
         _free_checkpoint(matched)
-        und, matched = nxt, new
-    if strict:
         raise RuntimeError(
             f"maximal_matching did not converge in {max_rounds} rounds — "
             "raise max_rounds (every round matches >= 1 edge, so this "
@@ -3027,40 +2975,48 @@ def topo_layers(
     """
     if max_layers < 1:
         raise ValueError(f"max_layers must be >= 1, got {max_layers}")
-    edges = truncate_plan(
-        graph.edges.select(SUBJECT, OBJECT)
-        .filter(F.col(SUBJECT) != F.col(OBJECT))
-        .distinct()
-    )
-    live_v = truncate_plan(graph.vertices.select(VERTEX_ID))
     spark = graph.edges.sparkSession
     out = spark.createDataFrame([], f"{VERTEX_ID} long, layer int")
-    for layer in range(max_layers):
+
+    def expose(state, r):
+        edges, live_v, out = state
         targets = edges.select(F.col(OBJECT).alias(VERTEX_ID)).distinct()
-        exposed = live_v.join(targets, VERTEX_ID, "left_anti")
-        exposed = truncate_plan(exposed)
-        if exposed.isEmpty():
-            _free_checkpoint(exposed)
-            break
-        new_out = truncate_plan(
+        exposed = r.keep(
+            live_v.join(targets, VERTEX_ID, "left_anti"), n=F.count(F.lit(1))
+        )
+        if r.seen["n"] == 0:
+            return state, True
+        out = r.keep(
             out.unionByName(
                 exposed.select(
-                    VERTEX_ID, F.lit(layer).cast("int").alias("layer")
+                    VERTEX_ID, F.lit(r.n - 1).cast("int").alias("layer")
                 )
             )
         )
-        nxt_v = truncate_plan(live_v.join(exposed, VERTEX_ID, "left_anti"))
-        nxt_e = truncate_plan(
+        live_v = r.keep(live_v.join(exposed, VERTEX_ID, "left_anti"))
+        edges = r.keep(
             edges.join(
                 exposed.select(F.col(VERTEX_ID).alias(SUBJECT)),
                 SUBJECT,
                 "left_anti",
             )
         )
-        _free_checkpoint(out)
-        _free_checkpoint(live_v)
-        _free_checkpoint(edges)
-        out, live_v, edges = new_out, nxt_v, nxt_e
+        return (edges, live_v, out), False
+
+    edges, live_v, out = iterate(
+        lambda r: (
+            r.keep(
+                graph.edges.select(SUBJECT, OBJECT)
+                .filter(F.col(SUBJECT) != F.col(OBJECT))
+                .distinct()
+            ),
+            r.keep(graph.vertices.select(VERTEX_ID)),
+            out,
+        ),
+        expose,
+        max_layers,
+    ).state
+    _free_checkpoint((edges, live_v))
     return out
 
 
@@ -3256,6 +3212,69 @@ def degree_percentiles(graph: GraphFrame, direction: str = "out") -> DataFrame:
     )
 
 
+def _bfs_levels(
+    graph: GraphFrame, sources: list[int], max_hops: int
+) -> tuple[DataFrame, list[DataFrame], list[int]]:
+    """Forward phase of :func:`betweenness` and :func:`edge_betweenness`:
+    level-synchronous BFS from ``sources`` with integer path counting on
+    the composite key ``(vertex, src)``.  Per hop one frontier×edges
+    equi-join, one integer-sum groupBy and one anti-join against the
+    settled pairs; stops early when a hop reaches no new pair.
+
+    Returns the materialized distinct edge table, the levels
+    ``(vertex_id, src, sigma)``, level 0 being the sources themselves, and
+    each level's maximum sigma (observed on its materialization).
+    """
+    spark = graph.edges.sparkSession
+    lvl0 = spark.createDataFrame(
+        [(int(s), int(s), 1) for s in sorted(set(sources))],
+        schema=f"{VERTEX_ID} long, src long, sigma long",
+    )
+
+    def hop(state, r):
+        edges, levels, settled = state
+        prev = levels[-1]
+        msgs = prev.join(edges, prev[VERTEX_ID] == edges[SUBJECT]).select(
+            F.col(OBJECT).alias(VERTEX_ID),
+            prev["src"].alias("src"),
+            prev["sigma"].alias("sigma"),
+        )
+        nxt = r.keep(
+            msgs.groupBy(VERTEX_ID, "src")
+            .agg(F.sum("sigma").alias("sigma"))
+            .join(settled, [VERTEX_ID, "src"], "left_anti"),
+            n=F.count(F.lit(1)),
+            sigma=F.max("sigma"),
+        )
+        if r.seen["n"] == 0:
+            return state, True
+        sigmas.append(r.seen["sigma"])
+        settled = r.keep(settled.unionByName(nxt.select(VERTEX_ID, "src")))
+        return (edges, (*levels, nxt), settled), False
+
+    def init(r):
+        edges = r.keep(graph.edges.select(SUBJECT, OBJECT).distinct())
+        lvl = r.keep(lvl0)
+        return edges, (lvl,), lvl.select(VERTEX_ID, "src")
+
+    sigmas = [1]
+    edges, levels, settled = iterate(init, hop, max_hops).state
+    _free_checkpoint(settled)
+    return edges, list(levels), sigmas
+
+
+def _overflow_guard(name: str, d: int, sigma: int, dmax, scale: int) -> None:
+    """Raise if a backward level's scaled-integer term
+    ``sigma * (scale + delta)`` could exceed int64."""
+    dmax = dmax or 0
+    if sigma * (scale + dmax) >= 2**63:
+        raise OverflowError(
+            f"{name} scaled-int overflow risk at level {d}: "
+            f"max sigma {sigma} * (scale + max delta {dmax}) >= 2^63; "
+            "lower scale, hops, or the source sample"
+        )
+
+
 def betweenness(
     graph: GraphFrame,
     sources: list[int],
@@ -3307,44 +3326,19 @@ def betweenness(
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
     spark = graph.edges.sparkSession
-    edges = truncate_plan(graph.edges.select(SUBJECT, OBJECT).distinct())
-    lvl0 = truncate_plan(
-        spark.createDataFrame(
-            [(int(s), int(s), 1) for s in sorted(set(sources))],
-            schema=f"{VERTEX_ID} long, src long, sigma long",
-        )
-    )
-    levels = [lvl0]
-    settled = lvl0.select(VERTEX_ID, "src")
-    # -- forward: level-synchronous BFS with integer path counting --
-    for _hop in range(1, max_hops + 1):
-        prev = levels[-1]
-        msgs = prev.join(edges, prev[VERTEX_ID] == edges[SUBJECT]).select(
-            F.col(OBJECT).alias(VERTEX_ID),
-            prev["src"].alias("src"),
-            prev["sigma"].alias("sigma"),
-        )
-        nxt = (
-            msgs.groupBy(VERTEX_ID, "src")
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(settled, [VERTEX_ID, "src"], "left_anti")
-        )
-        nxt = truncate_plan(nxt)
-        if nxt.isEmpty():
-            _free_checkpoint(nxt)
-            break
-        levels.append(nxt)
-        new_settled = truncate_plan(settled.unionByName(nxt.select(VERTEX_ID, "src")))
-        _free_checkpoint(settled)
-        settled = new_settled
-    # -- backward: scaled-integer dependency accumulation, deepest first --
+    edges, levels, sigmas = _bfs_levels(graph, sources, max_hops)
     deepest = len(levels) - 1
-    zero = F.lit(0).cast("long").alias("delta")
-    deltas = {deepest: levels[deepest].select(VERTEX_ID, "src", zero)}
-    for d in range(deepest - 1, 0, -1):
+    if deepest == 0:
+        return spark.createDataFrame(
+            [], schema=f"{VERTEX_ID} long, bc_scaled long, bc double"
+        )
+
+    # -- backward: scaled-integer dependency accumulation, deepest first --
+    def accumulate(deltas, r):
+        d = deepest - r.n
         below = (
             levels[d + 1]
-            .join(deltas[d + 1], [VERTEX_ID, "src"])
+            .join(deltas[0], [VERTEX_ID, "src"])
             .select(
                 F.col(VERTEX_ID).alias("w_id"),
                 F.col("src").alias("w_src"),
@@ -3352,15 +3346,7 @@ def betweenness(
                 F.col("delta").alias("w_delta"),
             )
         )
-        # overflow guard: the per-term product must fit int64
-        guard = levels[d].agg(F.max("sigma")).first()[0] or 0
-        dmax = below.agg(F.max("w_delta")).first()[0] or 0
-        if guard * (scale + dmax) >= 2**63:
-            raise OverflowError(
-                f"betweenness scaled-int overflow risk at level {d}: "
-                f"max sigma {guard} * (scale + max delta {dmax}) >= 2^63; "
-                "lower scale, hops, or the source sample"
-            )
+        _overflow_guard("betweenness", d, sigmas[d], r.prev.get("dmax"), scale)
         cur = levels[d]
         contrib = (
             cur.join(edges, cur[VERTEX_ID] == edges[SUBJECT])
@@ -3376,21 +3362,25 @@ def betweenness(
             .groupBy(VERTEX_ID, "src")
             .agg(F.sum("term").alias("delta"))
         )
-        delta_d = (
+        delta_d = r.keep(
             levels[d]
             .select(VERTEX_ID, "src")
             .join(contrib, [VERTEX_ID, "src"], "left")
-            .fillna({"delta": 0})
+            .fillna({"delta": 0}),
+            dmax=F.max("delta"),
         )
-        deltas[d] = truncate_plan(delta_d)
+        return (delta_d, *deltas), False
+
+    zero = F.lit(0).cast("long").alias("delta")
+    deltas = iterate(
+        lambda r: (levels[deepest].select(VERTEX_ID, "src", zero),),
+        accumulate,
+        deepest - 1,
+    ).state
     # -- fold: per-vertex sum over sources and levels --
-    if deepest == 0:
-        return spark.createDataFrame(
-            [], schema=f"{VERTEX_ID} long, bc_scaled long, bc double"
-        )
-    acc = deltas[1]
-    for d in range(2, deepest + 1):
-        acc = acc.unionByName(deltas[d])
+    acc = deltas[0]
+    for delta in deltas[1:]:
+        acc = acc.unionByName(delta)
     return acc.groupBy(VERTEX_ID).agg(
         F.sum("delta").alias("bc_scaled"),
         F.round(F.sum("delta") / F.lit(float(scale)), 6).alias("bc"),
@@ -3447,22 +3437,32 @@ def minimum_spanning_forest(
         *([F.col("weight").cast("long").alias("w")] if has_w else []),
     ).filter(F.col("a") != F.col("b"))
     if has_w:
-        und = base.groupBy("a", "b").agg(F.min("w").alias("w"))
+        und0 = base.groupBy("a", "b").agg(F.min("w").alias("w"))
     else:
-        und = base.distinct().withColumn(
+        und0 = base.distinct().withColumn(
             "w", F.lit(1) + (F.col("a") + F.col("b")) % F.lit(5)
         )
-    und = truncate_plan(und)
     spark = graph.edges.sparkSession
-    comp = truncate_plan(
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .distinct()
-        .select("v", F.col("v").alias("comp"))
-    )
     forest = spark.createDataFrame([], "vertex_a long, vertex_b long, weight long")
-    for rnd in range(max_rounds):
-        live = (
+
+    def jump(par: DataFrame, r) -> tuple[DataFrame, bool]:
+        j = (
+            par.select("c", F.col("p").alias("mid"))
+            .join(par.select(F.col("c").alias("mid"), F.col("p").alias("p2")), "mid")
+        )
+        par = r.keep(
+            j.select(
+                "c",
+                F.col("p2").alias("p"),
+                (F.col("p2") != F.col("mid")).alias("moved"),
+            ),
+            moved=F.count_if("moved"),
+        )
+        return par, r.seen["moved"] == 0
+
+    def boruvka(state, r):
+        und, comp, forest = state
+        live = r.keep(
             und.join(
                 comp.select(F.col("v").alias("a"), F.col("comp").alias("ca")), "a"
             )
@@ -3470,14 +3470,11 @@ def minimum_spanning_forest(
                 comp.select(F.col("v").alias("b"), F.col("comp").alias("cb")), "b"
             )
             .filter(F.col("ca") != F.col("cb"))
-            .select("a", "b", "w", "ca", "cb")
+            .select("a", "b", "w", "ca", "cb"),
+            n=F.count(F.lit(1)),
         )
-        live = truncate_plan(live)
-        if live.isEmpty():
-            _free_checkpoint(live)
-            _free_checkpoint(und)
-            _free_checkpoint(comp)
-            return forest
+        if r.seen["n"] == 0:
+            return state, True
         est = F.struct("w", "a", "b", "oc")
         cand = live.select(
             F.col("ca").alias("c"), "w", "a", "b", F.col("cb").alias("oc")
@@ -3497,7 +3494,7 @@ def minimum_spanning_forest(
             F.col("e.b").alias("b"),
         )
         chosen = parent0.select("w", "a", "b").distinct()
-        forest = truncate_plan(
+        forest = r.keep(
             forest.unionByName(
                 chosen.select(
                     F.col("a").alias("vertex_a"),
@@ -3512,38 +3509,36 @@ def minimum_spanning_forest(
         mutual = mm.intersect(
             mm.select(F.col("p").alias("c"), F.col("c").alias("p"))
         ).withColumn("m", F.lit(1))
-        par = truncate_plan(
-            mm.join(mutual, ["c", "p"], "left").select(
-                "c",
-                F.when(
-                    F.col("m").isNotNull() & (F.col("c") < F.col("p")), F.col("c")
-                )
-                .otherwise(F.col("p"))
-                .alias("p"),
+        par = mm.join(mutual, ["c", "p"], "left").select(
+            "c",
+            F.when(
+                F.col("m").isNotNull() & (F.col("c") < F.col("p")), F.col("c")
             )
+            .otherwise(F.col("p"))
+            .alias("p"),
         )
-        while True:
-            j = (
-                par.select("c", F.col("p").alias("mid"))
-                .join(par.select(F.col("c").alias("mid"), F.col("p").alias("p2")), "mid")
-                .select("c", F.col("mid").alias("p"), "p2")
-            )
-            if j.filter(F.col("p2") != F.col("p")).isEmpty():
-                break
-            nxt = truncate_plan(j.select("c", F.col("p2").alias("p")))
-            _free_checkpoint(par)
-            par = nxt
-        new_comp = truncate_plan(
+        par = r.keep(iterate(lambda q: q.keep(par), jump).state)
+        comp = r.keep(
             comp.join(par.select(F.col("c").alias("comp"), "p"), "comp", "left")
             .select("v", F.coalesce("p", "comp").alias("comp"))
         )
-        _free_checkpoint(comp)
-        comp = new_comp
         # intra-component edges never come back: shrink the live set
-        new_und = truncate_plan(live.select("a", "b", "w"))
-        _free_checkpoint(und)
-        und = new_und
-    if strict:
+        return (r.keep(live.select("a", "b", "w")), comp, forest), False
+
+    def init(r):
+        und = r.keep(und0)
+        comp = (
+            und.select(F.col("a").alias("v"))
+            .unionByName(und.select(F.col("b").alias("v")))
+            .distinct()
+            .select("v", F.col("v").alias("comp"))
+        )
+        return und, r.keep(comp), forest
+
+    (und, comp, forest), _, converged = iterate(init, boruvka, max_rounds)
+    _free_checkpoint((und, comp))
+    if strict and not converged:
+        _free_checkpoint(forest)
         raise RuntimeError(
             f"minimum_spanning_forest did not converge in {max_rounds} rounds; "
             "raise max_rounds (O(log n) expected) or pass strict=False for "
@@ -3592,27 +3587,14 @@ def greedy_coloring(
         max_rounds = 50
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    nbr = truncate_plan(
-        und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-            und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-        )
-    )
+    und = _und_simple(graph.edges)
     spark = graph.edges.sparkSession
-    uncol = truncate_plan(nbr.select("v").distinct())
     colored = spark.createDataFrame([], f"{VERTEX_ID} long, color int")
-    for _rnd in range(max_rounds):
-        if uncol.isEmpty():
-            _free_checkpoint(uncol)
-            _free_checkpoint(nbr)
-            return colored
+
+    def jones_plassmann(state, r):
+        nbr, uncol, colored = state
+        if r.prev["n"] == 0:
+            return state, True
         # edges whose BOTH endpoints are uncolored decide local maxima
         live = nbr.join(uncol, "v").join(
             uncol.select(F.col("v").alias("u")), "u"
@@ -3625,7 +3607,7 @@ def greedy_coloring(
             .select("v")
             .distinct()
         )
-        sel = truncate_plan(uncol.join(losers, "v", "left_anti"))
+        sel = r.keep(uncol.join(losers, "v", "left_anti"))
         # greedy mex over already-colored neighbors
         nc = (
             nbr.join(sel, "v")
@@ -3648,22 +3630,39 @@ def greedy_coloring(
             .groupBy("v")
             .agg(F.min("k").cast("int").alias("color"))
         )
-        colored = truncate_plan(
+        colored = r.keep(
             colored.unionByName(
                 mex.select(F.col("v").alias(VERTEX_ID), "color")
             )
         )
-        new_uncol = truncate_plan(uncol.join(sel, "v", "left_anti"))
-        _free_checkpoint(uncol)
-        _free_checkpoint(sel)
-        uncol = new_uncol
-    if strict:
+        uncol = r.keep(
+            uncol.join(sel, "v", "left_anti"), n=F.count(F.lit(1))
+        )
+        return (nbr, uncol, colored), False
+
+    def init(r):
+        nbr = r.keep(_symmetric(und))
+        return nbr, r.keep(nbr.select("v").distinct(), n=F.count(F.lit(1))), colored
+
+    (nbr, uncol, colored), _, converged = iterate(
+        init, jones_plassmann, max_rounds
+    )
+    _free_checkpoint((nbr, uncol))
+    if strict and not converged:
+        _free_checkpoint(colored)
         raise RuntimeError(
             f"greedy_coloring did not converge in {max_rounds} rounds; "
             "raise max_rounds or pass strict=False for the bounded-prefix "
             "partial coloring"
         )
     return colored
+
+
+def _symmetric(und: DataFrame) -> DataFrame:
+    """Both directions ``(v, u)`` of a canonical undirected edge table."""
+    return und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
+        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
+    )
 
 
 _WL_M = 999_999_999_989  # largest prime < 1e12: keeps h*A in int64
@@ -3705,28 +3704,15 @@ def wl_colors(graph: GraphFrame, rounds: int = 2) -> DataFrame:
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    nbr = truncate_plan(
-        und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-            und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-        )
-    )
-    col = truncate_plan(
-        nbr.groupBy("v").agg((F.count(F.lit(1)) % F.lit(_WL_M)).alias("c"))
-    )
-    for _ in range(rounds):
+    und = _und_simple(graph.edges)
+
+    def refine(state, r):
+        nbr, col = state
         msgs = nbr.join(
             col.select(F.col("v").alias("u"), F.col("c").alias("cu")), "u"
         ).select("v", _wl_hash(F.col("cu")).alias("t"))
         sums = msgs.groupBy("v").agg((F.sum("t") % F.lit(_WL_M)).alias("s"))
-        new_col = truncate_plan(
+        col = r.keep(
             col.join(sums, "v").select(
                 "v",
                 (
@@ -3735,8 +3721,16 @@ def wl_colors(graph: GraphFrame, rounds: int = 2) -> DataFrame:
                 ).alias("c"),
             )
         )
-        _free_checkpoint(col)
-        col = new_col
+        return (nbr, col), False
+
+    def init(r):
+        nbr = r.keep(_symmetric(und))
+        return nbr, r.keep(
+            nbr.groupBy("v").agg((F.count(F.lit(1)) % F.lit(_WL_M)).alias("c"))
+        )
+
+    nbr, col = iterate(init, refine, rounds).state
+    _free_checkpoint(nbr)
     return col.select(F.col("v").alias(VERTEX_ID), F.col("c").alias("wl_color"))
 
 
@@ -3766,10 +3760,11 @@ def densest_subgraph(
     int64, decimal does not.
 
     Scale shape: each round is one degree hash-aggregation + two
-    semi-joins on the shrinking edge set (O(E_t) shuffle, key-partitioned)
-    plus two O(1) scalar actions (V_t, E_t — the same per-round scalar
-    cadence as :func:`k_core`); lineage is truncated per round.  The
-    density trace lives in O(rounds) driver scalars — never row data.
+    semi-joins on the shrinking edge set (O(E_t) shuffle, key-partitioned);
+    the edge set and the degree table are materialized, and V_t and E_t
+    are observed on those two jobs — no action of their own.  Lineage is
+    truncated per round.  The density trace lives in O(rounds) driver
+    scalars — never row data.
 
     Returns a trace DataFrame ``(peel_round, n_vertices, n_edges,
     density)`` (density = E/V rounded 6 dp; round 0 is the input graph) — or, with
@@ -3787,44 +3782,28 @@ def densest_subgraph(
             f"{epsilon_num}/{epsilon_den}"
         )
     spark = graph.edges.sparkSession
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    und = truncate_plan(und)
+    und = _und_simple(graph.edges)
     coef = 2 * (epsilon_den + epsilon_num)
 
-    def _degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("a").alias(VERTEX_ID))
-            .unionAll(e.select(F.col("b")))
-            .groupBy(VERTEX_ID)
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
+    # V and E are observed on the materializations of the degree table
+    # and the edge set; the density trace lives in O(rounds) scalars
+    def measured(und: DataFrame, r) -> tuple[DataFrame, DataFrame]:
+        und = r.keep(und, n_e=F.count(F.lit(1)))
+        return und, r.keep(_degrees(und), n_v=F.count(F.lit(1)))
 
     trace: list[tuple[int, int, int, float]] = []
-    best: DataFrame | None = None
     best_density = -1.0
-    rnd = 0
-    while True:
-        deg = _degrees(und)
-        # two O(1) scalars per round (V and E ride one count each)
-        n_e = und.count()
-        n_v = deg.count()
+
+    def peel(state, r):
+        nonlocal best_density
+        und, deg, best = state
+        n_v, n_e = r.prev["n_v"], r.prev["n_e"]
         density = 0.0 if n_v == 0 else round(n_e / n_v, 6)
-        trace.append((rnd, n_v, n_e, density))
+        trace.append((r.n - 1, n_v, n_e, density))
         if return_subgraph and density > best_density and n_v > 0:
-            if best is not None:
-                _free_checkpoint(best)
-            best = truncate_plan(deg)
-            best_density = density
-        if n_e == 0 or (max_rounds is not None and rnd >= max_rounds):
-            break
-        rnd += 1
+            best, best_density = deg, density
+        if n_e == 0 or (max_rounds is not None and r.n > max_rounds):
+            return (und, deg, best), True
         # integer-exact batched peel: KEEP v iff deg·V·den > coef·E
         keep = deg.filter(
             F.col("degree").cast("decimal(38,0)")
@@ -3836,10 +3815,12 @@ def densest_subgraph(
         nxt = und.join(
             keep.select(F.col(VERTEX_ID).alias("a")), "a", "left_semi"
         ).join(keep.select(F.col(VERTEX_ID).alias("b")), "b", "left_semi")
-        nxt = truncate_plan(nxt)
-        _free_checkpoint(und)
-        und = nxt
-    _free_checkpoint(und)
+        return (*measured(nxt, r), best), False
+
+    und, deg, best = iterate(
+        lambda r: (*measured(und, r), None), peel
+    ).state
+    _free_checkpoint((und, deg) if deg is not best else und)
     trace_df = spark.createDataFrame(
         trace, "peel_round int, n_vertices bigint, n_edges bigint, density double"
     )
@@ -4172,7 +4153,8 @@ def eigenvector_centrality(graph: GraphFrame, k: int = 3) -> DataFrame:
     x = graph.vertices.select(
         VERTEX_ID, F.lit(1).cast("long").alias("x")
     )
-    for _ in range(k):
+
+    def power(x: DataFrame, r) -> tuple[DataFrame, bool]:
         nxt = (
             e.join(
                 x.select(
@@ -4183,11 +4165,13 @@ def eigenvector_centrality(graph: GraphFrame, k: int = 3) -> DataFrame:
             .groupBy(F.col(OBJECT).alias(VERTEX_ID))
             .agg(F.sum("__xu").alias("x"))
         )
-        x = truncate_plan(
+        return r.keep(
             graph.vertices.select(VERTEX_ID)
             .join(nxt, VERTEX_ID, "left")
             .select(VERTEX_ID, F.coalesce("x", F.lit(0)).alias("x"))
-        )
+        ), False
+
+    x = iterate(lambda r: x, power, k).state
     tot = x.agg(F.sum("x").alias("__t"))
     return (
         x.crossJoin(F.broadcast(tot))
@@ -4248,7 +4232,7 @@ def louvain(graph: GraphFrame, rounds: int = 2) -> DataFrame:
     labels = graph.vertices.select(
         VERTEX_ID, F.col(VERTEX_ID).alias("community")
     )
-    for r in range(rounds):
+    def move(labels: DataFrame, r) -> tuple[DataFrame, bool]:
         lnb = labels.select(
             F.col(VERTEX_ID).alias("nb"), F.col("community").alias("c")
         )
@@ -4292,7 +4276,7 @@ def louvain(graph: GraphFrame, rounds: int = 2) -> DataFrame:
             .groupBy("v")
             .agg(F.min("c").alias("new_c"))
         )
-        labels = truncate_plan(
+        labels = r.keep(
             labels.join(
                 best, labels[VERTEX_ID] == best["v"], "left"
             ).select(
@@ -4302,7 +4286,7 @@ def louvain(graph: GraphFrame, rounds: int = 2) -> DataFrame:
                     # negative odd vertex id would yield -1 and never be
                     # eligible to move in any round (xxhash64 ids from the
                     # extraction pipeline ARE negative half the time)
-                    (F.pmod(F.col(VERTEX_ID), F.lit(2)) == r % 2)
+                    (F.pmod(F.col(VERTEX_ID), F.lit(2)) == (r.n - 1) % 2)
                     & F.col("new_c").isNotNull(),
                     F.col("new_c"),
                 )
@@ -4310,7 +4294,9 @@ def louvain(graph: GraphFrame, rounds: int = 2) -> DataFrame:
                 .alias("community"),
             )
         )
-    return labels
+        return labels, False
+
+    return iterate(lambda r: labels, move, rounds).state
 
 def opic(
     graph: GraphFrame,
@@ -4625,46 +4611,16 @@ def edge_betweenness(
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
     spark = graph.edges.sparkSession
-    edges = truncate_plan(graph.edges.select(SUBJECT, OBJECT).distinct())
-    lvl0 = truncate_plan(
-        spark.createDataFrame(
-            [(int(s), int(s), 1) for s in sorted(set(sources))],
-            schema=f"{VERTEX_ID} long, src long, sigma long",
-        )
-    )
-    levels = [lvl0]
-    settled = lvl0.select(VERTEX_ID, "src")
-    for _hop in range(1, max_hops + 1):
-        prev = levels[-1]
-        msgs = prev.join(edges, prev[VERTEX_ID] == edges[SUBJECT]).select(
-            F.col(OBJECT).alias(VERTEX_ID),
-            prev["src"].alias("src"),
-            prev["sigma"].alias("sigma"),
-        )
-        nxt = (
-            msgs.groupBy(VERTEX_ID, "src")
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(settled, [VERTEX_ID, "src"], "left_anti")
-        )
-        nxt = truncate_plan(nxt)
-        if nxt.isEmpty():
-            _free_checkpoint(nxt)
-            break
-        levels.append(nxt)
-        new_settled = truncate_plan(
-            settled.unionByName(nxt.select(VERTEX_ID, "src"))
-        )
-        _free_checkpoint(settled)
-        settled = new_settled
+    edges, levels, sigmas = _bfs_levels(graph, sources, max_hops)
     deepest = len(levels) - 1
     if deepest == 0:
         return spark.createDataFrame(
             [], schema="subject long, object long, ebc_scaled long, ebc double"
         )
-    zero = F.lit(0).cast("long").alias("delta")
-    delta_below = levels[deepest].select(VERTEX_ID, "src", zero)
-    edge_terms = []
-    for d in range(deepest - 1, -1, -1):
+
+    def accumulate(state, r):
+        delta_below, edge_terms = state
+        d = deepest - r.n
         below = (
             levels[d + 1]
             .join(delta_below, [VERTEX_ID, "src"])
@@ -4675,14 +4631,9 @@ def edge_betweenness(
                 F.col("delta").alias("w_delta"),
             )
         )
-        guard = levels[d].agg(F.max("sigma")).first()[0] or 0
-        dmax = below.agg(F.max("w_delta")).first()[0] or 0
-        if guard * (scale + dmax) >= 2**63:
-            raise OverflowError(
-                f"edge_betweenness scaled-int overflow risk at level {d}: "
-                f"max sigma {guard} * (scale + max delta {dmax}) >= 2^63; "
-                "lower scale, hops, or the source sample"
-            )
+        _overflow_guard(
+            "edge_betweenness", d, sigmas[d], r.prev.get("dmax"), scale
+        )
         cur = levels[d]
         joined = (
             cur.join(edges, cur[VERTEX_ID] == edges[SUBJECT])
@@ -4700,24 +4651,31 @@ def edge_betweenness(
                 ),
             )
         )
-        edge_terms.append(
-            truncate_plan(
-                joined.groupBy(
-                    F.col(VERTEX_ID).alias(SUBJECT),
-                    F.col("w_id").alias(OBJECT),
-                ).agg(F.sum("term").alias("t"))
-            )
-        )
+        edge_terms = (*edge_terms, r.keep(
+            joined.groupBy(
+                F.col(VERTEX_ID).alias(SUBJECT), F.col("w_id").alias(OBJECT)
+            ).agg(F.sum("term").alias("t"))
+        ))
         if d >= 1:
             contrib = joined.groupBy(VERTEX_ID, "src").agg(
                 F.sum("term").alias("delta")
             )
-            delta_below = truncate_plan(
+            delta_below = r.keep(
                 levels[d]
                 .select(VERTEX_ID, "src")
                 .join(contrib, [VERTEX_ID, "src"], "left")
-                .fillna({"delta": 0})
+                .fillna({"delta": 0}),
+                dmax=F.max("delta"),
             )
+        return (delta_below, edge_terms), False
+
+    zero = F.lit(0).cast("long").alias("delta")
+    delta_below, edge_terms = iterate(
+        lambda r: (levels[deepest].select(VERTEX_ID, "src", zero), ()),
+        accumulate,
+        deepest,
+    ).state
+    _free_checkpoint(delta_below)
     acc = edge_terms[0]
     for t in edge_terms[1:]:
         acc = acc.unionByName(t)

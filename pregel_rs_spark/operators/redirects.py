@@ -24,8 +24,8 @@ table on the jump key plus the terminal check that rides the same join
 (a pointer is terminal iff its target has no out-edge, i.e. the left
 join misses); rounds are O(log max-chain-length), state is exactly one
 row per redirect source, and every round passes through
-``truncate_plan`` so the plan stays O(1) deep.  No collects beyond the
-one O(1)-row convergence aggregate per round.
+``truncate_plan`` so the plan stays O(1) deep.  The convergence count
+rides each round's materialization job: no collects at all.
 
 No reference counterpart — extension beyond pregel-rs (the reference,
 src/graph_frame.rs / src/pregel.rs, ships no URL/redirect surface).
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pregel_rs_spark.columns import OBJECT, SUBJECT
-from pregel_rs_spark.pregel import _free_checkpoint, truncate_plan
+from pregel_rs_spark.pregel import iterate
 
 
 def resolve_redirects(
@@ -68,25 +68,17 @@ def resolve_redirects(
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
 
-    # state: subject -> (final, hops); starts as the redirect table itself
-    state = truncate_plan(
-        redirects.select(
-            F.col(SUBJECT),
-            F.col(OBJECT).alias("final"),
-            F.lit(1).cast("long").alias("hops"),
-        )
-    )
-    for _ in range(max_rounds):
-        # jump table = the CURRENT state (f_{k+1}(x) = f_k(f_k(x))):
-        # one self equi-join; a miss means the pointer is already
-        # terminal (its target has no out-edge), so the same join is
-        # also the convergence test.
+    def double(state: DataFrame, r) -> tuple[DataFrame, bool]:
+        # jump table = the CURRENT state (f_{k+1}(x) = f_k(f_k(x))): one
+        # self equi-join; a miss means the pointer is already terminal (its
+        # target has no out-edge), so the same join is also the convergence
+        # test, observed on the round's materialization
         jump = state.select(
             F.col(SUBJECT).alias("__j_src"),
             F.col("final").alias("__j_final"),
             F.col("hops").alias("__j_hops"),
         )
-        nxt = (
+        state = r.keep(
             state.join(jump, state["final"] == jump["__j_src"], "left")
             .select(
                 F.col(SUBJECT),
@@ -95,18 +87,21 @@ def resolve_redirects(
                     F.col("hops") + F.coalesce("__j_hops", F.lit(0))
                 ).alias("hops"),
                 F.col("__j_src").isNotNull().alias("__jumped"),
-            )
+            ),
+            jumped=F.count_if("__jumped"),
         )
-        nxt = truncate_plan(nxt)
-        n_active = nxt.filter("__jumped").count()
-        prev = state
-        state = nxt.drop("__jumped")
-        # .drop() returns a fresh DataFrame object: carry the checkpoint-
-        # block handle over so the next round can free THIS round's blocks
-        state._ck_rdd = getattr(nxt, "_ck_rdd", None)
-        _free_checkpoint(prev)
-        if n_active == 0:
-            break
+        return state, r.seen["jumped"] == 0
+
+    # state: subject -> (final, hops); starts as the redirect table itself
+    state = iterate(
+        lambda r: r.keep(redirects.select(
+            F.col(SUBJECT),
+            F.col(OBJECT).alias("final"),
+            F.lit(1).cast("long").alias("hops"),
+        )),
+        double,
+        max_rounds,
+    ).state
 
     # resolved ⇔ final has no outgoing redirect (left-join miss against
     # the domain); computed once at the end, not per round.

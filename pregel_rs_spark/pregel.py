@@ -53,14 +53,11 @@ from __future__ import annotations
 
 import inspect
 import math
-import os
-import sys
 import time
-import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import TYPE_CHECKING, Callable, Iterator, Optional, Union
+from typing import TYPE_CHECKING, Any, Callable, Iterator, NamedTuple, Optional, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -167,8 +164,8 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
 
     ``localCheckpoint`` still does the heavy lifting (safe row copies,
     RDD-lineage truncation, MEMORY_AND_DISK blocks); we only re-wrap its
-    result.  Falls back to the plain checkpointed frame if the internal
-    constructor is unavailable (e.g. Spark Connect).
+    result.  Raises ``RuntimeError`` if the internal constructor is
+    unavailable (e.g. Spark Connect or an incompatible Spark version).
     """
     # SERIALIZED block storage (python StorageLevel.MEMORY_AND_DISK has
     # deserialized=False; the Spark-default MEMORY_AND_DISK_DESER stores one
@@ -262,41 +259,123 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
         # ContextCleaner to notice — keeps peak storage at ~2 states.
         out._ck_rdd = lr.rdd()
         return out
-    except Exception as ex:  # pragma: no cover - exercised only on Spark bumps
+    except Exception as ex:
         # The rewrap touches Spark-internal constructors (LogicalRDD 9-arg,
-        # classic.Dataset.ofRows) that can change on a minor bump.  Falling
-        # back to the plain checkpoint silently restores the O(3^superstep)
-        # driver-stats pathology AND loses the _ck_rdd unpersist handle —
-        # warn loudly (once) so a perf regression is diagnosable.
-        global _TRUNCATE_FALLBACK_WARNED
-        if not _TRUNCATE_FALLBACK_WARNED:
-            _TRUNCATE_FALLBACK_WARNED = True
-            warnings.warn(
-                "truncate_plan: stats-free LogicalRDD rewrap failed "
-                f"({type(ex).__name__}: {ex}); falling back to plain "
-                "localCheckpoint. Iterative jobs will slow down superstep by "
-                "superstep (lazy origin-stats recursion) and checkpoint "
-                "blocks are freed only by GC. Pin the rewrap against this "
-                "Spark version (tests/test_pregel.py::test_truncate_plan_rewrap).",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return ck
+        # classic.Dataset.ofRows) that can change on a minor bump.  The
+        # plain checkpoint is no substitute: it restores the O(3^superstep)
+        # driver-stats pathology and has no block handle to free.
+        raise RuntimeError(
+            "truncate_plan: the stats-free LogicalRDD rewrap failed on "
+            f"Spark {df.sparkSession.version} ({type(ex).__name__}: {ex}); "
+            "pin the rewrap against this Spark version "
+            "(tests/test_pregel.py::test_truncate_plan_rewrap)"
+        ) from ex
 
 
-_TRUNCATE_FALLBACK_WARNED = False
+def _free_checkpoint(state: Any) -> None:
+    """Unpersist the in-memory RDD behind each ``truncate_plan`` frame of
+    ``state`` (a frame or tuples of frames; no-op for plain frames) — frees
+    superseded state eagerly instead of waiting for the JVM GC /
+    ContextCleaner."""
+    for df in _frames(state):
+        rdd = getattr(df, "_ck_rdd", None)
+        if rdd is not None:
+            try:
+                rdd.unpersist(False)
+            except Exception:
+                pass
 
 
-def _free_checkpoint(df: DataFrame) -> None:
-    """Unpersist the in-memory RDD behind a ``truncate_plan`` frame (no-op
-    for plain frames) — frees superseded state eagerly instead of waiting
-    for the JVM GC / ContextCleaner."""
-    rdd = getattr(df, "_ck_rdd", None)
-    if rdd is not None:
-        try:
-            rdd.unpersist(False)
-        except Exception:
-            pass
+def _frames(state: Any) -> Iterator[DataFrame]:
+    """The frames of an iteration state: a frame, or (nested) tuples and
+    lists of frames; ``None`` entries hold no frame."""
+    if isinstance(state, DataFrame):
+        yield state
+    elif isinstance(state, (tuple, list)):
+        for s in state:
+            yield from _frames(s)
+
+
+class Round:
+    """One round of :func:`iterate`: its number ``n`` (0 builds the initial
+    state), the scalars its materializations observed (``seen``) and those
+    the previous round observed (``prev``)."""
+
+    def __init__(self, n: int, prev: dict, owned: list, preserve: bool):
+        self.n, self.prev, self.seen = n, prev, {}
+        self._owned, self._preserve = owned, preserve
+
+    def keep(self, df: DataFrame, **observe: Column) -> DataFrame:
+        """Materialize ``df`` (:func:`truncate_plan`) as a block of this
+        run.  Each ``observe`` aggregate rides the same job, through an
+        ``Observation``, into ``seen``: no convergence test costs a job of
+        its own.  A frame that already holds blocks (the result of a nested
+        run) is adopted as it is, when there is nothing to observe."""
+        if observe or getattr(df, "_ck_rdd", None) is None:
+            obs = None
+            if observe:
+                from pyspark.sql import Observation
+
+                obs = Observation()
+                df = df.observe(obs, *[c.alias(k) for k, c in observe.items()])
+            df = truncate_plan(df, preserve_partitioning=self._preserve)
+            if obs is not None:
+                self.seen.update(obs.get)
+        self._owned.append(df)
+        return df
+
+
+class Fixpoint(NamedTuple):
+    state: Any
+    rounds: int
+    converged: bool
+
+
+def iterate(
+    init: Callable[[Round], Any],
+    step: Callable[[Any, Round], tuple[Any, bool]],
+    max_rounds: Optional[int] = None,
+    preserve_partitioning: bool = True,
+) -> Fixpoint:
+    """Run ``step`` from ``init`` to a fixpoint: the one owner of every
+    iterative loop's blocks (Pregel supersteps and the algorithms' rounds).
+
+    ``init(r)`` builds the initial state; ``step(state, r)`` builds the
+    next one and returns ``(state, converged)``.  A state is a frame or a
+    tuple of frames.  Both materialize what they keep with ``r.keep`` —
+    observing the scalars their convergence test reads on the same job —
+    and may carry frames of the previous state forward unchanged.  After
+    each round every block this run kept that no frame of the new state
+    holds is freed; if anything raises, every block it holds is freed.
+    Stops when ``step`` reports convergence or after ``max_rounds``
+    rounds, and returns the final state (its blocks now the caller's), the
+    rounds run and whether ``step`` converged.
+
+    ``preserve_partitioning`` is :func:`truncate_plan`'s.
+    """
+    owned: list[DataFrame] = []
+
+    def release(state: Any) -> None:
+        live = {id(f._ck_rdd) for f in _frames(state) if getattr(f, "_ck_rdd", None)}
+        for df in owned:
+            if id(df._ck_rdd) not in live:
+                _free_checkpoint(df)
+        owned[:] = [df for df in owned if id(df._ck_rdd) in live]
+
+    try:
+        r = Round(0, {}, owned, preserve_partitioning)
+        state = init(r)
+        release(state)
+        rounds, converged = 0, False
+        while not converged and (max_rounds is None or rounds < max_rounds):
+            rounds += 1
+            r = Round(rounds, r.seen, owned, preserve_partitioning)
+            state, converged = step(state, r)
+            release(state)
+    except BaseException:
+        _free_checkpoint(owned)
+        raise
+    return Fixpoint(state, rounds, converged)
 
 
 # The superstep loop's join strategy (see Pregel._run_locked): every join is
@@ -544,9 +623,7 @@ class Pregel:
                     for sc in self.extra_state
                 ],
             )
-        current = truncate_plan(current, preserve_partitioning=single_jvm)
-
-        state_cols = [c for c in current.columns]
+        state_cols = current.columns
 
         # -- join-pruning probe frame: an EMPTY DataFrame carrying the full
         # triplet schema (subject.* ∪ edge.* ∪ object.*).  Each superstep the
@@ -579,365 +656,342 @@ class Pregel:
         )
         pruning_cache: Optional[tuple[bool, bool]] = None
 
-        # Bootstrap user state-stats over the initial state (one cheap agg on
-        # the checkpointed frame); thereafter they piggy-back on the per-
-        # superstep stats action — zero extra jobs inside the loop.
         last_stats: dict = {}
         stat_types: dict[str, str] = {}
-        if self.state_stats:
-            row = current.agg(
-                *[e.alias(f"__ss_{k}__") for k, e in self.state_stats.items()]
-            ).collect()[0]
-            last_stats = {k: row[f"__ss_{k}__"] for k in self.state_stats}
-            # one fixed injection schema per run (stable plan → codegen cache
-            # hit); integers stay bigint (exact past 2^53), everything else
-            # double, NULL stats stay NULL rather than silently becoming 0.
-            stat_types = {
-                k: "bigint"
-                if isinstance(v, int) and not isinstance(v, bool)
-                else "double"
-                for k, v in last_stats.items()
-            }
 
-        iteration = start_step
+        def superstep0(r: Round) -> DataFrame:
+            state = r.keep(current)
+            if self.state_stats:
+                # Bootstrap user state-stats over the initial state (one
+                # cheap agg on the checkpointed frame); thereafter they
+                # ride each superstep's materialization.
+                row = state.agg(*[
+                    e.alias(f"__ss_{k}__") for k, e in self.state_stats.items()
+                ]).collect()[0]
+                last_stats.update(
+                    {k: row[f"__ss_{k}__"] for k in self.state_stats}
+                )
+                # one fixed injection schema per run (stable plan → codegen
+                # cache hit); integers stay bigint (exact past 2^53),
+                # everything else double, NULL stats stay NULL rather than
+                # silently becoming 0.
+                stat_types.update({
+                    k: "bigint"
+                    if isinstance(v, int) and not isinstance(v, bool)
+                    else "double"
+                    for k, v in last_stats.items()
+                })
+            return state
+
         last_written = None  # superstep of the last interval checkpoint
-        try:
-            while iteration <= self.max_iterations:
-                t0 = time.monotonic()
-                ctx = PregelContext(
-                    superstep=iteration, state=current, stats=last_stats
-                )
 
-                # The state keeps its hash(vertex_id) partitioning across
-                # supersteps (truncate_plan preserves the checkpoint's
-                # outputPartitioning), so in steady state NEITHER the
-                # subject/object triplet sides NOR the apply join re-shuffle
-                # the state; with AQE off the partition count is stable and
-                # the aggregated-message side lines up too.  Superstep 1
-                # pays one bootstrap shuffle unless the vertex table already
-                # came hash-partitioned at the shuffle width (a graph's
-                # degree table, GraphFrame._degree_table).
-                base = current
+        def superstep(current: DataFrame, r: Round) -> tuple[DataFrame, bool]:
+            nonlocal pruning_cache, last_written
+            iteration = start_step + r.n - 1
+            t0 = time.monotonic()
+            ctx = PregelContext(
+                superstep=iteration, state=current, stats=last_stats
+            )
 
-                # -- triplets: subject ⋈ edge ⋈ object (pregel.rs:791-808) --
-                # Each vertex-side join serves two purposes in the reference:
-                # providing that side's columns to message expressions, and
-                # inner-join filtering of edges whose endpoint is missing
-                # from the vertex set.  When no payload references a side's
-                # columns AND the graph is closed-world (vertex set derived
-                # from the edges, so the filter is a no-op), that join is
-                # dropped — for PageRank this halves the per-superstep joins.
-                sends = (
-                    self.send_messages[:1]
-                    if self.first_send_only
-                    else self.send_messages
-                )
-                resolved = [
-                    (sm.receiver, _resolve(sm.payload, ctx)) for sm in sends
-                ]
-                closed = getattr(self.graph, "closed", False)
-                if not closed:
-                    # open-world graphs need both inner joins for their
-                    # filtering effect regardless of column usage
+            # The state keeps its hash(vertex_id) partitioning across
+            # supersteps (truncate_plan preserves the checkpoint's
+            # outputPartitioning), so in steady state NEITHER the
+            # subject/object triplet sides NOR the apply join re-shuffle
+            # the state; with AQE off the partition count is stable and
+            # the aggregated-message side lines up too.  Superstep 1
+            # pays one bootstrap shuffle unless the vertex table already
+            # came hash-partitioned at the shuffle width (a graph's
+            # degree table, GraphFrame._degree_table).
+            base = current
+
+            # -- triplets: subject ⋈ edge ⋈ object (pregel.rs:791-808) --
+            # Each vertex-side join serves two purposes in the reference:
+            # providing that side's columns to message expressions, and
+            # inner-join filtering of edges whose endpoint is missing
+            # from the vertex set.  When no payload references a side's
+            # columns AND the graph is closed-world (vertex set derived
+            # from the edges, so the filter is a no-op), that join is
+            # dropped — for PageRank this halves the per-superstep joins.
+            sends = (
+                self.send_messages[:1]
+                if self.first_send_only
+                else self.send_messages
+            )
+            resolved = [
+                (sm.receiver, _resolve(sm.payload, ctx)) for sm in sends
+            ]
+            closed = getattr(self.graph, "closed", False)
+            if not closed:
+                # open-world graphs need both inner joins for their
+                # filtering effect regardless of column usage
+                need_subj = need_obj = True
+            elif pruning_cache is not None:
+                need_subj, need_obj = pruning_cache
+            else:
+                subj_names = {alias(SUBJECT, c) for c in state_cols}
+                obj_names = {alias(OBJECT, c) for c in state_cols}
+                try:
+                    refs = _referenced_names(probe, [p for _, p in resolved])
+                    need_subj = bool(refs & subj_names)
+                    need_obj = bool(refs & obj_names)
+                except Exception:
+                    # unresolvable payload: keep both joins (always
+                    # correct) and let the real plan raise the user's
+                    # actual analysis error with full context
                     need_subj = need_obj = True
-                elif pruning_cache is not None:
-                    need_subj, need_obj = pruning_cache
-                else:
-                    subj_names = {alias(SUBJECT, c) for c in state_cols}
-                    obj_names = {alias(OBJECT, c) for c in state_cols}
-                    try:
-                        refs = _referenced_names(probe, [p for _, p in resolved])
-                        need_subj = bool(refs & subj_names)
-                        need_obj = bool(refs & obj_names)
-                    except Exception:
-                        # unresolvable payload: keep both joins (always
-                        # correct) and let the real plan raise the user's
-                        # actual analysis error with full context
-                        need_subj = need_obj = True
-                    if static_sends:
-                        pruning_cache = (need_subj, need_obj)
+                if static_sends:
+                    pruning_cache = (need_subj, need_obj)
+            if self.active_filter is not None:
+                # the subject join is load-bearing now (it drops
+                # inactive senders' edges), so it can't be pruned even
+                # on a closed-world graph with subject-free payloads
+                need_subj = True
+            triplets = edges
+            if need_subj or not closed:
+                subj = base.select(
+                    *[
+                        F.col(f"`{c}`").alias(alias(SUBJECT, c))
+                        for c in state_cols
+                    ]
+                )
                 if self.active_filter is not None:
-                    # the subject join is load-bearing now (it drops
-                    # inactive senders' edges), so it can't be pruned even
-                    # on a closed-world graph with subject-free payloads
-                    need_subj = True
-                triplets = edges
-                if need_subj or not closed:
-                    subj = base.select(
-                        *[
-                            F.col(f"`{c}`").alias(alias(SUBJECT, c))
-                            for c in state_cols
-                        ]
+                    # filter BEFORE the join: cuts the sort-merge
+                    # probe side and every downstream message row
+                    # without disturbing the state's hash partitioning
+                    subj = subj.filter(
+                        _resolve(self.active_filter, ctx)
                     )
-                    if self.active_filter is not None:
-                        # filter BEFORE the join: cuts the sort-merge
-                        # probe side and every downstream message row
-                        # without disturbing the state's hash partitioning
-                        subj = subj.filter(
-                            _resolve(self.active_filter, ctx)
-                        )
-                    triplets = subj.join(
-                        triplets,
-                        _q(alias(SUBJECT, VERTEX_ID)) == _q(alias("edge", SUBJECT)),
-                        "inner",
-                    )
-                if need_obj or not closed:
-                    obj = base.select(
-                        *[
-                            F.col(f"`{c}`").alias(alias(OBJECT, c))
-                            for c in state_cols
-                        ]
-                    )
-                    triplets = triplets.join(
-                        obj,
-                        _q(alias("edge", OBJECT)) == _q(alias(OBJECT, VERTEX_ID)),
-                        "inner",
-                    )
-
-                # -- messages: one frame per SendMessage, unioned (Q1 fix) --
-                frames = []
-                for receiver, payload in resolved:
-                    frames.append(
-                        triplets.select(
-                            receiver.receiver_expr().alias(MSG_VERTEX_ID),
-                            payload.alias(PREGEL_MSG),
-                        )
-                    )
-                messages = frames[0]
-                for f_ in frames[1:]:
-                    messages = messages.unionByName(f_)
-
-                # -- aggregate per receiver (pregel.rs:835-837) --
-                collect_stats = (
-                    self.tolerance is not None
-                    or self.check_exact
-                    or self.checkpoint_store is not None
-                    or bool(self.state_stats)
+                triplets = subj.join(
+                    triplets,
+                    _q(alias(SUBJECT, VERTEX_ID)) == _q(alias("edge", SUBJECT)),
+                    "inner",
                 )
-                # __msg_cnt__ rides along so the stats action can report
-                # total messages without a second pass — but it widens every
-                # shuffled partial-agg row by a long (measured ~20% of the
-                # per-superstep shuffle at 16 cores), so it is only computed
-                # when something consumes it: checkpoint manifests or an
-                # explicit request.  Convergence (delta/changed) never needs
-                # it.
-                count_msgs = (
-                    self.checkpoint_store is not None or self.message_counts
+            if need_obj or not closed:
+                obj = base.select(
+                    *[
+                        F.col(f"`{c}`").alias(alias(OBJECT, c))
+                        for c in state_cols
+                    ]
                 )
-                agg_expr = _resolve(self.aggregate_expr, ctx).alias(PREGEL_MSG)
-                if self.salted_agg_partials > 1:
-                    # Explicit two-phase: partial agg on (receiver, salt),
-                    # then COMBINE the partials per receiver.  The combiner
-                    # is derived from the aggregate function, NOT the user
-                    # expression re-applied: re-applying `count` would count
-                    # salt groups instead of messages, and re-applying
-                    # `sum(msg * 2)` would double the partials again.
-                    # Decomposable: sum/min/max (same fn) and count (→ sum).
-                    fn = _agg_function_name(agg_expr)
-                    combine = _SALT_COMBINE.get(fn or "")
-                    if combine is None:
-                        raise ValueError(
-                            "with_salted_aggregation requires a sum/min/max/"
-                            f"count aggregate; got {fn or 'unrecognized'!s}. "
-                            "Non-decomposable aggregates (avg, collect_*, "
-                            "F.expr text) must use the unsalted path, where "
-                            "Spark's map-side partial aggregation still "
-                            "collapses hub receivers per partition."
-                        )
-                    salt = F.pmod(
-                        F.xxhash64(F.monotonically_increasing_id()),
-                        F.lit(self.salted_agg_partials),
-                    ).alias("__salt__")
-                    cnt_p = (
+                triplets = triplets.join(
+                    obj,
+                    _q(alias("edge", OBJECT)) == _q(alias(OBJECT, VERTEX_ID)),
+                    "inner",
+                )
+
+            # -- messages: one frame per SendMessage, unioned (Q1 fix) --
+            frames = []
+            for receiver, payload in resolved:
+                frames.append(
+                    triplets.select(
+                        receiver.receiver_expr().alias(MSG_VERTEX_ID),
+                        payload.alias(PREGEL_MSG),
+                    )
+                )
+            messages = frames[0]
+            for f_ in frames[1:]:
+                messages = messages.unionByName(f_)
+
+            # -- aggregate per receiver (pregel.rs:835-837) --
+            collect_stats = (
+                self.tolerance is not None
+                or self.check_exact
+                or self.checkpoint_store is not None
+                or bool(self.state_stats)
+            )
+            # __msg_cnt__ rides along so the stats action can report
+            # total messages without a second pass — but it widens every
+            # shuffled partial-agg row by a long (measured ~20% of the
+            # per-superstep shuffle at 16 cores), so it is only computed
+            # when something consumes it: checkpoint manifests or an
+            # explicit request.  Convergence (delta/changed) never needs
+            # it.
+            count_msgs = (
+                self.checkpoint_store is not None or self.message_counts
+            )
+            agg_expr = _resolve(self.aggregate_expr, ctx).alias(PREGEL_MSG)
+            if self.salted_agg_partials > 1:
+                # Explicit two-phase: partial agg on (receiver, salt),
+                # then COMBINE the partials per receiver.  The combiner
+                # is derived from the aggregate function, NOT the user
+                # expression re-applied: re-applying `count` would count
+                # salt groups instead of messages, and re-applying
+                # `sum(msg * 2)` would double the partials again.
+                # Decomposable: sum/min/max (same fn) and count (→ sum).
+                fn = _agg_function_name(agg_expr)
+                combine = _SALT_COMBINE.get(fn or "")
+                if combine is None:
+                    raise ValueError(
+                        "with_salted_aggregation requires a sum/min/max/"
+                        f"count aggregate; got {fn or 'unrecognized'!s}. "
+                        "Non-decomposable aggregates (avg, collect_*, "
+                        "F.expr text) must use the unsalted path, where "
+                        "Spark's map-side partial aggregation still "
+                        "collapses hub receivers per partition."
+                    )
+                salt = F.pmod(
+                    F.xxhash64(F.monotonically_increasing_id()),
+                    F.lit(self.salted_agg_partials),
+                ).alias("__salt__")
+                cnt_p = (
+                    [F.count(F.lit(1)).alias("__msg_cnt__")]
+                    if count_msgs else []
+                )
+                partial = messages.select(
+                    _q(MSG_VERTEX_ID), _q(PREGEL_MSG), salt
+                ).groupBy(_q(MSG_VERTEX_ID), F.col("__salt__")).agg(
+                    agg_expr, *cnt_p
+                )
+                aggregated = partial.groupBy(_q(MSG_VERTEX_ID)).agg(
+                    combine(_q(PREGEL_MSG)).alias(PREGEL_MSG),
+                    *(
+                        [F.sum("__msg_cnt__").alias("__msg_cnt__")]
+                        if count_msgs else []
+                    ),
+                )
+            else:
+                # Spark's hash aggregate already does map-side partial
+                # combine before the shuffle (two-phase for free).
+                aggregated = messages.groupBy(_q(MSG_VERTEX_ID)).agg(
+                    agg_expr,
+                    *(
                         [F.count(F.lit(1)).alias("__msg_cnt__")]
                         if count_msgs else []
-                    )
-                    partial = messages.select(
-                        _q(MSG_VERTEX_ID), _q(PREGEL_MSG), salt
-                    ).groupBy(_q(MSG_VERTEX_ID), F.col("__salt__")).agg(
-                        agg_expr, *cnt_p
-                    )
-                    aggregated = partial.groupBy(_q(MSG_VERTEX_ID)).agg(
-                        combine(_q(PREGEL_MSG)).alias(PREGEL_MSG),
-                        *(
-                            [F.sum("__msg_cnt__").alias("__msg_cnt__")]
-                            if count_msgs else []
-                        ),
-                    )
-                else:
-                    # Spark's hash aggregate already does map-side partial
-                    # combine before the shuffle (two-phase for free).
-                    aggregated = messages.groupBy(_q(MSG_VERTEX_ID)).agg(
-                        agg_expr,
-                        *(
-                            [F.count(F.lit(1)).alias("__msg_cnt__")]
-                            if count_msgs else []
-                        ),
-                    )
-
-                # -- apply: state ⟕ messages, v_prog (pregel.rs:843-854) --
-                # Left join ≡ reference full join: message ids ⊆ vertex ids
-                # because triplets are inner joins.  No-message vertices see
-                # NULL _pregel_msg_ (Q2 parity).
-                joined = base.join(
-                    aggregated,
-                    F.col(VERTEX_ID) == _q(MSG_VERTEX_ID),
-                    "left",
-                )
-                if self.state_stats:
-                    # Inject the scalar stats as columns via a broadcast
-                    # one-row frame (see PregelContext.stat_col): identical
-                    # plan every superstep → codegen cache hit, only the
-                    # tiny broadcast re-executes.  Values keep their native
-                    # types (schema fixed at bootstrap) so ctx.stats and the
-                    # injected column never diverge.
-                    vals = []
-                    for k in self.state_stats:
-                        v = last_stats.get(k)
-                        if v is None:
-                            vals.append(None)
-                        elif stat_types[k] == "bigint":
-                            vals.append(int(v))
-                        else:
-                            vals.append(float(v))
-                    stat_row = spark.createDataFrame(
-                        [tuple(vals)],
-                        ", ".join(f"__stat_{k}__ {stat_types[k]}"
-                                  for k in self.state_stats),
-                    )
-                    joined = joined.crossJoin(F.broadcast(stat_row))
-                # -- update (pregel.rs:859-865): the reference re-joins the
-                # original vertices frame to re-attach static props every
-                # superstep; since only ``vcol`` evolves, carrying the props
-                # through the apply select is semantically identical and
-                # saves one shuffle join + one source re-scan per superstep.
-                evolving = [vcol] + [sc.name for sc in self.extra_state]
-                carry = [c for c in state_cols if c not in evolving]
-                prev_names = {c: f"__prev_{i}__" for i, c in enumerate(evolving)}
-                nxt = joined.select(
-                    *[F.col(f"`{c}`") for c in carry],
-                    *[
-                        F.col(f"`{c}`").alias(p)
-                        for c, p in prev_names.items()
-                    ],
-                    *([F.col("__msg_cnt__")] if count_msgs else []),
-                    # every v_prog sees the PRE-update values of all state
-                    # columns (they come from ``joined``) — synchronous BSP
-                    _resolve(self.v_prog, ctx).alias(vcol),
-                    *[
-                        _resolve(sc.v_prog, ctx).alias(sc.name)
-                        for sc in self.extra_state
-                    ],
+                    ),
                 )
 
-                # -- stats ride the materialization pass (Observation):
-                # CollectMetrics accumulates convergence delta, change
-                # counts, message totals, and the user state-stats DURING
-                # the localCheckpoint job itself — zero extra Spark jobs
-                # per superstep (an explicit .agg() action measured
-                # ~0.6-0.9 s/superstep even over the in-memory state).
-                obs = None
-                if collect_stats:
-                    from pyspark.sql import Observation
-
-                    any_changed = None
-                    for c, p in prev_names.items():
-                        ch = ~F.col(f"`{c}`").eqNullSafe(F.col(p))
-                        any_changed = ch if any_changed is None else (any_changed | ch)
-                    obs = Observation(f"pregel_{id(self)}_{iteration}")
-                    nxt = nxt.observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n"),
-                        F.max(
-                            F.abs(
-                                F.col(f"`{vcol}`") - F.col(prev_names[vcol])
-                            )
-                        ).alias("delta")
-                        if self.tolerance is not None
-                        else F.max(F.lit(None).cast("double")).alias("delta"),
-                        F.sum(any_changed.cast("int")).alias("changed"),
-                        F.sum(F.coalesce(F.col("__msg_cnt__"), F.lit(0))).alias(
-                            "messages"
-                        )
-                        if count_msgs
-                        else F.max(F.lit(None).cast("long")).alias("messages"),
-                        *[
-                            e.alias(f"__ss_{k}__")
-                            for k, e in self.state_stats.items()
-                        ],
-                    )
-
-                # -- materialize: truncate lineage (≡ collect(), pregel.rs:867) --
-                t_plan = time.monotonic() - t0
-                nxt = truncate_plan(nxt, preserve_partitioning=single_jvm)
-                t_ck = time.monotonic() - t0 - t_plan
-
-                delta = None
-                changed = None
-                n_vertices = -1
-                n_messages = None
-                if obs is not None:
-                    stats = obs.get  # already complete: checkpoint ran the plan
-                    n_vertices = stats["n"]
-                    delta = stats["delta"]
-                    changed = stats["changed"]
-                    n_messages = stats["messages"]
-                    last_stats = {
-                        k: stats[f"__ss_{k}__"] for k in self.state_stats
-                    }
-
-                prev = current
-                current = nxt.drop(*prev_names.values(), "__msg_cnt__")
-                current._ck_rdd = getattr(nxt, "_ck_rdd", None)
-                state_cols = current.columns
-                _free_checkpoint(prev)
-
-                self.metrics.append(
-                    SuperstepMetrics(
-                        superstep=iteration,
-                        wall_seconds=time.monotonic() - t0,
-                        vertices=n_vertices,
-                        delta=float(delta) if delta is not None else None,
-                        changed=changed,
-                        messages=n_messages,
-                    )
+            # -- apply: state ⟕ messages, v_prog (pregel.rs:843-854) --
+            # Left join ≡ reference full join: message ids ⊆ vertex ids
+            # because triplets are inner joins.  No-message vertices see
+            # NULL _pregel_msg_ (Q2 parity).
+            joined = base.join(
+                aggregated,
+                F.col(VERTEX_ID) == _q(MSG_VERTEX_ID),
+                "left",
+            )
+            if self.state_stats:
+                # Inject the scalar stats as columns via a broadcast
+                # one-row frame (see PregelContext.stat_col): identical
+                # plan every superstep → codegen cache hit, only the
+                # tiny broadcast re-executes.  Values keep their native
+                # types (schema fixed at bootstrap) so ctx.stats and the
+                # injected column never diverge.
+                vals = []
+                for k in self.state_stats:
+                    v = last_stats.get(k)
+                    if v is None:
+                        vals.append(None)
+                    elif stat_types[k] == "bigint":
+                        vals.append(int(v))
+                    else:
+                        vals.append(float(v))
+                stat_row = spark.createDataFrame(
+                    [tuple(vals)],
+                    ", ".join(f"__stat_{k}__ {stat_types[k]}"
+                              for k in self.state_stats),
                 )
-                if os.environ.get("PREGEL_PROF"):
-                    rest = time.monotonic() - t0 - t_plan - t_ck
-                    print(
-                        f"[pregel-prof] step {iteration}: plan={t_plan:.2f}s "
-                        f"checkpoint={t_ck:.2f}s stats+rest={rest:.2f}s",
-                        file=sys.stderr,
-                    )
+                joined = joined.crossJoin(F.broadcast(stat_row))
+            # -- update (pregel.rs:859-865): the reference re-joins the
+            # original vertices frame to re-attach static props every
+            # superstep; since only ``vcol`` evolves, carrying the props
+            # through the apply select is semantically identical and
+            # saves one shuffle join + one source re-scan per superstep.
+            evolving = [vcol] + [sc.name for sc in self.extra_state]
+            carry = [c for c in state_cols if c not in evolving]
+            prev_names = {c: f"__prev_{i}__" for i, c in enumerate(evolving)}
+            nxt = joined.select(
+                *[F.col(f"`{c}`") for c in carry],
+                *[
+                    F.col(f"`{c}`").alias(p)
+                    for c, p in prev_names.items()
+                ],
+                *([F.col("__msg_cnt__")] if count_msgs else []),
+                # every v_prog sees the PRE-update values of all state
+                # columns (they come from ``joined``) — synchronous BSP
+                _resolve(self.v_prog, ctx).alias(vcol),
+                *[
+                    _resolve(sc.v_prog, ctx).alias(sc.name)
+                    for sc in self.extra_state
+                ],
+            )
 
-                if self.tolerance is not None and delta is not None \
-                        and not math.isfinite(delta):
-                    # NaN <= tol is False: without this the run would
-                    # silently spin on to max_iterations
-                    raise ValueError(
-                        f"superstep {iteration}: convergence delta is "
-                        f"{delta}; v_prog produced a non-finite "
-                        f"'{vcol}' value"
+            # -- stats ride the materialization pass (Observation):
+            # CollectMetrics accumulates convergence delta, change counts,
+            # message totals, and the user state-stats DURING the
+            # localCheckpoint job itself — zero extra Spark jobs per
+            # superstep (an explicit .agg() action measured ~0.6-0.9
+            # s/superstep even over the in-memory state).
+            observe = {}
+            if collect_stats:
+                any_changed = None
+                for c, p in prev_names.items():
+                    ch = ~F.col(f"`{c}`").eqNullSafe(F.col(p))
+                    any_changed = ch if any_changed is None else (any_changed | ch)
+                observe = {
+                    "n": F.count(F.lit(1)),
+                    "delta": F.max(
+                        F.abs(F.col(f"`{vcol}`") - F.col(prev_names[vcol]))
                     )
-                if self.checkpoint_store is not None and self.checkpoint_interval \
-                        and iteration % self.checkpoint_interval == 0:
-                    self.checkpoint_store.write(
-                        iteration, current, self.metrics[-1]
-                    )
-                    last_written = iteration
+                    if self.tolerance is not None
+                    else F.max(F.lit(None).cast("double")),
+                    "changed": F.sum(any_changed.cast("int")),
+                    "messages": F.sum(F.coalesce(F.col("__msg_cnt__"), F.lit(0)))
+                    if count_msgs
+                    else F.max(F.lit(None).cast("long")),
+                    **{f"__ss_{k}__": e for k, e in self.state_stats.items()},
+                }
 
-                if self.tolerance is not None and delta is not None \
-                        and delta <= self.tolerance:
-                    break
-                if self.check_exact and changed == 0:
-                    break
-                iteration += 1
-        except BaseException:
-            _free_checkpoint(current)
-            raise
+            # -- materialize: truncate lineage (≡ collect(), pregel.rs:867) --
+            nxt = r.keep(nxt, **observe)
+            stats = r.seen
+            delta = stats.get("delta")
+            changed = stats.get("changed")
+            if observe:
+                last_stats.update(
+                    {k: stats[f"__ss_{k}__"] for k in self.state_stats}
+                )
+            current = nxt.drop(*prev_names.values(), "__msg_cnt__")
+            current._ck_rdd = nxt._ck_rdd
 
+            self.metrics.append(
+                SuperstepMetrics(
+                    superstep=iteration,
+                    wall_seconds=time.monotonic() - t0,
+                    vertices=stats.get("n", -1),
+                    delta=float(delta) if delta is not None else None,
+                    changed=changed,
+                    messages=stats.get("messages"),
+                )
+            )
+            if self.tolerance is not None and delta is not None \
+                    and not math.isfinite(delta):
+                # NaN <= tol is False: without this the run would
+                # silently spin on to max_iterations
+                raise ValueError(
+                    f"superstep {iteration}: convergence delta is "
+                    f"{delta}; v_prog produced a non-finite "
+                    f"'{vcol}' value"
+                )
+            if self.checkpoint_store is not None and self.checkpoint_interval \
+                    and iteration % self.checkpoint_interval == 0:
+                self.checkpoint_store.write(
+                    iteration, current, self.metrics[-1]
+                )
+                last_written = iteration
+
+            converged = (
+                self.tolerance is not None and delta is not None
+                and delta <= self.tolerance
+            ) or (self.check_exact and changed == 0)
+            return current, converged
+
+        fp = iterate(
+            superstep0, superstep, self.max_iterations - start_step + 1,
+            single_jvm,
+        )
+        current = fp.state
         if self.checkpoint_store is not None:
-            final_step = min(iteration, self.max_iterations)
+            final_step = min(start_step + fp.rounds - 1, self.max_iterations)
             if final_step == last_written:
                 # the interval rule already wrote this superstep's state
                 self.checkpoint_store._mark_final(final_step)

@@ -431,14 +431,14 @@ def test_label_propagation(spark):
 
 
 def test_label_propagation_frees_its_blocks_on_error(spark, monkeypatch):
-    from pregel_rs_spark import algorithms as algorithms_mod
+    from pregel_rs_spark import pregel as pregel_mod
 
     def persistent():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     baseline = persistent()
     calls = []
-    real = algorithms_mod.truncate_plan
+    real = pregel_mod.truncate_plan
 
     def failing_in_iteration_2(df, *a, **kw):
         calls.append(df.columns)
@@ -446,7 +446,7 @@ def test_label_propagation_frees_its_blocks_on_error(spark, monkeypatch):
             raise RuntimeError("iteration 2 fails")
         return real(df, *a, **kw)
 
-    monkeypatch.setattr(algorithms_mod, "truncate_plan", failing_in_iteration_2)
+    monkeypatch.setattr(pregel_mod, "truncate_plan", failing_in_iteration_2)
     e = spark.createDataFrame(EDGES_C, "subject long, object long")
     with pytest.raises(RuntimeError, match="iteration 2 fails"):
         label_propagation(GraphFrame.from_edges(e), max_iterations=5)
@@ -2550,3 +2550,106 @@ def test_edge_betweenness_path_and_diamond(spark):
 
     with _p.raises(ValueError):
         edge_betweenness(path, sources=[], max_hops=2)
+
+
+# A triangle-rich core (K4 on 1, 2, 3, 9) with a path hanging off it: every
+# iterative algorithm below needs at least two rounds on it.
+EDGES_ROUNDS = [(1, 2), (1, 3), (2, 3), (1, 9), (2, 9), (3, 9),
+                (3, 4), (4, 5), (5, 6), (6, 7), (7, 8)]
+
+
+def _iterative_runs():
+    from pregel_rs_spark import algorithms as A
+    from pregel_rs_spark.operators.redirects import resolve_redirects
+
+    return {
+        "k_core": lambda g: A.k_core(g, k=2),
+        "k_truss": lambda g: A.k_truss(g, k=3),
+        "maximal_independent_set": A.maximal_independent_set,
+        "maximal_matching": A.maximal_matching,
+        "topo_layers": lambda g: A.topo_layers(g, max_layers=10),
+        "minimum_spanning_forest": A.minimum_spanning_forest,
+        "greedy_coloring": A.greedy_coloring,
+        "landmark_distances": lambda g: A.landmark_distances(g, [1], 4),
+        # reversed, so that max ids flow along the edges: the forward
+        # coloring's nested Pregel run needs a second superstep
+        "strongly_connected_components": lambda g: (
+            A.strongly_connected_components(GraphFrame.from_edges(
+                g.edges.select(
+                    F.col("object").alias("subject"),
+                    F.col("subject").alias("object"),
+                )
+            ))
+        ),
+        "coreness": A.coreness,
+        "densest_subgraph": lambda g: A.densest_subgraph(g, epsilon_num=0),
+        "resolve_redirects": lambda g: resolve_redirects(
+            g.edges.select("subject", "object")
+        ),
+    }
+
+
+def _persistent_rdds(spark) -> set:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+@pytest.mark.parametrize("name", sorted(_iterative_runs()))
+def test_blocks_freed_when_round_2_fails(spark, monkeypatch, name):
+    """A round that raises leaves no block of the run behind: every block
+    the loop (or a run nested in one of its rounds) materialized is freed."""
+    from pregel_rs_spark import pregel as pregel_mod
+
+    real = pregel_mod.Round.keep
+
+    def failing_in_round_2(self, df, **observe):
+        if self.n == 2:
+            raise RuntimeError("round 2 fails")
+        return real(self, df, **observe)
+
+    g = GraphFrame.from_edges(
+        spark.createDataFrame(EDGES_ROUNDS, "subject long, object long")
+    )
+    baseline = _persistent_rdds(spark)
+    monkeypatch.setattr(pregel_mod.Round, "keep", failing_in_round_2)
+    with pytest.raises(RuntimeError, match="round 2 fails"):
+        _iterative_runs()[name](g)
+    g.unpersist()
+    assert _persistent_rdds(spark) <= baseline
+
+
+@pytest.mark.parametrize("name", ["k_core", "landmark_distances"])
+def test_every_job_is_a_materialization(spark, monkeypatch, name):
+    """Convergence scalars ride the materialization jobs: a run launches
+    exactly one Spark job per block it materializes, and none besides."""
+    from pregel_rs_spark import algorithms as algorithms_mod
+    from pregel_rs_spark import pregel as pregel_mod
+
+    materialized = []
+    real = pregel_mod.truncate_plan
+
+    def counting(df, *a, **kw):
+        materialized.append(df.columns)
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(pregel_mod, "truncate_plan", counting)
+    monkeypatch.setattr(algorithms_mod, "truncate_plan", counting)
+    g = GraphFrame.from_edges(
+        spark.createDataFrame(EDGES_ROUNDS, "subject long, object long")
+    )
+    sc = spark.sparkContext
+    group = f"jobs-{name}"
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    # AQE submits each shuffle stage as a job of its own; off, a job is
+    # exactly one action
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        _iterative_runs()[name](g)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    # two rounds at least, each one job per materialized frame
+    assert len(materialized) >= 3
+    assert len(jobs) == len(materialized), (jobs, materialized)

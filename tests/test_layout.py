@@ -10,8 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pregel_rs_spark import GraphFrame
-from pregel_rs_spark import algorithms as algorithms_mod
 from pregel_rs_spark import graphframe as graphframe_mod
+from pregel_rs_spark import pregel as pregel_mod
 from pregel_rs_spark.algorithms import connected_components, pagerank, spam_mass
 from pregel_rs_spark.columns import OBJECT, SUBJECT, edge_
 from pregel_rs_spark.pregel import _free_checkpoint
@@ -206,8 +206,9 @@ def test_second_star_cc_reads_the_layout(spark, forest):
     assert cold - warm == Counter([301, *vertex_distinct]), (cold, warm)
     assert not warm - cold, (cold, warm)
     # each round's exchanges once — neighbourhood min, join, small-star
-    # window, distinct — plus its signature; then the result's mapping
-    assert sum(warm.values()) <= 5 * results[1].cc_rounds + 1, warm
+    # window, distinct (its signature rides the round's own job); then the
+    # result's mapping
+    assert sum(warm.values()) <= 4 * results[1].cc_rounds + 1, warm
 
     layout = _layout_rdds(forest)
     assert len(layout) == 2
@@ -223,7 +224,7 @@ def test_second_star_cc_reads_the_layout(spark, forest):
 def test_star_cc_frees_its_blocks_on_error(spark, forest, monkeypatch):
     baseline = _persistent_rdds(spark)
     calls = []
-    real = algorithms_mod.truncate_plan
+    real = pregel_mod.truncate_plan
 
     def failing_in_round_2(df, *a, **kw):
         calls.append(df.columns)
@@ -231,7 +232,7 @@ def test_star_cc_frees_its_blocks_on_error(spark, forest, monkeypatch):
             raise RuntimeError("round 2 fails")
         return real(df, *a, **kw)
 
-    monkeypatch.setattr(algorithms_mod, "truncate_plan", failing_in_round_2)
+    monkeypatch.setattr(pregel_mod, "truncate_plan", failing_in_round_2)
     with pytest.raises(RuntimeError, match="round 2 fails"):
         connected_components(forest, method="star")
     layout = _layout_rdds(forest)
@@ -270,14 +271,14 @@ def test_star_cc_contracts_each_partition_once_per_call(spark, crawl, monkeypatc
     re-run for every reader of round 1's edges), and on a warm call no
     exchange moves one record per edge."""
     contractions = []
-    real = algorithms_mod.truncate_plan
+    real = pregel_mod.truncate_plan
 
     def recording(df, *a, **kw):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         contractions.append(plan.count("MapInArrow"))
         return real(df, *a, **kw)
 
-    monkeypatch.setattr(algorithms_mod, "truncate_plan", recording)
+    monkeypatch.setattr(pregel_mod, "truncate_plan", recording)
     labels = []
     for group in ("contract-first", "contract-second"):
         contractions.clear()
@@ -299,13 +300,13 @@ def test_star_cc_contracts_on_one_task_per_core(spark, crawl, monkeypatch):
     (each Python task has a fixed cost), whatever the partition count."""
     cores = spark.sparkContext.defaultParallelism
     parts = []
-    real = algorithms_mod.truncate_plan
+    real = pregel_mod.truncate_plan
 
     def recording(df, *a, **kw):
         parts.append(df.rdd.getNumPartitions())
         return real(df, *a, **kw)
 
-    monkeypatch.setattr(algorithms_mod, "truncate_plan", recording)
+    monkeypatch.setattr(pregel_mod, "truncate_plan", recording)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(4 * cores))
     try:

@@ -626,3 +626,16 @@ def test_non_finite_delta_fails_loudly(spark, graph_b):
         engine.run()
     assert [m.superstep for m in engine.metrics] == [1]
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
+
+
+def test_truncate_plan_rewrap_failure_raises(spark, monkeypatch):
+    """No silent fallback to the plain checkpoint: a failed rewrap (the
+    Spark-internal constructors changed) raises, naming the Spark version."""
+    from pregel_rs_spark import pregel as pregel_mod
+
+    def incompatible(*a, **kw):
+        raise TypeError("constructor signature changed")
+
+    monkeypatch.setattr(pregel_mod, "DataFrame", incompatible)
+    with pytest.raises(RuntimeError, match=f"Spark {spark.version}"):
+        pregel_mod.truncate_plan(spark.range(10))

@@ -2,14 +2,17 @@
 __spark_entry__.queries()[k] and oracle_sql()[k] side by side at sf0.01,
 compare row count + column names + order-insensitive values.
 
-Usage: PYTHONPATH=/root/repo python tools/check_oracle.py [sf_dir] [only...]
+Usage: python tools/check_oracle.py [sf_dir] [only...]
+
+Checks the code of the checkout this script sits in.
 """
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
