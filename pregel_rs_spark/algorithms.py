@@ -289,13 +289,8 @@ def connected_components_star(
     (the layout's clustering on ``subject`` only makes it shrink more).
     One task per core, not per layout partition, because each Python task
     costs a fixed ~0.3 CPU-s of worker set-up.  The pass shuffles nothing
-    and is materialized once, as round 1's input.  Each Python worker folds
-    its partition's Arrow batches into a running forest
-    (:func:`pregel_rs_spark.unionfind.contract_partition`), so it holds
-    O(partition vertices + one batch) memory, not the partition's edges;
-    that memory is outside Spark's memory manager
-    (``spark.executor.pyspark.memory`` caps it, if set).  The workers need
-    NumPy and pyarrow on the executors.
+    and is materialized once, as round 1's input; its job also observes
+    its input rows and its output rows ``n``.
 
     Per round, each shuffling on vertex ids: the neighbourhood-min
     aggregate, the join back to it, the small-star window on ``x`` and a
@@ -305,12 +300,33 @@ def connected_components_star(
     rounds total vs O(diameter) supersteps for min-label (a 10^8-long
     chain needs ~27 rounds here, 10^8 there).
 
+    The finish: once the active edge set holds no more rows than the
+    contraction's tasks read on average (``bound`` = its input rows,
+    observed on its job, over its task count: no knob sets it), whether
+    right after the contraction or after a round, the next round runs it
+    through the same union-find in one task (``coalesce(1)``) and stops:
+    the exact components, with no star round and no shuffle (the
+    "filtering" finish of Lattanzi et al., SPAA 2011).  The contraction
+    and every round keep the connectivity of the edges they read, so a
+    union-find over the whole active set is exact.  On a graph whose
+    active set never shrinks to the bound the rounds run as above.
+
+    Memory: each Python worker folds its task's Arrow batches into a
+    running forest (:func:`pregel_rs_spark.unionfind.contract_partition`),
+    so it holds O(task vertices + one batch), not the task's edges, and
+    the finish's one task reads at most ``bound`` rows, no more than a
+    contraction task read on average: the finish asks no more of one
+    worker than the contraction did.  That memory is outside Spark's
+    memory manager (``spark.executor.pyspark.memory`` caps it, if set).
+    The workers need NumPy and pyarrow on the executors.
+
     Returns ``(vertex_id, …props, component)`` — identical output contract
     and values (component = min vertex id) as method="label"; the lazy
     result reads the graph's memoized vertex table until graph.unpersist().
     """
     if max_iterations < 1:
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
+    from pyspark.sql import Observation
     from pyspark.sql.window import Window
 
     # round 1 starts from the edge layout with each partition contracted to
@@ -328,13 +344,31 @@ def connected_components_star(
     vertices = graph._degree_table().select(*graph.vertices.columns)
     # one contraction task per core, not per layout partition: a Python
     # task costs a fixed ~0.3 CPU-s of worker set-up whatever it carries,
-    # and merging co-located partitions (no shuffle) only contracts more
+    # and merging co-located partitions (no shuffle) only contracts more.
+    # Its input rows ride its own job, observed below the coalesce
     cores = layout.sparkSession.sparkContext.defaultParallelism
-    contracted = layout.coalesce(cores).mapInArrow(
-        contract_partition, layout.schema
+    read = Observation()
+    contracted = (
+        layout.observe(read, F.count(F.lit(1)).alias("rows"))
+        .coalesce(cores)
+        .mapInArrow(contract_partition, layout.schema)
     )
+    count = F.count(F.lit(1))
+    bound = 0.0
+
+    def contract(r) -> DataFrame:
+        nonlocal bound
+        E = r.keep(contracted, n=count)
+        # the average share of a contraction task (one per partition of
+        # its output): the finish's one task reads no more than that
+        bound = read.get["rows"] / E._ck_rdd.getNumPartitions()
+        return E
 
     def star_round(E: DataFrame, r) -> tuple[DataFrame, bool]:
+        if r.prev["n"] <= bound:
+            # the finish: one union-find over the whole active set
+            finish = E.coalesce(1).mapInArrow(contract_partition, E.schema)
+            return r.keep(finish), True
         # -- large-star: neighbourhood over BOTH directions ----------------
         d = E.select(F.col("x").alias("u"), F.col("c").alias("v")).unionAll(
             E.select(F.col("c").alias("u"), F.col("x").alias("v"))
@@ -360,14 +394,10 @@ def connected_components_star(
             .distinct()
         )
         # fixpoint when the edge set's (count, hash) signature repeats
-        E = r.keep(
-            nxt, n=F.count(F.lit(1)), h=F.expr("bit_xor(xxhash64(x, c))")
-        )
+        E = r.keep(nxt, n=count, h=F.expr("bit_xor(xxhash64(x, c))"))
         return E, r.seen == r.prev
 
-    E, rounds, _ = iterate(
-        lambda r: r.keep(contracted), star_round, max_iterations
-    )
+    E, rounds, _ = iterate(contract, star_round, max_iterations)
 
     # fixpoint: every row is (vertex, component-min); vertices with no row
     # (isolated or the minimum itself) are their own component

@@ -660,27 +660,24 @@ class Pregel:
         stat_types: dict[str, str] = {}
 
         def superstep0(r: Round) -> DataFrame:
-            state = r.keep(current)
-            if self.state_stats:
-                # Bootstrap user state-stats over the initial state (one
-                # cheap agg on the checkpointed frame); thereafter they
-                # ride each superstep's materialization.
-                row = state.agg(*[
-                    e.alias(f"__ss_{k}__") for k, e in self.state_stats.items()
-                ]).collect()[0]
-                last_stats.update(
-                    {k: row[f"__ss_{k}__"] for k in self.state_stats}
-                )
-                # one fixed injection schema per run (stable plan → codegen
-                # cache hit); integers stay bigint (exact past 2^53),
-                # everything else double, NULL stats stay NULL rather than
-                # silently becoming 0.
-                stat_types.update({
-                    k: "bigint"
-                    if isinstance(v, int) and not isinstance(v, bool)
-                    else "double"
-                    for k, v in last_stats.items()
-                })
+            # user state-stats over the initial state ride its
+            # materialization, as they ride every superstep's
+            state = r.keep(current, **{
+                f"__ss_{k}__": e for k, e in self.state_stats.items()
+            })
+            last_stats.update(
+                {k: r.seen[f"__ss_{k}__"] for k in self.state_stats}
+            )
+            # one fixed injection schema per run (stable plan → codegen
+            # cache hit); integers stay bigint (exact past 2^53),
+            # everything else double, NULL stats stay NULL rather than
+            # silently becoming 0.
+            stat_types.update({
+                k: "bigint"
+                if isinstance(v, int) and not isinstance(v, bool)
+                else "double"
+                for k, v in last_stats.items()
+            })
             return state
 
         last_written = None  # superstep of the last interval checkpoint

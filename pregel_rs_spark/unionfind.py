@@ -1,5 +1,8 @@
 """Per-partition union-find: the contraction that starts star connected
-components (:func:`pregel_rs_spark.algorithms.connected_components_star`).
+components (:func:`pregel_rs_spark.algorithms.connected_components_star`),
+one task per core's share of the edge layout, and the one-task finish that
+ends it once the active edge set fits the average share of a contraction
+task.
 
 The module is registered with cloudpickle to be pickled by value, which
 touches only how this module's own functions are pickled.  Star CC runs

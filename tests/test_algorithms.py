@@ -406,8 +406,9 @@ def test_connected_components_star_extremes(spark, id_type, partitions):
     assert rows[0] == rows[1]
     assert len({c for _, c in rows[0]}) > 1
     if partitions == 1:
-        # the contraction alone finishes the job; round 2 only confirms it
-        assert star.cc_rounds == 2
+        # one contraction task reads every edge, so the bound admits its
+        # forest: round 1 is the finish
+        assert star.cc_rounds == 1
 
 
 def test_connected_components_star_rejects_no_rounds(spark):
@@ -2653,3 +2654,48 @@ def test_every_job_is_a_materialization(spark, monkeypatch, name):
     # two rounds at least, each one job per materialized frame
     assert len(materialized) >= 3
     assert len(jobs) == len(materialized), (jobs, materialized)
+
+
+def test_pagerank_stats_bootstrap_rides_a_materialization(spark, monkeypatch):
+    """The dangling mass over PageRank's initial state is observed on the
+    initial state's own materialization: on a graph with dangling vertices
+    a call launches one job per block it materializes, plus only the
+    broadcast of each superstep's stats row, PageRank's vertex counts and
+    the result's collect."""
+    from pregel_rs_spark import algorithms as algorithms_mod
+    from pregel_rs_spark import graphframe as graphframe_mod
+    from pregel_rs_spark import pregel as pregel_mod
+
+    materialized = []
+    real = pregel_mod.truncate_plan
+
+    def counting(df, *a, **kw):
+        materialized.append(df.columns)
+        return real(df, *a, **kw)
+
+    for mod in (pregel_mod, algorithms_mod, graphframe_mod):
+        monkeypatch.setattr(mod, "truncate_plan", counting)
+    # 4 and 5 dangle
+    g = GraphFrame.from_edges(spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (1, 5)], "subject long, object long"
+    ))
+    sc = spark.sparkContext
+    group = "jobs-pagerank-dangling"
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        res = pagerank(g, tol=None, max_iterations=4)
+        ranks = dict(map(tuple, res.select("vertex_id", "rank").collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        g.unpersist()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    supersteps = len(res.pregel_metrics)
+    assert supersteps == 4
+    # the edge layout, the degree table, the initial state, 4 supersteps
+    assert len(materialized) == 7, materialized
+    assert len(jobs) == len(materialized) + supersteps + 2, (jobs, materialized)
+    assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-12)

@@ -265,34 +265,109 @@ def crawl(spark):
     g.unpersist()
 
 
-def test_star_cc_contracts_each_partition_once_per_call(spark, crawl, monkeypatch):
-    """Round 1 starts from the layout contracted partition by partition:
-    one materialized ``MapInArrow`` plan per call (left lazy, it would
-    re-run for every reader of round 1's edges), and on a warm call no
-    exchange moves one record per edge."""
-    contractions = []
-    real = pregel_mod.truncate_plan
+def _plan_chain(df) -> list[str]:
+    """The optimized plan's node names, root first, down first children."""
+    plan, names = df._jdf.queryExecution().optimizedPlan(), []
+    while True:
+        names.append(plan.nodeName())
+        if plan.children().isEmpty():
+            return names
+        plan = plan.children().head()
 
-    def recording(df, *a, **kw):
+
+def _record_keeps(monkeypatch) -> list[dict]:
+    """Every block a run keeps: its round, its plan, the ``n`` its round's
+    input held (observed by the round before), what its own job observed
+    and how many partitions (tasks) it has."""
+    kept = []
+    real = pregel_mod.Round.keep
+
+    def recording(self, df, **observe):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
-        contractions.append(plan.count("MapInArrow"))
-        return real(df, *a, **kw)
+        chain = _plan_chain(df)
+        out = real(self, df, **observe)
+        kept.append({
+            "round": self.n, "plan": plan, "chain": chain,
+            "n_in": self.prev.get("n"), "seen": dict(self.seen),
+            "tasks": out._ck_rdd.getNumPartitions(),
+        })
+        return out
 
-    monkeypatch.setattr(pregel_mod, "truncate_plan", recording)
+    monkeypatch.setattr(pregel_mod.Round, "keep", recording)
+    return kept
+
+
+def _is_finish(block: dict) -> bool:
+    # one union-find task straight over the previous round's block
+    return block["chain"] == ["MapInArrow", "Repartition", "LogicalRDD"] \
+        and block["tasks"] == 1
+
+
+def _finish_bound(graph, kept) -> float:
+    """The contraction's input rows (the layout's edges that are not
+    self-loops) over its task count: the rows a contraction task read on
+    average."""
+    rows = graph.edges.filter(F.col(SUBJECT) != F.col(OBJECT)).count()
+    assert kept[0]["round"] == 0 and kept[0]["plan"].count("MapInArrow") == 1
+    return rows / kept[0]["tasks"]
+
+
+def _assert_finish_rule(kept, bound) -> None:
+    """After the contraction and after every round, the next round is the
+    finish exactly when the observed ``n`` fits the bound."""
+    for block in kept[1:]:
+        assert _is_finish(block) == (block["n_in"] <= bound), (block, bound)
+
+
+def test_star_cc_contracts_each_partition_once_per_call(spark, crawl, monkeypatch):
+    """Round 1 starts from the layout contracted partition by partition,
+    and the run ends in the one-task finish: exactly two materialized
+    ``MapInArrow`` plans per call, the contraction first (left lazy, it
+    would re-run for every reader of round 1's edges) and the finish
+    last, whose single task reads no more rows than the observed bound.
+    On a warm call no exchange moves one record per edge."""
+    kept = _record_keeps(monkeypatch)
     labels = []
     for group in ("contract-first", "contract-second"):
-        contractions.clear()
+        kept.clear()
         res = _in_group(
             spark, group, lambda: connected_components(crawl, method="star")
         )
         labels.append(_in_group(spark, group, res.collect))
-        # the first block materialized is the contraction, alone; no
-        # later plan reads it as anything but that block
-        assert contractions[0] == 1 and not any(contractions[1:]), contractions
+        contractions = [b["plan"].count("MapInArrow") for b in kept]
+        assert contractions[0] == 1 and contractions[-1] == 1, contractions
+        assert sum(contractions) == 2, contractions
+        # the finish reads the block the round before kept, nothing else
+        assert _is_finish(kept[-1]), kept[-1]["chain"]
+        assert kept[-1]["round"] == res.cc_rounds
+        bound = _finish_bound(crawl, kept)
+        _assert_finish_rule(kept, bound)
+        assert kept[-1]["n_in"] <= bound, (kept[-1], bound)
     assert sorted(labels[0]) == sorted(labels[1])
     assert len({r.component for r in labels[0]}) == 3
     warm = _shuffle_records(spark, "contract-second")
     assert warm and max(warm) < 1800, warm
+
+
+def test_star_cc_finishes_only_within_the_bound(spark, forest, monkeypatch):
+    """On ``forest`` the contraction drops no edge, so round 1's input is
+    above the bound and round 1 is a star round; the finish runs only
+    once the observed ``n`` falls to the bound, never on a larger set.
+    (Here it never does: every round keeps at least |V| − components =
+    236 rows, more than 301 edges over two or more tasks.)"""
+    kept = _record_keeps(monkeypatch)
+    star = connected_components(forest, method="star")
+    own = list(kept)
+    rows = [
+        sorted(map(tuple, r.select("vertex_id", "component").collect()))
+        for r in (star, connected_components(forest))
+    ]
+    assert rows[0] == rows[1]
+    bound = _finish_bound(forest, own)
+    _assert_finish_rule(own, bound)
+    assert own[0]["seen"]["n"] == 301 > bound
+    assert not _is_finish(own[1])
+    assert len(own) == star.cc_rounds + 1
 
 
 def test_star_cc_contracts_on_one_task_per_core(spark, crawl, monkeypatch):
