@@ -43,9 +43,7 @@ def _with_out_degrees(
     graph: GraphFrame, prepartitioned_edges: bool = False
 ) -> GraphFrame:
     """``graph`` over its memoized degree table (GraphFrame._degree_table),
-    or ``graph`` itself when its vertices already carry ``out_degree``."""
-    if "out_degree" in graph.vertices.columns:
-        return graph
+    which keeps a vertex table's own ``out_degree`` column."""
     return graph.with_vertices(graph._degree_table(prepartitioned_edges))
 
 
@@ -64,12 +62,19 @@ def pagerank(
     """Standard PageRank with damping and dangling-mass redistribution.
 
     Per-superstep dataflow: each vertex sends ``rank / out_degree`` along its
-    out-edges (receiver = Object); messages are sum-aggregated (Spark's
-    map-side partial combine collapses hub receivers before the shuffle);
-    the dangling mass ``Σ rank over out_degree==0`` is one scalar aggregate
-    on the checkpointed state, folded into the v_prog closure:
+    out-edges (receiver = Object); messages are sum-aggregated, combined
+    map-side once per core (the triplets are coalesced to one map task per
+    core), so each receiver gets at most ``cores`` partial rows per
+    superstep over the shuffle; the dangling mass ``Σ rank over
+    out_degree==0`` is one scalar aggregate on the checkpointed state,
+    folded into the v_prog closure:
 
         rank' = d * (msg + dangling/n) + (1-d)/n
+
+    The vertex and dangling counts are observed on the degree table's
+    materialization, once per graph.  The sums' association follows the
+    grouping of partial rows, so ranks at different core counts may differ
+    in the last bits.
 
     With ``weight=<edge column>`` (weighted PageRank — e.g. the host graph,
     where an edge carries the count of page-level links) each vertex instead
@@ -93,10 +98,13 @@ def pagerank(
     Returns ``(vertex_id, …props, out_degree, rank)``.
     """
     # The graph's memoized degree table: built on the first call,
-    # hash-partitioned like the Pregel state, so the n / dangling counts,
-    # the superstep-0 init and the loop all read the in-memory copy, and
-    # later calls on the same graph shuffle nothing but their messages.
+    # hash-partitioned like the Pregel state, so the superstep-0 init and
+    # the loop read the in-memory copy, and later calls on the same graph
+    # shuffle nothing but their messages.  Its n / dangling counts were
+    # observed on its own materialization: no job here.
     g = _with_out_degrees(graph, prepartitioned_edges)
+    n, n_dangling = graph._vertex_counts(prepartitioned_edges)
+    has_dangling = n_dangling > 0
     if weight is not None:
         # Total outgoing weight (the weighted fan-out denominator),
         # aggregated from the edge layout, which is already clustered on
@@ -114,11 +122,6 @@ def pagerank(
             VERTEX_ID, F.col("rank").alias("__warm_rank__")
         )
         g = g.with_vertices(g.vertices.join(prev, VERTEX_ID, "left"))
-    counts = g.vertices.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("out_degree") == 0).cast("long")).alias("n_dangling"),
-    ).collect()[0]
-    n, has_dangling = counts["n"], counts["n_dangling"] > 0
 
     # Dangling mass rides the engine's per-superstep stats action and is
     # injected as a broadcast COLUMN (PregelContext.stat_col), not a
@@ -655,10 +658,7 @@ def personalized_pagerank(
     if not sources:
         raise ValueError("personalized_pagerank needs ≥1 source vertex")
     g = _with_out_degrees(graph)
-    n_dangling = g.vertices.agg(
-        F.sum((F.col("out_degree") == 0).cast("long")).alias("nd")
-    ).collect()[0]["nd"]
-    has_dangling = (n_dangling or 0) > 0
+    has_dangling = graph._vertex_counts()[1] > 0
 
     from pregel_rs_spark.pregel import PregelContext
 

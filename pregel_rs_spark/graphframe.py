@@ -24,7 +24,7 @@ Scale notes (100 TB / 10^12-doc design point):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pregel_rs_spark.columns import OBJECT, SUBJECT, VERTEX_ID, alias, edge_
@@ -80,6 +80,9 @@ class GraphFrame:
         # with_vertices (same edges); the degree tables are this graph's.
         self._edge_layouts: dict[int, DataFrame] = {}
         self._degree_tables: dict[int, DataFrame] = {}
+        # each degree table's (vertices, dangling vertices), observed on
+        # the table's own materialization job
+        self._degree_counts: dict[int, tuple[int, int]] = {}
 
     # Read-only, so a memoized layout can never describe other data than
     # the graph it belongs to; derive a new graph instead.
@@ -109,6 +112,7 @@ class GraphFrame:
             _free_checkpoint(table)
         self._edge_layouts.clear()
         self._degree_tables.clear()
+        self._degree_counts.clear()
         return self
 
     # -- constructors ---------------------------------------------------------
@@ -196,7 +200,8 @@ class GraphFrame:
         which is already clustered on the group key: no edge exchange.
         A vertex table that already carries ``out_degree`` keeps its own
         column, so the table holds every vertex column unchanged: it is
-        also the graph's memoized vertex table."""
+        also the graph's memoized vertex table.  Its vertex and dangling
+        counts ride the same job (:meth:`_vertex_counts`)."""
         spark = self._edges.sparkSession
         p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         if p not in self._degree_tables:
@@ -210,6 +215,23 @@ class GraphFrame:
                 )
             # a no-op over the join, whose output is laid out so already
             table = table.repartition(p, VERTEX_ID)
+            counts = Observation()
+            table = table.observe(
+                counts,
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("out_degree") == 0).cast("long")).alias("dangling"),
+            )
             with _session_conf(spark, _LOOP_CONF):
                 self._degree_tables[p] = truncate_plan(table)
+            seen = counts.get
+            self._degree_counts[p] = (seen["n"], seen["dangling"] or 0)
         return self._degree_tables[p]
+
+    def _vertex_counts(self, prepartitioned: bool = False) -> tuple[int, int]:
+        """``(vertices, dangling vertices)`` of :meth:`_degree_table` —
+        the vertices and those with ``out_degree == 0`` — as observed on
+        the table's materialization: memoized with the table, no job of
+        their own."""
+        self._degree_table(prepartitioned)
+        p = int(self._edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return self._degree_counts[p]

@@ -36,10 +36,11 @@ Scale design (10^12-doc / 100 TB):
     partitions and materialized (``GraphFrame._edge_layout``), then reused
     by every superstep join and every later run on the same graph until
     ``GraphFrame.unpersist()`` (no edge re-shuffle per iteration or run).
-  * message aggregation relies on Spark's map-side partial aggregation
-    (hub receivers collapse to ≤ numPartitions partial rows before the
-    shuffle); an explicit salted two-phase path is available via
-    ``with_salted_aggregation`` for non-algebraic cases.
+  * message aggregation relies on Spark's map-side partial aggregation,
+    run once per core (the messages are coalesced, without a shuffle, to
+    one map task per core), so hub receivers collapse to ≤ cores partial
+    rows before the shuffle; an explicit salted two-phase path is
+    available via ``with_salted_aggregation`` for non-algebraic cases.
   * AQE skew-join handles hub-vertex skew in the triplet joins; turn on
     ``spark.sql.adaptive.skewJoin.enabled`` (see session defaults in
     pregel_rs_spark.sources.io.get_spark).
@@ -125,6 +126,25 @@ def _referenced_names(df_schema_probe: DataFrame, exprs: list[Column]) -> set[st
     while refs.hasNext():
         names.add(str(refs.next().name()))
     return names
+
+
+def _combines_per_core(
+    messages: DataFrame,
+    aggregate: Callable[[DataFrame], DataFrame],
+    cores: int,
+) -> bool:
+    """Whether ``aggregate`` should read ``messages`` coalesced to
+    ``cores`` partitions: they span more partitions than that, and
+    aggregating them adds a shuffle exchange, whose map-side partial
+    aggregate the coalesce then runs once per core.  (If the aggregate
+    adds no exchange, the messages are already clustered on the group key
+    and a coalesce would cost one.)  Plans both frames; runs no job."""
+    plan = messages._jdf.queryExecution().executedPlan()
+    if plan.outputPartitioning().numPartitions() <= cores:
+        return False
+    aggregated = aggregate(messages)._jdf.queryExecution().executedPlan()
+    return aggregated.toString().count("Exchange ") > \
+        plan.toString().count("Exchange ")
 
 
 def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFrame:
@@ -655,6 +675,10 @@ class Pregel:
             isinstance(sm.payload, Column) for sm in self.send_messages
         )
         pruning_cache: Optional[tuple[bool, bool]] = None
+        # whether the message aggregate combines once per core, per set
+        # of triplet joins (see the aggregate in superstep)
+        per_core: dict[tuple[bool, bool], bool] = {}
+        cores = spark.sparkContext.defaultParallelism
 
         last_stats: dict = {}
         stat_types: dict[str, str] = {}
@@ -807,7 +831,16 @@ class Pregel:
                 self.checkpoint_store is not None or self.message_counts
             )
             agg_expr = _resolve(self.aggregate_expr, ctx).alias(PREGEL_MSG)
-            if self.salted_agg_partials > 1:
+
+            def aggregate(messages: DataFrame) -> DataFrame:
+                if self.salted_agg_partials <= 1:
+                    return messages.groupBy(_q(MSG_VERTEX_ID)).agg(
+                        agg_expr,
+                        *(
+                            [F.count(F.lit(1)).alias("__msg_cnt__")]
+                            if count_msgs else []
+                        ),
+                    )
                 # Explicit two-phase: partial agg on (receiver, salt),
                 # then COMBINE the partials per receiver.  The combiner
                 # is derived from the aggregate function, NOT the user
@@ -824,7 +857,7 @@ class Pregel:
                         "Non-decomposable aggregates (avg, collect_*, "
                         "F.expr text) must use the unsalted path, where "
                         "Spark's map-side partial aggregation still "
-                        "collapses hub receivers per partition."
+                        "collapses hub receivers per map task."
                     )
                 salt = F.pmod(
                     F.xxhash64(F.monotonically_increasing_id()),
@@ -839,23 +872,37 @@ class Pregel:
                 ).groupBy(_q(MSG_VERTEX_ID), F.col("__salt__")).agg(
                     agg_expr, *cnt_p
                 )
-                aggregated = partial.groupBy(_q(MSG_VERTEX_ID)).agg(
+                return partial.groupBy(_q(MSG_VERTEX_ID)).agg(
                     combine(_q(PREGEL_MSG)).alias(PREGEL_MSG),
                     *(
                         [F.sum("__msg_cnt__").alias("__msg_cnt__")]
                         if count_msgs else []
                     ),
                 )
-            else:
-                # Spark's hash aggregate already does map-side partial
-                # combine before the shuffle (two-phase for free).
-                aggregated = messages.groupBy(_q(MSG_VERTEX_ID)).agg(
-                    agg_expr,
-                    *(
-                        [F.count(F.lit(1)).alias("__msg_cnt__")]
-                        if count_msgs else []
-                    ),
+
+            # Spark's hash aggregate combines map-side before its shuffle,
+            # once per map task, so each receiver gets at most one partial
+            # row per task.  The combine runs once per core, not once per
+            # layout partition: the messages are coalesced (narrow, no
+            # shuffle; the triplet joins still run per layout partition)
+            # to one task per core, whenever they span more partitions
+            # than that and the aggregate shuffles them anyway.  Where
+            # the messages already lie clustered on their receiver (an
+            # object join exchanged the triplets), the aggregate needs no
+            # exchange, and a coalesce would only add one.  A task's
+            # partial map holds at most its distinct receivers (≤ |V|
+            # rows) inside Spark's memory manager, which falls back to a
+            # sort-based aggregate that spills when it outgrows memory.
+            # The decision rests on the triplet joins alone; it is planned
+            # once per run for each set of joins.
+            joins = (need_subj or not closed, need_obj or not closed)
+            if joins not in per_core:
+                per_core[joins] = _combines_per_core(
+                    messages, aggregate, cores
                 )
+            aggregated = aggregate(
+                messages.coalesce(cores) if per_core[joins] else messages
+            )
 
             # -- apply: state ⟕ messages, v_prog (pregel.rs:843-854) --
             # Left join ≡ reference full join: message ids ⊆ vertex ids

@@ -86,8 +86,32 @@ def test_truncate_plan_cluster_mode_drops_partitioning_claim(cluster_spark):
     assert "Exchange" in plan
 
 
-def test_pagerank_matches_between_local_and_cluster(cluster_spark):
-    cluster_ranks = _ranks(cluster_spark)
+@pytest.mark.parametrize("partitions", [4, 8])
+def test_pagerank_matches_between_local_and_cluster(
+    cluster_spark, partitions, monkeypatch
+):
+    """At 8 shuffle partitions over the session's 4 executor cores each
+    superstep coalesces its messages to one map task per core, so the
+    combine runs across both executors; at 4 it does not."""
+    from pregel_rs_spark import pregel as pregel_mod
+    from pregel_rs_spark.pregel import _session_conf
+
+    plans = []
+    real = pregel_mod.Round.keep
+
+    def recording(self, df, **observe):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, df, **observe)
+
+    monkeypatch.setattr(pregel_mod.Round, "keep", recording)
+    cores = cluster_spark.sparkContext.defaultParallelism
+    with _session_conf(
+        cluster_spark, {"spark.sql.shuffle.partitions": str(partitions)}
+    ):
+        cluster_ranks = _ranks(cluster_spark)
+    # superstep 0 keeps the initial state; then 8 supersteps
+    coalesced = [f"Repartition {cores}, false" in p for p in plans]
+    assert coalesced == [False] + [partitions > cores] * 8, coalesced
     # reference values computed with the same engine in single-JVM mode are
     # pinned here (deterministic: fixed graph, fixed iterations, damping
     # 0.85) — regenerate with _ranks(local_session) if the fixture changes.

@@ -12,9 +12,14 @@ from pyspark.sql import functions as F
 from pregel_rs_spark import GraphFrame
 from pregel_rs_spark import graphframe as graphframe_mod
 from pregel_rs_spark import pregel as pregel_mod
-from pregel_rs_spark.algorithms import connected_components, pagerank, spam_mass
+from pregel_rs_spark.algorithms import (
+    connected_components,
+    max_value,
+    pagerank,
+    spam_mass,
+)
 from pregel_rs_spark.columns import OBJECT, SUBJECT, edge_
-from pregel_rs_spark.pregel import _free_checkpoint
+from pregel_rs_spark.pregel import _free_checkpoint, _session_conf
 
 HUB_FAN_IN = 600
 STEPS = {"tol": None, "max_iterations": 4}
@@ -33,8 +38,9 @@ def star(spark):
     g.unpersist()
 
 
-def _shuffle_records(spark, group: str) -> list[int]:
-    """Shuffle records written by each stage of the jobs under ``group``."""
+def _shuffle_stages(spark, group: str) -> list[tuple[int, int]]:
+    """``(tasks, shuffle records written)`` of each stage of the jobs
+    under ``group`` that wrote shuffle records, in stage order."""
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
@@ -42,14 +48,19 @@ def _shuffle_records(spark, group: str) -> list[int]:
     stage_ids = set()
     for jid in tracker.getJobIdsForGroup(group):
         stage_ids.update(tracker.getJobInfo(jid).stageIds)
-    records = []
+    stages = []
     for sid in sorted(stage_ids):
         info = tracker.getStageInfo(sid)
         if info is not None and info.numCompletedTasks:
             n = store.lastStageAttempt(sid).shuffleWriteRecords()
             if n:
-                records.append(n)
-    return records
+                stages.append((info.numTasks, n))
+    return stages
+
+
+def _shuffle_records(spark, group: str) -> list[int]:
+    """Shuffle records written by each stage of the jobs under ``group``."""
+    return [n for _, n in _shuffle_stages(spark, group)]
 
 
 def _in_group(spark, group: str, fn):
@@ -75,6 +86,7 @@ def _persistent_rdds(spark) -> set[int]:
 
 def test_second_pagerank_shuffles_only_messages(spark, star):
     partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cores = spark.sparkContext.defaultParallelism
     first = _ranks(spark, star, "layout-first", **STEPS)
     second = _ranks(spark, star, "layout-second", **STEPS)
     assert second == first
@@ -83,9 +95,10 @@ def test_second_pagerank_shuffles_only_messages(spark, star):
     warm = _shuffle_records(spark, "layout-second")
     # the first call lays the graph out: the edge repartition moves every edge
     assert max(cold) >= HUB_FAN_IN
-    # the second moves only combined messages and scalar aggregates — no
-    # edge, vertex or state exchange
-    assert warm and max(warm) <= partitions, warm
+    # the second moves only messages, combined once per map task, and a
+    # map task runs per core — no edge, vertex or state exchange, and no
+    # aggregate of the vertex counts
+    assert warm and max(warm) <= min(cores, partitions), warm
 
 
 def test_spam_mass_builds_one_layout(spark, star, monkeypatch):
@@ -390,3 +403,65 @@ def test_star_cc_contracts_on_one_task_per_core(spark, crawl, monkeypatch):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert parts[0] == cores, parts
     assert len({r.component for r in res}) == 3
+
+
+def _partitions(spark, n: int):
+    return _session_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
+
+
+@pytest.mark.parametrize("per_core", [1, 2])
+def test_pagerank_combines_messages_once_per_core(spark, crawl, per_core):
+    """With more layout partitions than cores, each superstep's message
+    stage runs one map task per core, whose partial aggregate combines the
+    messages of every layout partition it reads: fewer records than one
+    combine per layout partition would write.  With one partition per core
+    the plan is the plain one, and the stage writes exactly that many.
+    Cold and warm ranks are equal."""
+    cores = spark.sparkContext.defaultParallelism
+    partitions = per_core * cores
+    group = f"per-core-{partitions}"
+    with _partitions(spark, partitions):
+        cold = _ranks(spark, crawl, f"{group}-cold", **STEPS)
+        warm = _ranks(spark, crawl, f"{group}-warm", **STEPS)
+        # Σ over the layout's partitions of their distinct receivers
+        per_partition = crawl._edge_layout().select(
+            F.spark_partition_id(), edge_(OBJECT)
+        ).distinct().count()
+    assert warm == cold
+    stages = _shuffle_stages(spark, f"{group}-warm")
+    # a warm call exchanges its supersteps' messages and nothing else
+    assert len(stages) == STEPS["max_iterations"], stages
+    for tasks, records in stages:
+        assert tasks == min(cores, partitions), stages
+        if partitions > cores:
+            assert records < per_partition, (stages, per_partition)
+        else:
+            assert records == per_partition, (stages, per_partition)
+
+
+def test_max_value_per_core_combine_is_exact(spark, crawl, monkeypatch):
+    """A max program's result does not depend on how the map-side combine
+    groups its messages: over twice as many layout partitions as cores
+    (the messages coalesced to one task per core) it equals, bit for bit,
+    the run at one partition per core, where no coalesce fires."""
+    cores = spark.sparkContext.defaultParallelism
+    graph = crawl.with_vertices(crawl.vertices.withColumn(
+        "value", (F.xxhash64(F.col("vertex_id")) % 100003).cast("double") / 7
+    ))
+    kept = _record_keeps(monkeypatch)
+    runs = {}
+    for partitions in (cores, 2 * cores):
+        kept.clear()
+        with _partitions(spark, partitions):
+            res = max_value(graph)
+            runs[partitions] = dict(
+                map(tuple, res.select("vertex_id", "max_value").collect())
+            )
+        coalesced = [f"Repartition {cores}, false" in b["plan"] for b in kept]
+        # superstep 0 keeps the initial state; every superstep after it
+        # coalesces its messages exactly when there are more partitions
+        assert len(coalesced) > 1
+        assert coalesced[1:] == [partitions > cores] * (len(kept) - 1), coalesced
+    assert runs[cores] == runs[2 * cores]
+    # every site's pages reach its maximum: three values in all
+    assert len(set(runs[cores].values())) == 3

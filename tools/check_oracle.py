@@ -4,6 +4,9 @@ compare row count + column names + order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [only...]
 
+Runs ``local[$SPARK_GRAFT_CPUS]`` (default 8) at ``max(cores, 8)`` shuffle
+partitions, as the test suite does.
+
 Checks the code of the checkout this script sits in.
 """
 
@@ -33,7 +36,7 @@ def canon(v):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(cores=8)
+    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
