@@ -7,6 +7,9 @@ JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+with, per query, the median wall time (``queries``) and the median Spark
+jobs, tasks and shuffle write bytes of its job group (``counters``).
+
 Headline set (mirrors __spark_entry__.queries, run at benchmark scale):
   * pagerank_1e6   — PageRank to 1e-6 L∞ convergence on the lineitem link
                      graph (the BASELINE.json north metric; the JSON also
@@ -39,6 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from perfbench.probes import spark_counters
 from pregel_rs_spark import GraphFrame
 from pregel_rs_spark.algorithms import (
     connected_components,
@@ -103,16 +107,32 @@ def main() -> None:
     # flagged two spurious "regressions" that way).  N=3 by default.
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
+    # deterministic work counters per query, next to its wall median: each
+    # repetition runs under a job group of its own, whose status-store
+    # totals are the regression signal a wall delta is checked against
+    counters: dict[str, dict[str, float]] = {}
+    sc = spark.sparkContext
+
     def bench(name, fn):
         import statistics
 
-        walls, out = [], None
-        for _ in range(repeats):
+        walls, runs, out = [], [], None
+        for i in range(repeats):
+            group = f"bench:{name}:{i}"
+            sc.setJobGroup(group, group)
             t0 = time.monotonic()
-            out = fn()
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
             walls.append(round(time.monotonic() - t0, 3))
+            runs.append(spark_counters(sc, group))
         timings[name] = round(statistics.median(walls), 3)
         all_runs[name] = walls
+        counters[name] = {
+            k: statistics.median(r[f"spark.{k}"] for r in runs)
+            for k in ("jobs", "tasks", "shuffle_write_bytes")
+        }
         return out
 
     # warm the JVM + read path once so q1 isn't charged session startup
@@ -547,6 +567,7 @@ def main() -> None:
         "cores": cores,
         "repeats_per_query": repeats,
         "runs": all_runs,
+        "counters": counters,
         **extra,
     }
     print(json.dumps(out))

@@ -3432,10 +3432,10 @@ def minimum_spanning_forest(
 
     Weights: if the edge table has a ``weight`` column the undirected
     simple view takes MIN(weight) per (a, b) pair; otherwise the
-    deterministic ``1 + (a + b) % 5`` (the :func:`sssp_weighted`
-    convention).  Ties are broken by the composite total order
-    ``(weight, a, b)`` — collision-free, so the MSF is UNIQUE and equals
-    Kruskal's result under the same order (exact oracle, no
+    deterministic ``1 + (a + b) % 5``, exact for any ids (the
+    :func:`sssp_weighted` convention).  Ties are broken by the composite
+    total order ``(weight, a, b)`` — collision-free, so the MSF is UNIQUE
+    and equals Kruskal's result under the same order (exact oracle, no
     tie-ambiguity).
 
     Per Borůvka round: every component picks its minimum incident
@@ -3469,8 +3469,12 @@ def minimum_spanning_forest(
     if has_w:
         und0 = base.groupBy("a", "b").agg(F.min("w").alias("w"))
     else:
+        # exact for any ids: a + b in decimal(20,0) cannot overflow
+        # (xxhash64 ids near 2^62 do in bigint, which ANSI mode raises),
+        # and its sign-preserving % 5 equals bigint's wherever that fits
+        a, b = (F.col(c).cast("decimal(20,0)") for c in "ab")
         und0 = base.distinct().withColumn(
-            "w", F.lit(1) + (F.col("a") + F.col("b")) % F.lit(5)
+            "w", (F.lit(1) + (a + b) % F.lit(5)).cast("long")
         )
     spark = graph.edges.sparkSession
     forest = spark.createDataFrame([], "vertex_a long, vertex_b long, weight long")

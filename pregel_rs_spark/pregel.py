@@ -45,7 +45,7 @@ Scale design (10^12-doc / 100 TB):
     ``spark.sql.adaptive.skewJoin.enabled`` (see session defaults in
     pregel_rs_spark.sources.io.get_spark).
   * per-superstep plan truncation (``truncate_plan``: localCheckpoint +
-    stats-free LogicalRDD re-wrap) bounds both RDD lineage AND driver-side
+    constant-stats LogicalRDD re-wrap) bounds both RDD lineage AND driver-side
     Catalyst work at O(1) per superstep instead of O(3^supersteps) — see
     ``truncate_plan`` for the measured pathology.
 """
@@ -178,9 +178,15 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
     ``InjectRuntimeFilter`` et al.) recurses through the entire checkpoint
     history — O(3^superstep).  Measured on this engine: superstep wall time
     flat at ~1 s until superstep ~15, then ×2.5 per superstep (41 s at
-    superstep 20).  Wrapping the materialized RDD in a fresh stats-free
-    ``LogicalRDD`` (via ``internalCreateDataFrame``) keeps every superstep
-    O(1) on the driver — verified flat for 30+ supersteps.
+    superstep 20).  Wrapping the materialized RDD in a fresh ``LogicalRDD``
+    (via ``internalCreateDataFrame``) whose ``originStats`` are the origin
+    plan's statistics evaluated ONCE, as a constant, keeps every superstep
+    O(1) on the driver — verified flat for 30+ supersteps — and keeps the
+    size estimate, so a small materialized side can still be broadcast
+    under the session's ``autoBroadcastJoinThreshold``.  An estimate past
+    int64 (63 bits) is dropped and the rewrap reports
+    ``defaultSizeInBytes``.  As in vanilla Spark, the estimate of an
+    ``explode`` or a Python-UDF output can understate its true size.
 
     ``localCheckpoint`` still does the heavy lifting (safe row copies,
     RDD-lineage truncation, MEMORY_AND_DISK blocks); we only re-wrap its
@@ -203,44 +209,30 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
         jvm = spark.sparkContext._jvm
         lr = ck._jdf.queryExecution().analyzed()  # the checkpoint LogicalRDD
         none = getattr(jvm.scala, "None$").__getattr__("MODULE$")
-        # Eagerly evaluate the checkpoint's origin statistics and pass them
-        # through as a CONSTANT.  The O(3^superstep) pathology came from
-        # *lazy* origin stats recursing through the whole checkpoint
-        # history; because the previous state's rewrap already carries
-        # constant stats, this evaluation visits one superstep's plan only
-        # — and the planner keeps honest sizes (so it can pick broadcast /
-        # shuffled-hash builds for the small vertex state instead of
-        # treating it as infinitely large).
-        try:
-            raw_stats = lr.stats()
-            # Clamp astronomically-large estimates.  Catalyst's join size
-            # estimation MULTIPLIES child sizeInBytes bounds, so a loop
-            # whose superstep is join+project only (no aggregate to reset
-            # the bound — e.g. pointer doubling) SQUARES the BigInt every
-            # round: measured 2.2e19762292 bytes (20 M digits) by round 20,
-            # at which point BigInt arithmetic inside the stats visitor —
-            # not the job — costs 20 s/round, doubling each round.  Any
-            # estimate beyond int64 carries zero planning information
-            # (every threshold comparison already says "huge"), so cap at
-            # the session's defaultSizeInBytes and drop the equally-
-            # inflated rowCount/column stats.  Sane estimates pass through
-            # untouched.  Pinned by test_truncate_plan_stats_clamped.
-            if raw_stats.sizeInBytes().bitLength() > 63:
-                cap = jvm.scala.math.BigInt.apply(
-                    spark._jsparkSession.sessionState().conf()
-                    .defaultSizeInBytes()
-                )
-                raw_stats = (
-                    jvm.org.apache.spark.sql.catalyst.plans.logical
-                    .Statistics(cap, none, raw_stats.attributeStats(), False)
-                )
-            const_stats = jvm.scala.Some(raw_stats)
-        except Exception:
-            const_stats = none
-        # Re-create the LogicalRDD with originStats/originConstraints = None
-        # (kills the recursion) while KEEPING outputPartitioning and
-        # outputOrdering.  Because Dataset.localCheckpoint preserves the
-        # physical plan's partitioning, and the superstep's final join runs
+        # The origin plan's statistics, evaluated once, ride the rewrap as
+        # a CONSTANT (what localCheckpoint's originStats give lazily): the
+        # planner keeps an honest size for materialized state, so a small
+        # side can still be broadcast under the session's
+        # autoBroadcastJoinThreshold.  The evaluation visits one round's
+        # plan only, since the previous state's rewrap is a constant too.
+        # Catalyst multiplies child sizes across a join, so a loop with no
+        # aggregate to reset the bound (pointer doubling) squares the
+        # estimate every round: BigInt arithmetic in the stats visitor
+        # then outgrows the job (20 s/round by round 20).  An estimate
+        # past int64 says only "huge", so it is dropped: None means
+        # defaultSizeInBytes.  (A capped Statistics is not built from
+        # Python: it needs a Scala BigInt, which py4j converts to a Python
+        # int on the way back.)  Pinned by test_truncate_plan_stats_clamped.
+        stats = lr.stats()
+        const_stats = (
+            jvm.scala.Some(stats)
+            if int(stats.sizeInBytes()).bit_length() <= 63 else none
+        )
+        # Re-create the LogicalRDD with those constant originStats and no
+        # originConstraints (kills the recursion) while KEEPING
+        # outputPartitioning and outputOrdering.  Because
+        # Dataset.localCheckpoint preserves the physical plan's
+        # partitioning, and the superstep's final join runs
         # hash-partitioned on vertex_id, the re-wrapped state *stays*
         # hash-partitioned on vertex_id across supersteps — the triplet
         # subject side and the apply join then need NO state re-shuffle
@@ -285,7 +277,7 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
         # plain checkpoint is no substitute: it restores the O(3^superstep)
         # driver-stats pathology and has no block handle to free.
         raise RuntimeError(
-            "truncate_plan: the stats-free LogicalRDD rewrap failed on "
+            "truncate_plan: the LogicalRDD rewrap failed on "
             f"Spark {df.sparkSession.version} ({type(ex).__name__}: {ex}); "
             "pin the rewrap against this Spark version "
             "(tests/test_pregel.py::test_truncate_plan_rewrap)"
@@ -733,6 +725,10 @@ class Pregel:
             # columns AND the graph is closed-world (vertex set derived
             # from the edges, so the filter is a no-op), that join is
             # dropped — for PageRank this halves the per-superstep joins.
+            # On an open-world graph the subject join always filters; the
+            # object join's filter matters only to messages sent to
+            # subjects, since a message to an unknown object finds no
+            # state row in the apply left join and is dropped there.
             sends = (
                 self.send_messages[:1]
                 if self.first_send_only
@@ -741,12 +737,7 @@ class Pregel:
             resolved = [
                 (sm.receiver, _resolve(sm.payload, ctx)) for sm in sends
             ]
-            closed = getattr(self.graph, "closed", False)
-            if not closed:
-                # open-world graphs need both inner joins for their
-                # filtering effect regardless of column usage
-                need_subj = need_obj = True
-            elif pruning_cache is not None:
+            if pruning_cache is not None:
                 need_subj, need_obj = pruning_cache
             else:
                 subj_names = {alias(SUBJECT, c) for c in state_cols}
@@ -760,6 +751,11 @@ class Pregel:
                     # correct) and let the real plan raise the user's
                     # actual analysis error with full context
                     need_subj = need_obj = True
+                if not getattr(self.graph, "closed", False):
+                    need_subj = True
+                    need_obj = need_obj or any(
+                        rcv is MessageReceiver.SUBJECT for rcv, _ in resolved
+                    )
                 if static_sends:
                     pruning_cache = (need_subj, need_obj)
             if self.active_filter is not None:
@@ -768,7 +764,7 @@ class Pregel:
                 # on a closed-world graph with subject-free payloads
                 need_subj = True
             triplets = edges
-            if need_subj or not closed:
+            if need_subj:
                 subj = base.select(
                     *[
                         F.col(f"`{c}`").alias(alias(SUBJECT, c))
@@ -787,7 +783,7 @@ class Pregel:
                     _q(alias(SUBJECT, VERTEX_ID)) == _q(alias("edge", SUBJECT)),
                     "inner",
                 )
-            if need_obj or not closed:
+            if need_obj:
                 obj = base.select(
                     *[
                         F.col(f"`{c}`").alias(alias(OBJECT, c))
@@ -895,7 +891,7 @@ class Pregel:
             # sort-based aggregate that spills when it outgrows memory.
             # The decision rests on the triplet joins alone; it is planned
             # once per run for each set of joins.
-            joins = (need_subj or not closed, need_obj or not closed)
+            joins = (need_subj, need_obj)
             if joins not in per_core:
                 per_core[joins] = _combines_per_core(
                     messages, aggregate, cores

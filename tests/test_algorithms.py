@@ -2015,6 +2015,25 @@ def test_msf_matches_kruskal(spark):
     assert len(got) == len(verts) - ncomp
 
 
+def test_msf_default_weight_on_hashed_ids(spark):
+    """The default weight ``1 + (a + b) % 5`` is exact for ids whose sum
+    leaves bigint (xxhash64 link-graph ids near 2^62): no ANSI overflow,
+    and the weights Kruskal's replay computes with Python ints."""
+    from pregel_rs_spark.algorithms import minimum_spanning_forest
+
+    base = 2**62 + 1
+    edges = [(base, base + 1), (base + 1, base + 3)]
+    assert all(a + b >= 2**63 for a, b in edges)
+    g = GraphFrame.from_edges(
+        spark.createDataFrame(edges, "subject long, object long")
+    )
+    got = sorted(
+        (r.vertex_a, r.vertex_b, r.weight)
+        for r in minimum_spanning_forest(g).collect()
+    )
+    assert got == _kruskal(edges)
+
+
 def test_msf_weight_column_and_disconnected(spark):
     """Explicit weight column (MIN over parallel edges) + disconnected
     input → one tree per component."""
@@ -2621,39 +2640,62 @@ def test_blocks_freed_when_round_2_fails(spark, monkeypatch, name):
 @pytest.mark.parametrize("name", ["k_core", "landmark_distances"])
 def test_every_job_is_a_materialization(spark, monkeypatch, name):
     """Convergence scalars ride the materialization jobs: a run launches
-    exactly one Spark job per block it materializes, and none besides."""
+    exactly one Spark job per block it materializes, plus one per
+    broadcast its materializations build, and none besides.  Run on edges
+    with no size estimate (an RDD-backed frame: nothing broadcasts) and on
+    a sized local relation, whose materialized states keep their small
+    estimates, so their joins broadcast."""
+    import pandas as pd
+
     from pregel_rs_spark import algorithms as algorithms_mod
     from pregel_rs_spark import pregel as pregel_mod
 
-    materialized = []
+    materialized, builds = [], []
     real = pregel_mod.truncate_plan
 
     def counting(df, *a, **kw):
         materialized.append(df.columns)
+        # with AQE off each broadcast exchange is built by a job of its own
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        builds.append(plan.count("BroadcastExchange"))
         return real(df, *a, **kw)
 
     monkeypatch.setattr(pregel_mod, "truncate_plan", counting)
     monkeypatch.setattr(algorithms_mod, "truncate_plan", counting)
-    g = GraphFrame.from_edges(
-        spark.createDataFrame(EDGES_ROUNDS, "subject long, object long")
-    )
     sc = spark.sparkContext
-    group = f"jobs-{name}"
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    # AQE submits each shuffle stage as a job of its own; off, a job is
-    # exactly one action
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup(group, group)
-    try:
-        _iterative_runs()[name](g)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    # two rounds at least, each one job per materialized frame
-    assert len(materialized) >= 3
-    assert len(jobs) == len(materialized), (jobs, materialized)
+    store = sc._jsc.sc().statusStore()
+    sources = {
+        "unsized": spark.createDataFrame(EDGES_ROUNDS, "subject long, object long"),
+        "sized": spark.createDataFrame(
+            pd.DataFrame(EDGES_ROUNDS, columns=["subject", "object"])
+        ),
+    }
+    for source, edges in sources.items():
+        materialized.clear()
+        builds.clear()
+        g = GraphFrame.from_edges(edges)
+        group = f"jobs-{name}-{source}"
+        prev = spark.conf.get("spark.sql.adaptive.enabled")
+        # AQE submits each shuffle stage as a job of its own; off, a job is
+        # exactly one action
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        sc.setJobGroup(group, group)
+        try:
+            _iterative_runs()[name](g)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.conf.set("spark.sql.adaptive.enabled", prev)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        checkpoints = [
+            j for j in jobs
+            if store.job(j).name().startswith("localCheckpoint ")
+        ]
+        # two rounds at least, each one job per materialized frame
+        assert len(materialized) >= 3
+        assert len(checkpoints) == len(materialized), (jobs, materialized)
+        assert len(jobs) == len(materialized) + sum(builds), (jobs, builds)
+        assert (sum(builds) > 0) == (source == "sized"), builds
 
 
 def test_pagerank_stats_bootstrap_rides_a_materialization(spark, monkeypatch):

@@ -362,6 +362,46 @@ def test_star_cc_contracts_each_partition_once_per_call(spark, crawl, monkeypatc
     assert warm and max(warm) < 1800, warm
 
 
+def test_warm_star_cc_on_sized_edges_writes_no_shuffle(spark, monkeypatch):
+    """On edges whose size Catalyst knows (a local relation here, a file
+    scan in a pipeline), materialized frames keep that estimate.  Three
+    complete sites of 2·cores² pages: each contraction task's forest (under
+    one row per page) fits the finish bound (edges / cores), so a warm
+    call is the contraction, the one-task finish and the result's join,
+    which is planned as a broadcast of the small component mapping: no
+    stage writes shuffle.  Labels equal label propagation's."""
+    import pandas as pd
+
+    cores = spark.sparkContext.defaultParallelism
+    rng = random.Random(11)
+    pages = 2 * cores**2
+    ids = rng.sample(range(1, 10**6), 3 * pages)
+    sites = [ids[i:i + pages] for i in range(0, 3 * pages, pages)]
+    edges = [(p, q) for site in sites for p in site for q in site if p != q]
+    graph = GraphFrame.from_edges(spark.createDataFrame(
+        pd.DataFrame(edges, columns=[SUBJECT, OBJECT])
+    ))
+    kept = _record_keeps(monkeypatch)
+    try:
+        labels = []
+        for group in ("sized-star-cold", "sized-star-warm"):
+            kept.clear()
+            res = _in_group(
+                spark, group, lambda: connected_components(graph, method="star")
+            )
+            labels.append(sorted(map(tuple, _in_group(
+                spark, group, res.select("vertex_id", "component").collect
+            ))))
+            # the contraction, then the finish
+            assert len(kept) == 2 and _is_finish(kept[1]), kept
+        assert _shuffle_stages(spark, "sized-star-warm") == []
+        label = connected_components(graph).select("vertex_id", "component")
+        assert labels[0] == labels[1] == sorted(map(tuple, label.collect()))
+        assert len({c for _, c in labels[1]}) == 3
+    finally:
+        graph.unpersist()
+
+
 def test_star_cc_finishes_only_within_the_bound(spark, forest, monkeypatch):
     """On ``forest`` the contraction drops no edge, so round 1's input is
     above the bound and round 1 is a star round; the finish runs only
@@ -465,3 +505,36 @@ def test_max_value_per_core_combine_is_exact(spark, crawl, monkeypatch):
     assert runs[cores] == runs[2 * cores]
     # every site's pages reach its maximum: three values in all
     assert len(set(runs[cores].values())) == 3
+
+
+def test_open_world_pagerank_drops_the_object_join(spark, crawl, monkeypatch):
+    """On an open-world graph whose sends all go to objects and read no
+    ``object.*`` column, a superstep keeps the subject join (it filters
+    edges from unknown vertices) but not the object join: a message to an
+    unknown vertex is dropped by the apply join.  So no exchange moves the
+    triplets on ``edge.object``, the messages are combined once per core
+    before their exchange, and the ranks equal the closed build's."""
+    cores = spark.sparkContext.defaultParallelism
+    plans = []
+    real = pregel_mod.truncate_plan
+
+    def recording(df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *a, **kw)
+
+    open_world = GraphFrame(crawl.vertices, crawl.edges)
+    assert not open_world.closed
+    try:
+        with _partitions(spark, 2 * cores):
+            closed = _ranks(spark, crawl, "closed-ranks", **STEPS)
+            monkeypatch.setattr(pregel_mod, "truncate_plan", recording)
+            ranks = _ranks(spark, open_world, "open-ranks", **STEPS)
+    finally:
+        open_world.unpersist()
+    supersteps = [p for p in plans if "msg.vertex_id" in p]
+    assert len(supersteps) == STEPS["max_iterations"], plans
+    for plan in supersteps:
+        assert "hashpartitioning(edge.object" not in plan, plan
+        assert f"Coalesce {cores}" in plan, plan
+    assert ranks.keys() == closed.keys()
+    assert max(abs(ranks[v] - closed[v]) for v in closed) <= 1e-12
