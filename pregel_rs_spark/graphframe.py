@@ -17,9 +17,11 @@ Scale notes (100 TB / 10^12-doc design point):
     OSDI 2014: partition once, memoize degrees): on first use the graph
     materializes its edges hash-partitioned and sorted on ``subject`` and
     its out-degree vertex table hash-partitioned on ``vertex_id``, both at
-    ``spark.sql.shuffle.partitions``; every later Pregel run reuses them
-    until :meth:`GraphFrame.unpersist`.  Like ``DataFrame.cache`` the
-    layout is a snapshot of the inputs at first use.
+    ``spark.sql.shuffle.partitions`` (a graph run again by Pregel runs that
+    ship small vertex state to the edges also lays its edges out on
+    ``object``); every later Pregel run reuses them until
+    :meth:`GraphFrame.unpersist`.  Like ``DataFrame.cache`` the layout is
+    a snapshot of the inputs at first use.
 """
 
 from __future__ import annotations
@@ -75,11 +77,15 @@ class GraphFrame:
         # Pregel engine drop vertex-side triplet joins whose only remaining
         # purpose would be endpoint filtering.
         self.closed = closed
-        # Materialized layouts keyed by spark.sql.shuffle.partitions.  The
-        # edge layouts are shared with every graph derived by
-        # with_vertices (same edges); the degree tables are this graph's.
-        self._edge_layouts: dict[int, DataFrame] = {}
+        # Materialized layouts keyed by spark.sql.shuffle.partitions (the
+        # edge layouts also by their partitioning column).  The edge
+        # layouts are shared with every graph derived by with_vertices
+        # (same edges); the degree tables are this graph's.
+        self._edge_layouts: dict[tuple[int, str], DataFrame] = {}
         self._degree_tables: dict[int, DataFrame] = {}
+        # the (partitions, key) edge layouts a Pregel run asked for and
+        # went without (see _layout_wanted); shared like the layouts
+        self._layout_asks: set[tuple[int, str]] = set()
         # each degree table's (vertices, dangling vertices), observed on
         # the table's own materialization job
         self._degree_counts: dict[int, tuple[int, int]] = {}
@@ -101,6 +107,7 @@ class GraphFrame:
         does not lay the edges out again."""
         g = GraphFrame(vertices, self._edges, closed=self.closed)
         g._edge_layouts = self._edge_layouts
+        g._layout_asks = self._layout_asks
         return g
 
     def unpersist(self) -> "GraphFrame":
@@ -168,29 +175,49 @@ class GraphFrame:
 
     # -- physical layout -----------------------------------------------------
 
-    def _edge_layout(self, prepartitioned: bool = False) -> DataFrame:
-        """The ``edge.*``-prefixed edges, hash-partitioned on
-        ``edge.subject`` at ``spark.sql.shuffle.partitions``, sorted within
-        partitions, and materialized with that partitioning and ordering
-        advertised — the Pregel triplet join's edge side, and the input
-        of an exchange-free out-degree aggregate.  Built once per
-        partition count; ``prepartitioned`` (the edges are already
-        hash-clustered on ``subject``, e.g. a bucketed scan) builds it by
-        the sort alone."""
+    def _edge_layout(
+        self, prepartitioned: bool = False, key: str = SUBJECT
+    ) -> DataFrame:
+        """The ``edge.*``-prefixed edges, hash-partitioned on ``edge.<key>``
+        (``subject`` or ``object``) at ``spark.sql.shuffle.partitions``,
+        sorted within partitions, and materialized with that partitioning
+        and ordering advertised — the Pregel triplet join's edge side, and,
+        keyed on ``subject``, the input of an exchange-free out-degree
+        aggregate.  Built once per partition count and key; a second key
+        re-keys the layout already built at that partition count, so the
+        edges' own plan runs once.  ``prepartitioned`` (the edges are
+        already hash-clustered on ``subject``, e.g. a bucketed scan) builds
+        the ``subject`` layout by the sort alone."""
         spark = self._edges.sparkSession
         p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if p not in self._edge_layouts:
-            edges = self._edges.select(
+        if (p, key) not in self._edge_layouts:
+            laid_out = [df for (q, _), df in self._edge_layouts.items() if q == p]
+            edges = laid_out[0] if laid_out else self._edges.select(
                 *[F.col(c).alias(alias("edge", c)) for c in self._edges.columns]
             )
-            key = edge_(SUBJECT)
-            if not prepartitioned:
-                edges = edges.repartition(p, key)
+            col = edge_(key)
+            # the declaration holds for the edges as given, not for
+            # another key's layout
+            if laid_out or not (prepartitioned and key == SUBJECT):
+                edges = edges.repartition(p, col)
             with _session_conf(spark, _LOOP_CONF):
-                self._edge_layouts[p] = truncate_plan(
-                    edges.sortWithinPartitions(key)
+                self._edge_layouts[p, key] = truncate_plan(
+                    edges.sortWithinPartitions(col)
                 )
-        return self._edge_layouts[p]
+        return self._edge_layouts[p, key]
+
+    def _layout_wanted(self, key: str) -> bool:
+        """Whether a Pregel run should read the edge layout on ``key``:
+        when it is built at ``spark.sql.shuffle.partitions``, or when a run
+        on these edges asked for it before.  A first ask is recorded and
+        answered no.  A layout on a second key is one more exchange of
+        every edge, which the messages one run saves need not repay; a
+        graph run again is being reused, and the layout serves every later
+        run."""
+        p = int(self._edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        wanted = (p, key) in self._edge_layouts or (p, key) in self._layout_asks
+        self._layout_asks.add((p, key))
+        return wanted
 
     def _degree_table(self, prepartitioned: bool = False) -> DataFrame:
         """:meth:`out_degrees_full`, materialized and hash-partitioned on

@@ -32,15 +32,27 @@ Deliberate divergences (documented in SURVEY §5.3):
 
 Scale design (10^12-doc / 100 TB):
   * edges are laid out once per GraphFrame, not per run: hash-partitioned
-    on ``subject`` at ``spark.sql.shuffle.partitions``, sorted within
-    partitions and materialized (``GraphFrame._edge_layout``), then reused
-    by every superstep join and every later run on the same graph until
+    on ``subject`` (on the receiver column for the "state" plan, below) at
+    ``spark.sql.shuffle.partitions``, sorted within partitions and
+    materialized (``GraphFrame._edge_layout``), then reused by every
+    superstep join and every later run on the same graph until
     ``GraphFrame.unpersist()`` (no edge re-shuffle per iteration or run).
-  * message aggregation relies on Spark's map-side partial aggregation,
-    run once per core (the messages are coalesced, without a shuffle, to
-    one map task per core), so hub receivers collapse to ≤ cores partial
-    rows before the shuffle; an explicit salted two-phase path is
-    available via ``with_salted_aggregation`` for non-algebraic cases.
+  * two superstep plans, chosen once per run after superstep 0:
+      - "messages" (the general plan): message aggregation relies on
+        Spark's map-side partial aggregation, run once per core (the
+        messages are coalesced, without a shuffle, to one map task per
+        core), so hub receivers collapse to ≤ cores partial rows before
+        the shuffle; an explicit salted two-phase path is available via
+        ``with_salted_aggregation`` for non-algebraic cases.
+      - "state" (one JVM, every send to the same receiver side, a small
+        fixed-width state, a graph that holds or reuses an edge layout on
+        that side): the edges are laid out on the receiver column instead
+        and the senders' state is broadcast into the triplet join —
+        GraphX's replicated vertex view (Gonzalez et al., OSDI 2014),
+        which in one JVM is an in-process handoff.  The messages then lie
+        where their receivers' state lies, and a superstep writes no
+        shuffle at all.  "Small" is ``_MAX_SHIPPED_STATE``, the largest
+        state measured to win.
   * AQE skew-join handles hub-vertex skew in the triplet joins; turn on
     ``spark.sql.adaptive.skewJoin.enabled`` (see session defaults in
     pregel_rs_spark.sources.io.get_spark).
@@ -145,6 +157,29 @@ def _combines_per_core(
     aggregated = aggregate(messages)._jdf.queryExecution().executedPlan()
     return aggregated.toString().count("Exchange ") > \
         plan.toString().count("Exchange ")
+
+
+def _fixed_row_bytes(df: DataFrame) -> Optional[int]:
+    """The size of one of ``df``'s rows as an ``UnsafeRow`` (a null-bit
+    set, then 8 bytes a field) when every column is of fixed width; None
+    when one is not (a string, an array, a map…), whose size no schema
+    tells."""
+    unsafe = df.sparkSession._jvm.org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    fields = df._jdf.schema().fields()
+    if not all(unsafe.isFixedLength(f.dataType()) for f in fields):
+        return None
+    return unsafe.calculateBitSetWidthInBytes(len(fields)) + 8 * len(fields)
+
+
+# The largest state, in UnsafeRow bytes (superstep 0's rows ×
+# _fixed_row_bytes), that a Pregel run ships to the edges (the "state"
+# plan, Pregel._run_locked): the largest measured to win, 300,000 PageRank
+# rows of 32 bytes.  On a 1 GB driver and 4 cores (tools/bench_state_plan.py,
+# docs/BENCH_NOTES.md), a warm PageRank call on a 300,000-page crawl took
+# 13.6 s on this plan against 16.5–17.5 s on the message plan; at 600,000
+# pages (19.2 MB) the driver had no memory to build the 64 MiB broadcast
+# relation, and the call failed, while the message plan ran in 28–31 s.
+_MAX_SHIPPED_STATE = 9_600_000
 
 
 def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFrame:
@@ -391,8 +426,9 @@ def iterate(
 
 
 # The superstep loop's join strategy (see Pregel._run_locked): every join is
-# co-partitioned, so AQE re-planning and broadcasts can only cost.  Graph
-# layouts are built under the same settings so they come out
+# co-partitioned, so AQE re-planning and size-driven broadcasts can only
+# cost; the one broadcast a "state" superstep makes is an explicit hint.
+# Graph layouts are built under the same settings so they come out
 # hash-partitioned at exactly ``spark.sql.shuffle.partitions``.
 _LOOP_CONF = {
     "spark.sql.adaptive.enabled": "false",
@@ -464,6 +500,14 @@ class SuperstepMetrics:
     delta: Optional[float] = None
     changed: Optional[int] = None
     messages: Optional[int] = None
+    # which superstep plan ran: "state" (the senders' state broadcast to a
+    # receiver-keyed edge layout, no shuffle) or "messages" (the messages
+    # exchanged to the receivers' state); see Pregel._run_locked
+    plan: str = "messages"
+    # the state size (bytes) that chose the plan: superstep 0's rows ×
+    # their UnsafeRow size; None when no "state" plan could run (several
+    # receiver sides, several executors, a state column of variable width)
+    state_bytes: Optional[int] = None
 
 
 @dataclass
@@ -583,14 +627,17 @@ class Pregel:
         # loop: every join is already co-partitioned (the graph's sorted
         # edge layout; state partitioning preserved through the checkpoint
         # rewrap; aggregated messages come out of the groupBy
-        # hash-partitioned) — so a broadcast join can never save a shuffle
-        # here, it only adds a driver-side collect+broadcast of a join side
-        # each superstep.  Catalyst's row-count estimates for the
+        # hash-partitioned), so a size-driven broadcast saves no shuffle
+        # there: it only adds a collect+broadcast of a join side each
+        # superstep.  Catalyst's row-count estimates for the
         # aggregated-message side are unreliable enough that it DID pick
         # broadcast at 120M-edge scale (6M-row broadcast per superstep, ~5×
-        # superstep blowup) — so broadcasts are disabled for the loop and
-        # restored after.  Forcing shuffled-hash was likewise tried and
-        # rejected (multi-million-row hash build per superstep + JIT
+        # superstep blowup) — so size-driven broadcasts are disabled for
+        # the loop and restored after.  The one broadcast that does save a
+        # shuffle, the senders' state over a receiver-keyed layout, is an
+        # explicit hint of the "state" plan, chosen on the OBSERVED state
+        # size (_run_locked).  Forcing shuffled-hash was likewise tried
+        # and rejected (multi-million-row hash build per superstep + JIT
         # churn); plain sort-merge over the pre-sorted sides wins.
         try:
             with _session_conf(spark, _LOOP_CONF):
@@ -606,14 +653,46 @@ class Pregel:
         # exchange); multi-executor runs re-exchange state each superstep
         # instead of remote-fetching checkpoint blocks — see truncate_plan.
         single_jvm = spark.sparkContext.master.startswith("local[")
+        sends = (
+            self.send_messages[:1]
+            if self.first_send_only
+            else self.send_messages
+        )
+        receivers = {sm.receiver for sm in sends}
 
-        # Edges: the graph's memoized layout — ``edge.*``-prefixed,
-        # hash-partitioned by the join key, sorted within partitions (the
-        # sort-merge join then skips re-sorting the edge side every
-        # superstep) and materialized.  Built on the graph's first run and
-        # reused by every later run on it: no edge shuffle per iteration,
-        # and none per run once the graph is laid out.
-        edges = self.graph._edge_layout(self.edges_prepartitioned)
+        # The superstep plan, chosen once per run by superstep0.
+        # "messages": the edges are laid out on ``subject``, and each
+        # superstep exchanges its combined messages to the receivers'
+        # state.  "state": the edges are laid out on the RECEIVER column
+        # and the senders' state is broadcast into the triplet join
+        # instead: the messages then lie in the partition of their
+        # receivers' state, so neither the message aggregate nor the apply
+        # join exchanges anything, and a superstep writes no shuffle.  It
+        # runs when all of these hold:
+        #   * one JVM, where a broadcast is an in-process handoff (across
+        #     executors it is a copy per executor, measured on one host
+        #     only);
+        #   * every send goes to the same receiver side;
+        #   * the state is of fixed width and at most _MAX_SHIPPED_STATE
+        #     bytes, the largest measured to win: the broadcast is rebuilt
+        #     on the driver every superstep, while the messages it saves
+        #     are combined per core, at most cores × |V| rows;
+        #   * the graph holds the receiver-keyed layout or is reusing it
+        #     (GraphFrame._layout_wanted): a second layout is one more
+        #     exchange of every edge, which one run's saved messages need
+        #     not repay (on bench.py's lineitem graph, 100 receivers:
+        #     400 message rows a superstep against 58,785 edges).
+        plan = "messages"
+        state_bytes: Optional[int] = None
+        # the side whose state a "state" superstep broadcasts
+        sender: Optional[MessageReceiver] = None
+        # Edges: the graph's memoized layout for the plan — ``edge.*``-
+        # prefixed, hash-partitioned by the join key, sorted within
+        # partitions (the sort-merge join then skips re-sorting the edge
+        # side every superstep) and materialized.  Built on the graph's
+        # first run and reused by every later run on it: no edge shuffle
+        # per iteration, and none per run once the graph is laid out.
+        edges: Optional[DataFrame] = None
 
         start_step = 1
         current = None
@@ -676,14 +755,37 @@ class Pregel:
         stat_types: dict[str, str] = {}
 
         def superstep0(r: Round) -> DataFrame:
+            nonlocal plan, state_bytes, sender, edges
+            row_bytes = (
+                _fixed_row_bytes(current)
+                if single_jvm and len(receivers) == 1 else None
+            )
             # user state-stats over the initial state ride its
-            # materialization, as they ride every superstep's
-            state = r.keep(current, **{
-                f"__ss_{k}__": e for k, e in self.state_stats.items()
-            })
+            # materialization, as they ride every superstep's; so does
+            # the row count the plan choice reads
+            observe = {f"__ss_{k}__": e for k, e in self.state_stats.items()}
+            if row_bytes is not None:
+                observe["__rows__"] = F.count(F.lit(1))
+            state = r.keep(current, **observe)
             last_stats.update(
                 {k: r.seen[f"__ss_{k}__"] for k in self.state_stats}
             )
+            key = SUBJECT
+            if row_bytes is not None:
+                state_bytes = r.seen["__rows__"] * row_bytes
+                (receiver,) = receivers
+                # the subject layout is the message plan's own
+                if state_bytes <= _MAX_SHIPPED_STATE and (
+                    receiver is MessageReceiver.SUBJECT
+                    or self.graph._layout_wanted(receiver.value)
+                ):
+                    plan, key = "state", receiver.value
+                    sender = (
+                        MessageReceiver.SUBJECT
+                        if receiver is MessageReceiver.OBJECT
+                        else MessageReceiver.OBJECT
+                    )
+            edges = self.graph._edge_layout(self.edges_prepartitioned, key=key)
             # one fixed injection schema per run (stable plan → codegen
             # cache hit); integers stay bigint (exact past 2^53),
             # everything else double, NULL stats stay NULL rather than
@@ -729,11 +831,6 @@ class Pregel:
             # object join's filter matters only to messages sent to
             # subjects, since a message to an unknown object finds no
             # state row in the apply left join and is dropped there.
-            sends = (
-                self.send_messages[:1]
-                if self.first_send_only
-                else self.send_messages
-            )
             resolved = [
                 (sm.receiver, _resolve(sm.payload, ctx)) for sm in sends
             ]
@@ -773,11 +870,14 @@ class Pregel:
                 )
                 if self.active_filter is not None:
                     # filter BEFORE the join: cuts the sort-merge
-                    # probe side and every downstream message row
-                    # without disturbing the state's hash partitioning
+                    # probe side (or the broadcast) and every downstream
+                    # message row without disturbing the state's hash
+                    # partitioning
                     subj = subj.filter(
                         _resolve(self.active_filter, ctx)
                     )
+                if sender is MessageReceiver.SUBJECT:
+                    subj = F.broadcast(subj)
                 triplets = subj.join(
                     triplets,
                     _q(alias(SUBJECT, VERTEX_ID)) == _q(alias("edge", SUBJECT)),
@@ -790,6 +890,8 @@ class Pregel:
                         for c in state_cols
                     ]
                 )
+                if sender is MessageReceiver.OBJECT:
+                    obj = F.broadcast(obj)
                 triplets = triplets.join(
                     obj,
                     _q(alias("edge", OBJECT)) == _q(alias(OBJECT, VERTEX_ID)),
@@ -884,7 +986,8 @@ class Pregel:
             # to one task per core, whenever they span more partitions
             # than that and the aggregate shuffles them anyway.  Where
             # the messages already lie clustered on their receiver (an
-            # object join exchanged the triplets), the aggregate needs no
+            # object join exchanged the triplets, or a "state" superstep
+            # read the receiver-keyed layout), the aggregate needs no
             # exchange, and a coalesce would only add one.  A task's
             # partial map holds at most its distinct receivers (≤ |V|
             # rows) inside Spark's memory manager, which falls back to a
@@ -1001,6 +1104,8 @@ class Pregel:
                     delta=float(delta) if delta is not None else None,
                     changed=changed,
                     messages=stats.get("messages"),
+                    plan=plan,
+                    state_bytes=state_bytes,
                 )
             )
             if self.tolerance is not None and delta is not None \
@@ -1121,6 +1226,12 @@ class PregelBuilder:
         time).  A layout the graph already holds is reused as it is.  If
         the declaration is wrong the superstep join inserts its own
         Exchange: slower, never incorrect.
+
+        The declaration spares the ``subject`` layout only: a run on the
+        "state" plan (one JVM, every message to objects, a small state, a
+        graph run again) reads an ``object``-keyed layout, which is built
+        by an exchange as usual.  The ``subject`` layout is still what the
+        out-degree table aggregates.
 
         For the in-loop triplet joins to stay exchange-free the bucket
         count must equal ``spark.sql.shuffle.partitions`` (the state side

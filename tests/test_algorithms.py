@@ -2708,11 +2708,14 @@ def test_pagerank_stats_bootstrap_rides_a_materialization(spark, monkeypatch):
     from pregel_rs_spark import graphframe as graphframe_mod
     from pregel_rs_spark import pregel as pregel_mod
 
-    materialized = []
+    materialized, builds = [], []
     real = pregel_mod.truncate_plan
 
     def counting(df, *a, **kw):
         materialized.append(df.columns)
+        # with AQE off each broadcast exchange is built by a job of its own
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        builds.append(plan.count("BroadcastExchange"))
         return real(df, *a, **kw)
 
     for mod in (pregel_mod, algorithms_mod, graphframe_mod):
@@ -2739,5 +2742,8 @@ def test_pagerank_stats_bootstrap_rides_a_materialization(spark, monkeypatch):
     assert supersteps == 4
     # the edge layout, the degree table, the initial state, 4 supersteps
     assert len(materialized) == 7, materialized
-    assert len(jobs) == len(materialized) + supersteps + 1, (jobs, materialized)
+    # each superstep broadcasts its stats row (a graph's first run keeps
+    # the message plan, which broadcasts no state)
+    assert builds == [0] * 3 + [1] * supersteps, builds
+    assert len(jobs) == len(materialized) + sum(builds) + 1, (jobs, builds)
     assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-12)

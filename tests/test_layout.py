@@ -1,24 +1,36 @@
-"""The graph's physical layout: the ``subject``-partitioned edge table and
-the out-degree vertex table are built once per GraphFrame (per
+"""The graph's physical layout: the ``subject``-partitioned edge table
+(and, for a graph run again on the "state" plan, the ``object``-partitioned
+one) and the out-degree vertex table are built once per GraphFrame (per
 ``spark.sql.shuffle.partitions``) and reused by every Pregel run and
-star connected-components call on it, until ``GraphFrame.unpersist()``."""
+star connected-components call on it, until ``GraphFrame.unpersist()``.
+
+A Pregel run in one JVM whose sends all go to one receiver side, whose
+fixed-width state is at most ``pregel._MAX_SHIPPED_STATE`` bytes, and whose
+graph holds or reuses the receiver-keyed layout runs the "state" plan (the
+senders' state broadcast over that layout, no message exchange); tests of
+the message exchange itself set that bound to -1, the message plan's
+path."""
 
 import random
 from collections import Counter
+from contextlib import nullcontext
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
 
-from pregel_rs_spark import GraphFrame
+from pregel_rs_spark import GraphFrame, MessageReceiver, PregelBuilder
 from pregel_rs_spark import graphframe as graphframe_mod
 from pregel_rs_spark import pregel as pregel_mod
 from pregel_rs_spark.algorithms import (
     connected_components,
+    hits,
     max_value,
     pagerank,
     spam_mass,
+    sssp,
 )
-from pregel_rs_spark.columns import OBJECT, SUBJECT, edge_
+from pregel_rs_spark.columns import OBJECT, SUBJECT, edge_, msg, object_, subject
 from pregel_rs_spark.pregel import _free_checkpoint, _session_conf
 
 HUB_FAN_IN = 600
@@ -84,11 +96,18 @@ def _persistent_rdds(spark) -> set[int]:
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
 
+def _message_plan():
+    """No state is small enough to ship: every Pregel run takes the
+    message plan."""
+    return mock.patch.object(pregel_mod, "_MAX_SHIPPED_STATE", -1)
+
+
 def test_second_pagerank_shuffles_only_messages(spark, star):
     partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cores = spark.sparkContext.defaultParallelism
-    first = _ranks(spark, star, "layout-first", **STEPS)
-    second = _ranks(spark, star, "layout-second", **STEPS)
+    with _message_plan():
+        first = _ranks(spark, star, "layout-first", **STEPS)
+        second = _ranks(spark, star, "layout-second", **STEPS)
     assert second == first
 
     cold = _shuffle_records(spark, "layout-first")
@@ -113,11 +132,18 @@ def test_spam_mass_builds_one_layout(spark, star, monkeypatch):
     seeds = spark.createDataFrame([(1,), (2,)], "vertex_id long")
     out = spam_mass(star, seeds, **STEPS)
     assert out.count() == HUB_FAN_IN + 1
-    # one edge layout and one degree table, shared by PageRank and TrustRank
+    # the subject layout and the degree table, built by PageRank and
+    # shared by TrustRank; and the object layout: TrustRank is the
+    # graph's second run, which reads it (the state plan)
     assert builds == [
         ["edge.subject", "edge.object"],
         ["vertex_id", "out_degree"],
+        ["edge.subject", "edge.object"],
     ]
+    assert set(star._edge_layouts) == {
+        (int(spark.conf.get("spark.sql.shuffle.partitions")), key)
+        for key in (SUBJECT, OBJECT)
+    }
 
 
 def test_unpersist_returns_persistent_rdds_to_baseline(spark, star):
@@ -128,6 +154,7 @@ def test_unpersist_returns_persistent_rdds_to_baseline(spark, star):
         int(t._ck_rdd.id())
         for t in (*star._edge_layouts.values(), *star._degree_tables.values())
     }
+    # one run on a graph: the subject layout and the degree table
     assert len(layout) == 2
     assert layout <= _persistent_rdds(spark) - baseline
     star.unpersist()
@@ -151,12 +178,35 @@ def test_changing_shuffle_partitions_rebuilds_layout(spark):
         narrow = _ranks(spark, g, "layout-narrow", **STEPS)
     finally:
         spark.conf.set(key, p0)
-    assert set(g._edge_layouts) == {int(p0), 3}
-    assert g._edge_layouts[3]._ck_rdd.getNumPartitions() == 3
+    # a layout per width, each the first at its width: on ``subject``
+    assert set(g._edge_layouts) == {(int(p0), SUBJECT), (3, SUBJECT)}
+    assert g._edge_layouts[3, SUBJECT]._ck_rdd.getNumPartitions() == 3
     assert set(wide) == set(narrow)
     for v, r in wide.items():
         assert narrow[v] == pytest.approx(r, abs=1e-12)
     g.unpersist()
+
+
+def test_second_layout_rekeys_the_first(spark, star, monkeypatch):
+    """A second key's layout re-keys the first one at its partition
+    count: it does not run the edges' own plan again, and a
+    ``prepartitioned`` declaration, which is about the edges as given,
+    does not spare it the exchange."""
+    plans = []
+    real = graphframe_mod.truncate_plan
+
+    def recording(df, *a, **kw):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(graphframe_mod, "truncate_plan", recording)
+    by_object = star._edge_layout(key=OBJECT)
+    by_subject = star._edge_layout(prepartitioned=True)
+    # only the first build renames the edges' own columns
+    assert [" AS edge.subject" in p for p in plans] == [True, False], plans
+    for layout, key in ((by_object, OBJECT), (by_subject, SUBJECT)):
+        part = layout._jdf.queryExecution().executedPlan().outputPartitioning()
+        assert f"hashpartitioning(edge.{key}#" in part.toString(), part
 
 
 def test_vertices_and_edges_are_read_only(spark, star):
@@ -460,7 +510,7 @@ def test_pagerank_combines_messages_once_per_core(spark, crawl, per_core):
     cores = spark.sparkContext.defaultParallelism
     partitions = per_core * cores
     group = f"per-core-{partitions}"
-    with _partitions(spark, partitions):
+    with _partitions(spark, partitions), _message_plan():
         cold = _ranks(spark, crawl, f"{group}-cold", **STEPS)
         warm = _ranks(spark, crawl, f"{group}-warm", **STEPS)
         # Σ over the layout's partitions of their distinct receivers
@@ -492,7 +542,7 @@ def test_max_value_per_core_combine_is_exact(spark, crawl, monkeypatch):
     runs = {}
     for partitions in (cores, 2 * cores):
         kept.clear()
-        with _partitions(spark, partitions):
+        with _partitions(spark, partitions), _message_plan():
             res = max_value(graph)
             runs[partitions] = dict(
                 map(tuple, res.select("vertex_id", "max_value").collect())
@@ -525,7 +575,7 @@ def test_open_world_pagerank_drops_the_object_join(spark, crawl, monkeypatch):
     open_world = GraphFrame(crawl.vertices, crawl.edges)
     assert not open_world.closed
     try:
-        with _partitions(spark, 2 * cores):
+        with _partitions(spark, 2 * cores), _message_plan():
             closed = _ranks(spark, crawl, "closed-ranks", **STEPS)
             monkeypatch.setattr(pregel_mod, "truncate_plan", recording)
             ranks = _ranks(spark, open_world, "open-ranks", **STEPS)
@@ -538,3 +588,255 @@ def test_open_world_pagerank_drops_the_object_join(spark, crawl, monkeypatch):
         assert f"Coalesce {cores}" in plan, plan
     assert ranks.keys() == closed.keys()
     assert max(abs(ranks[v] - closed[v]) for v in closed) <= 1e-12
+
+
+# -- the "state" plan: the senders' state broadcast over a receiver-keyed
+# edge layout ---------------------------------------------------------------
+
+def _record_plans(monkeypatch) -> list[str]:
+    """The executed plan of every superstep a Pregel run materializes
+    (superstep 0, which sends nothing, is left out)."""
+    plans = []
+    real = pregel_mod.truncate_plan
+
+    def recording(df, *a, **kw):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if "msg.vertex_id" in plan:
+            plans.append(plan)
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(pregel_mod, "truncate_plan", recording)
+    return plans
+
+
+def _ships_state(plan: str) -> bool:
+    """A superstep plan of the state plan: one broadcast (the senders'
+    state) and no hash exchange."""
+    return plan.count("BroadcastExchange") == 1 \
+        and "Exchange hashpartitioning" not in plan
+
+
+def _pagerank_run(spark, graph, group: str) -> tuple[dict, list]:
+    res = _in_group(spark, group, lambda: pagerank(graph, **STEPS))
+    ranks = _in_group(spark, group, lambda: dict(
+        map(tuple, res.select("vertex_id", "rank").collect())
+    ))
+    return ranks, res.pregel_metrics
+
+
+def test_warm_pagerank_ships_state_and_writes_no_shuffle(spark, crawl, monkeypatch):
+    """In one JVM, PageRank's state (120 rows × 32 bytes) is small enough
+    to ship.  A graph's first run keeps the message plan and lays out no
+    second layout; the next one broadcasts the senders' state over the
+    ``object``-keyed layout in each superstep, and, once that layout is
+    built, a call writes no shuffle.  Ranks agree within 1e-12."""
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    first, metrics = _pagerank_run(spark, crawl, "state-first")
+    assert [(m.plan, m.state_bytes) for m in metrics] == \
+        [("messages", 120 * 32)] * STEPS["max_iterations"]
+    assert set(crawl._edge_layouts) == {(p, SUBJECT)}
+    cold, _ = _pagerank_run(spark, crawl, "state-cold")
+    assert set(crawl._edge_layouts) == {(p, SUBJECT), (p, OBJECT)}
+    plans = _record_plans(monkeypatch)
+    warm, metrics = _pagerank_run(spark, crawl, "state-warm")
+    assert warm == cold
+    assert _shuffle_stages(spark, "state-warm") == []
+    assert len(plans) == STEPS["max_iterations"], plans
+    for plan in plans:
+        assert _ships_state(plan), plan
+    # vertex_id, out_degree and rank: an 8-byte null-bit set + 3 × 8
+    assert [(m.plan, m.state_bytes) for m in metrics] == \
+        [("state", 120 * 32)] * STEPS["max_iterations"]
+    assert first.keys() == warm.keys()
+    assert max(abs(first[v] - warm[v]) for v in warm) <= 1e-12
+
+
+def test_state_plan_follows_the_size_bound(spark, crawl, monkeypatch):
+    """The plan is chosen once per run on superstep 0's observed rows ×
+    their UnsafeRow size: a bound one byte below that keeps the message
+    plan, one equal to it ships the state."""
+    size = 120 * 32
+    # the graph's first run: it asks for the object layout
+    _pagerank_run(spark, crawl, "bound-first")
+    for bound, plan in ((size - 1, "messages"), (size, "state")):
+        monkeypatch.setattr(pregel_mod, "_MAX_SHIPPED_STATE", bound)
+        _, metrics = _pagerank_run(spark, crawl, f"bound-{bound}")
+        assert [(m.plan, m.state_bytes) for m in metrics] == \
+            [(plan, size)] * STEPS["max_iterations"], metrics
+
+
+def test_state_plan_waits_for_a_reused_graph(spark, crawl):
+    """A second edge layout is laid out only for a graph run again: a
+    graph derived by ``with_vertices`` shares the first run's ask, a
+    graph over other edges does not.  Sends to subjects read the subject
+    layout, the message plan's own, so they ship the state on a graph's
+    first run."""
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    plans = lambda res: {m.plan for m in res.pregel_metrics}  # noqa: E731
+    assert plans(pagerank(crawl, **STEPS)) == {"messages"}
+    other = GraphFrame.from_edges(crawl.edges.filter(F.col(SUBJECT) != 1))
+    try:
+        assert plans(pagerank(other, **STEPS)) == {"messages"}
+        assert set(other._edge_layouts) == {(p, SUBJECT)}
+        derived = crawl.with_vertices(crawl.vertices)
+        assert plans(pagerank(derived, **STEPS)) == {"state"}
+        assert (p, OBJECT) in crawl._edge_layouts
+
+        fresh = GraphFrame.from_edges(crawl.edges)
+        run = _max_pregel(
+            _with_values(fresh), MessageReceiver.SUBJECT, object_("best"),
+        )
+        run.run()
+        assert {m.plan for m in run.metrics} == {"state"}
+        assert set(fresh._edge_layouts) == {(p, SUBJECT)}
+        fresh.unpersist()
+    finally:
+        other.unpersist()
+
+
+def test_variable_width_state_keeps_the_message_plan(spark, crawl):
+    """A state column of variable width (here a string) has no size the
+    schema tells: every run, the first and a later one, keeps the message
+    plan, and records no size."""
+    graph = crawl.with_vertices(
+        crawl.vertices.withColumn("value", F.col("vertex_id").cast("string"))
+    )
+    for _ in range(2):
+        run = _max_pregel(graph, MessageReceiver.OBJECT, subject("best"))
+        run.run()
+        assert run.metrics
+        assert {(m.plan, m.state_bytes) for m in run.metrics} == \
+            {("messages", None)}
+
+
+def _with_values(graph):
+    return graph.with_vertices(graph.vertices.withColumn(
+        "value", (F.xxhash64(F.col("vertex_id")) % 100003).cast("double") / 7
+    ))
+
+
+def _max_pregel(graph, receiver, payload):
+    """Max propagation to ``receiver``: every vertex keeps the largest
+    ``payload`` any of its triplets sends it (built, not yet run)."""
+    return (
+        PregelBuilder(graph)
+        .max_iterations(10)
+        .with_vertex_column("best")
+        .initial_message(F.col("value"))
+        .send_messages(receiver, payload)
+        .aggregate_messages(F.max(msg()))
+        .v_prog(F.greatest(F.col("best"), F.coalesce(msg(), F.col("best"))))
+        .with_exact_convergence()
+        .build()
+    )
+
+
+def _max_program(graph, receiver, payload):
+    return _max_pregel(graph, receiver, payload).run()
+
+
+def _symmetric(graph):
+    """``graph`` with every edge in both directions."""
+    e = graph.edges.select(SUBJECT, OBJECT)
+    sym = e.unionByName(
+        e.select(F.col(OBJECT).alias(SUBJECT), F.col(SUBJECT).alias(OBJECT))
+    ).distinct()
+    return GraphFrame(graph.vertices, sym, closed=graph.closed)
+
+
+def _min_label(graph):
+    """Pregel label CC's program (``connected_components``), run on
+    ``graph`` as given."""
+    return (
+        PregelBuilder(graph)
+        .max_iterations(50)
+        .with_vertex_column("component")
+        .initial_message(F.col("vertex_id"))
+        .send_messages(MessageReceiver.OBJECT, subject("component"))
+        .aggregate_messages(F.min(msg()))
+        .v_prog(F.least(F.col("component"),
+                        F.coalesce(msg(), F.col("component"))))
+        .with_exact_convergence()
+        .build()
+        .run()
+    )
+
+
+PROGRAMS = {
+    "max_value": lambda g: max_value(_with_values(g)),
+    "sssp": lambda g: sssp(g, 1),
+    # with_active_filter: only vertices that improved last superstep send
+    "sssp_frontier": lambda g: sssp(g, 1, frontier=True),
+    # connected_components's label program, on a graph symmetrized once
+    # by the test (the algorithm symmetrizes into a new graph per call,
+    # whose first run never ships the state)
+    "label_cc": lambda g: _min_label(g),
+    # an ``object.*``-reading payload: the object join stays, on the
+    # receiver side of the layout
+    "object_payload": lambda g: _max_program(
+        _with_values(g), MessageReceiver.OBJECT,
+        F.greatest(subject("best"), object_("value")),
+    ),
+    # messages to subjects: the object side's state is broadcast over the
+    # ``subject``-keyed layout
+    "to_subjects": lambda g: _max_program(
+        _with_values(g), MessageReceiver.SUBJECT, object_("best"),
+    ),
+}
+
+
+@pytest.mark.parametrize("world", ["closed", "open"])
+@pytest.mark.parametrize("program", sorted(PROGRAMS))
+def test_state_plan_is_bit_identical(spark, crawl, monkeypatch, program, world):
+    """Exact programs give bit-identical results on the two plans, on a
+    closed-world graph and on an open-world one whose vertex table lacks
+    every seventh vertex (the edges to and from them must not count)."""
+    graph = crawl
+    if world == "open":
+        graph = GraphFrame(
+            crawl.vertices.filter(F.col("vertex_id") % 7 != 0), crawl.edges
+        )
+    if program == "label_cc":
+        graph = _symmetric(graph)
+    # as a first run on the graph would: the next run reads the object
+    # layout
+    graph._layout_wanted(OBJECT)
+    plans = _record_plans(monkeypatch)
+    runs = {}
+    try:
+        for plan in ("state", "messages"):
+            plans.clear()
+            with _message_plan() if plan == "messages" else nullcontext():
+                res = PROGRAMS[program](graph)
+                runs[plan] = sorted(map(tuple, res.collect()))
+            assert plans, program
+            # The message plan broadcasts nothing (these programs keep no
+            # state statistics) and exchanges every superstep; the state
+            # plan broadcasts once a superstep and exchanges nothing after
+            # superstep 1.  (Superstep 1 of label CC re-exchanges its
+            # initial state, on both plans: that state, ``vertex_id``
+            # aliased as ``component``, is advertised as partitioned on
+            # ``component``.)
+            for i, p in enumerate(plans):
+                assert p.count("BroadcastExchange") == (plan == "state"), p
+                assert ("Exchange hashpartitioning" in p) == (
+                    plan == "messages" or (i == 0 and program == "label_cc")
+                ), p
+    finally:
+        if graph is not crawl:
+            graph.unpersist()
+    assert runs["state"] == runs["messages"]
+    assert len(runs["state"]) == (120 if world == "closed" else 103)
+
+
+def test_mixed_receivers_keep_the_message_plan(spark, crawl, monkeypatch):
+    """HITS sends to objects and to subjects: no single layout puts every
+    message beside its receiver, so its supersteps exchange messages and
+    broadcast nothing."""
+    plans = _record_plans(monkeypatch)
+    res = hits(crawl, iterations=3)
+    assert res.count() == 120
+    assert len(plans) == 3
+    for plan in plans:
+        assert "BroadcastExchange" not in plan, plan
+        assert "Exchange hashpartitioning" in plan, plan
