@@ -614,26 +614,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "vertex_id", F.col("aux").cast("long").alias("deg_sum")
         )
 
-    def salted_msg_count_q(spark, sf):
-        """The 100 TB hub-skew path: explicit two-phase salted aggregation
-        with a COUNT aggregate (the combine-mapping case) — one superstep
-        counting in-bound messages per vertex."""
-        g = GraphFrame.from_edges(_edges_sg(spark, sf))
-        res = (
-            PregelBuilder(g)
-            .max_iterations(1)
-            .initial_message(F.lit(0))
-            .send_messages(MessageReceiver.OBJECT, F.lit(1))
-            .aggregate_messages(F.count(msg()))
-            .v_prog(F.coalesce(msg(), F.lit(0)))
-            .with_salted_aggregation(8)
-            .build()
-            .run()
-        )
-        return res.select(
-            "vertex_id", F.col("aux").cast("long").alias("n_msgs")
-        )
-
     # -- dedup --
     def dedup_exact_q(spark, sf):
         """Exact content dedup: md5 hash groups, min-doc_id survivor —
@@ -1103,8 +1083,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def multimodal_q(spark, sf):
         """Opaque-binary media decode plumbing (mapInPandas Arrow batches,
         typed metadata out); real codecs absent from the container are
-        stubbed behind register_decoder — the schema/batch shape is what
-        this row verifies."""
+        stubbed behind decode_media's decoder= argument — the schema/batch
+        shape is what this row verifies."""
         media = documents_to_media(load_table(spark, sf, "documents"))
         d = decode_media(media)
         return d.select(
@@ -2311,7 +2291,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         hyperball_regs_k2=hyperball_regs_q,
         lpa_1round=lpa_1round,
         multi_send_degrees=multi_send_degrees_q,
-        salted_msg_count=salted_msg_count_q,
         webtext_edges=webtext_edges_q,
         url_templates=url_templates_q,
         domain_edges=domain_edges_q,
@@ -3027,15 +3006,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT v.vertex_id,
                CAST(COALESCE(od.d, 0) + COALESCE(ind.d, 0) AS BIGINT) AS deg_sum
         FROM v LEFT JOIN od USING (vertex_id) LEFT JOIN ind USING (vertex_id)
-    """
-    o["salted_msg_count"] = f"""
-        WITH v AS (SELECT DISTINCT vertex_id FROM
-                   (SELECT subject AS vertex_id FROM {_SG_SQL}
-                    UNION ALL SELECT object FROM {_SG_SQL})),
-             ind AS (SELECT object AS vertex_id, COUNT(*) AS d
-                     FROM {_SG_SQL} GROUP BY object)
-        SELECT v.vertex_id, CAST(COALESCE(ind.d, 0) AS BIGINT) AS n_msgs
-        FROM v LEFT JOIN ind USING (vertex_id)
     """
     # LSH ANN: recompute the hyperplane buckets in SQL from the SAME
     # md5-derived integer weights (h/2^31 - 1 is a dyadic double — exact in

@@ -2,8 +2,8 @@
 analytics engine with the query and data-processing capabilities of
 weso/pregel-rs (reference at /root/reference, cited per-module), rebuilt
 Spark-first: DataFrame/Catalyst plans, vectorized pandas/Arrow UDFs at the
-web-text extraction boundary, per-superstep lineage truncation, salted
-two-phase aggregation for hub skew, and checkpoint/resume.
+web-text extraction boundary, per-superstep lineage truncation, message
+combining once per core for hub skew, and checkpoint/resume.
 
 Public surface:
     GraphFrame            — vertices/edges data model (graph_frame.rs parity)

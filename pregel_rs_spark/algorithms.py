@@ -931,20 +931,23 @@ def k_core(
     und = _und_simple(graph.edges)
 
     def peel(und: DataFrame, r) -> tuple[DataFrame, bool]:
+        # Both semi-joins read one degree filter: Spark builds its exchange
+        # once per round and reuses it.  That needs the edge blocks kept
+        # without their partitioning (which no join here can use), since a
+        # scan's partitioning keeps per-instance ids when it is compared.
         keep = _degrees(und).filter(F.col("degree") >= k).select(VERTEX_ID)
+        kept = keep[VERTEX_ID]
         nxt = r.keep(
-            und.join(
-                keep.select(F.col(VERTEX_ID).alias("a")), "a", "left_semi"
-            ).join(
-                keep.select(F.col(VERTEX_ID).alias("b")), "b", "left_semi"
-            ),
+            und.join(keep, und["a"] == kept, "left_semi")
+            .join(keep, und["b"] == kept, "left_semi"),
             n=F.count(F.lit(1)),
         )
         # fixpoint when no edge was peeled
         return nxt, r.seen["n"] in (r.prev["n"], 0)
 
     und = iterate(
-        lambda r: r.keep(und, n=F.count(F.lit(1))), peel, max_rounds
+        lambda r: r.keep(und, n=F.count(F.lit(1))), peel, max_rounds,
+        preserve_partitioning=False,
     ).state
     # materialize the (small, O(V)) result BEFORE freeing the edge blocks it
     # reads — the returned frame is lazy and must not depend on them

@@ -2,7 +2,8 @@
 columns with typed metadata, processed by Arrow-batched pandas UDFs.
 
 Heavy decode libraries (Pillow, ffmpeg, torchaudio…) are NOT in this
-container; `register_decoder` lets a real deployment plug one in.  Two
+container; the ``decoder=`` argument of :func:`decode_media` and
+:func:`resize_media` lets a real deployment plug one in.  Two
 REAL zero-dependency decoders ship here and prove the plumbing against
 non-synthetic formats: :func:`png_ihdr_decoder` (genuine PNG header
 parse) and :func:`wav_decoder` (stdlib ``wave``), dispatched by
@@ -45,8 +46,8 @@ def encode_fake_media(doc_id: int, media_type: str, payload: bytes) -> bytes:
 def default_decoder(media: bytes) -> dict:
     """Deterministic fake decode: parse the MMv1 header.
 
-    A real deployment replaces this via :func:`register_decoder` with e.g.
-    PIL.Image.open — the Spark-side plumbing is identical.
+    A real deployment passes e.g. a PIL.Image.open wrapper as ``decoder=``
+    instead — the Spark-side plumbing is identical.
     """
     if media is None or len(media) < 13 or media[:4] != _MAGIC:
         raise NotImplementedError(
@@ -91,7 +92,7 @@ def standard_decoder(media: bytes) -> dict:
     """Magic-byte dispatch over the formats decodable with zero external
     dependencies: real PNG (IHDR parse), real WAV (stdlib ``wave``), the
     MMv1 synthetic header — anything else raises (a real deployment
-    registers a Pillow/ffmpeg decoder instead)."""
+    passes a Pillow/ffmpeg decoder instead)."""
     if media is not None and len(media) >= 8 \
             and bytes(media[:8]) == b"\x89PNG\r\n\x1a\n":
         return png_ihdr_decoder(media)
@@ -99,20 +100,6 @@ def standard_decoder(media: bytes) -> dict:
             and bytes(media[:4]) == b"RIFF" and bytes(media[8:12]) == b"WAVE":
         return wav_decoder(media)
     return default_decoder(media)
-
-
-_DECODER: Callable[[bytes], dict] = default_decoder
-
-
-def register_decoder(fn: Callable[[bytes], dict]) -> None:
-    """Install ``fn`` as the decoder used by :func:`decode_media` /
-    :func:`resize_media` plans built AFTER this call.  The plan builders
-    capture the current decoder into the UDF closure at plan-build time
-    — a module-global read inside the closure would silently fall back
-    to the default on executor Python workers, which re-import this
-    module rather than sharing the driver's globals."""
-    global _DECODER
-    _DECODER = fn
 
 
 def documents_to_media(docs: DataFrame) -> DataFrame:
@@ -154,21 +141,17 @@ def resize_media(
     media_df: DataFrame,
     target_w: int = 224,
     target_h: int = 224,
-    decoder: Callable[[bytes], dict] | None = None,
+    decoder: Callable[[bytes], dict] = default_decoder,
 ) -> DataFrame:
     """Resize plumbing via ``mapInPandas``: parses each blob's header,
     computes the letterboxed target geometry, and re-emits the blob with a
     rewritten header.  The pixel resample itself is the decoder's job — a
-    real deployment swaps :func:`register_decoder`/the body for
-    PIL/opencv; batch shape, schema, and error handling are the real,
-    tested Spark surface (per BASELINE input_hint: Arrow batches, no
-    per-row Python at the boundary).
+    real deployment passes a PIL/opencv ``decoder`` and swaps the body;
+    batch shape, schema, and error handling are the real, tested Spark
+    surface (per BASELINE input_hint: Arrow batches, no per-row Python at
+    the boundary).  The decoder is captured into the UDF closure, so it
+    reaches executor Python workers.
     """
-    # an explicit decoder= wins (no shared mutable state — two plans
-    # built concurrently can't race); otherwise capture the registered
-    # global NOW: executor workers re-import this module, so a global
-    # read inside the closure would always see the default decoder
-    dec = decoder if decoder is not None else _DECODER
 
     def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -177,7 +160,7 @@ def resize_media(
                 pdf["doc_id"], pdf["media_type"], pdf["media"]
             ):
                 try:
-                    meta = dec(bytes(blob) if blob is not None else None)
+                    meta = decoder(bytes(blob) if blob is not None else None)
                     w, h = meta["width"], meta["height"]
                     out = (
                         _MAGIC
@@ -244,16 +227,11 @@ def sample_frames(
 
 
 def decode_media(
-    media_df: DataFrame, decoder: Callable[[bytes], dict] | None = None
+    media_df: DataFrame, decoder: Callable[[bytes], dict] = default_decoder
 ) -> DataFrame:
     """Decode/feature-extract media blobs via ``mapInPandas`` (Arrow batch
     iterator — the scale-correct shape: no per-row Python at the boundary,
     one pandas batch per Arrow chunk, decode errors captured per row)."""
-    # an explicit decoder= wins (no shared mutable state — two plans
-    # built concurrently can't race); otherwise capture the registered
-    # global NOW: executor workers re-import this module, so a global
-    # read inside the closure would always see the default decoder
-    dec = decoder if decoder is not None else _DECODER
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -262,7 +240,7 @@ def decode_media(
                 pdf["doc_id"], pdf["media_type"], pdf["media"]
             ):
                 try:
-                    meta = dec(bytes(blob) if blob is not None else None)
+                    meta = decoder(bytes(blob) if blob is not None else None)
                     rows.append(
                         dict(
                             doc_id=doc_id,

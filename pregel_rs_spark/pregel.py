@@ -42,8 +42,7 @@ Scale design (10^12-doc / 100 TB):
         Spark's map-side partial aggregation, run once per core (the
         messages are coalesced, without a shuffle, to one map task per
         core), so hub receivers collapse to ≤ cores partial rows before
-        the shuffle; an explicit salted two-phase path is available via
-        ``with_salted_aggregation`` for non-algebraic cases.
+        the shuffle.
       - "state" (one JVM, every send to the same receiver side, a small
         fixed-width state, a graph that holds or reuses an edge layout on
         that side): the edges are laid out on the receiver column instead
@@ -91,30 +90,6 @@ MSG_VERTEX_ID = alias(MSG, VERTEX_ID)  # "msg.vertex_id"
 def _q(name: str) -> Column:
     return F.col(f"`{name}`")
 
-
-def _agg_function_name(col: Column) -> Optional[str]:
-    """Top-level aggregate function name of a Column expression, or None.
-
-    Reads the column's internal node tree (Alias → UnresolvedFunction
-    .functionName()) — structural, not a string sniff of the repr.  Returns
-    None for forms it can't identify (e.g. ``F.expr("sum(x)")`` SQL text,
-    arithmetic over aggregates) — callers must then reject or handle."""
-    try:
-        node = col._jc.node()
-        if node.getClass().getSimpleName() == "Alias":
-            node = node.child()
-        if node.getClass().getSimpleName() == "UnresolvedFunction":
-            return str(node.functionName()).lower()
-    except Exception:
-        pass
-    return None
-
-
-# final-phase combiner per partial-aggregate function: partial counts combine
-# by SUM (count-of-counts would count salt groups, not messages); sum/min/max
-# are idempotently re-combinable.  Anything else (avg, collect_list, …) is
-# not decomposable this way and is rejected loudly.
-_SALT_COMBINE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
 
 # SparkSessions with a Pregel loop currently active (the loop scopes
 # session-level SQL configs; a second concurrent loop fails fast — see
@@ -563,7 +538,6 @@ class Pregel:
     check_exact: bool = False               # stop when no value changes
     checkpoint_store: Optional[object] = None  # plans.checkpoint.CheckpointStore
     checkpoint_interval: int = 0            # 0 = only on finish
-    salted_agg_partials: int = 0            # >0: explicit two-phase salted agg
     message_counts: bool = False            # per-superstep message totals
     # (metrics.messages); widens every shuffled partial-agg row by a long,
     # so off unless requested — checkpoint manifests turn it on implicitly.
@@ -931,49 +905,10 @@ class Pregel:
             agg_expr = _resolve(self.aggregate_expr, ctx).alias(PREGEL_MSG)
 
             def aggregate(messages: DataFrame) -> DataFrame:
-                if self.salted_agg_partials <= 1:
-                    return messages.groupBy(_q(MSG_VERTEX_ID)).agg(
-                        agg_expr,
-                        *(
-                            [F.count(F.lit(1)).alias("__msg_cnt__")]
-                            if count_msgs else []
-                        ),
-                    )
-                # Explicit two-phase: partial agg on (receiver, salt),
-                # then COMBINE the partials per receiver.  The combiner
-                # is derived from the aggregate function, NOT the user
-                # expression re-applied: re-applying `count` would count
-                # salt groups instead of messages, and re-applying
-                # `sum(msg * 2)` would double the partials again.
-                # Decomposable: sum/min/max (same fn) and count (→ sum).
-                fn = _agg_function_name(agg_expr)
-                combine = _SALT_COMBINE.get(fn or "")
-                if combine is None:
-                    raise ValueError(
-                        "with_salted_aggregation requires a sum/min/max/"
-                        f"count aggregate; got {fn or 'unrecognized'!s}. "
-                        "Non-decomposable aggregates (avg, collect_*, "
-                        "F.expr text) must use the unsalted path, where "
-                        "Spark's map-side partial aggregation still "
-                        "collapses hub receivers per map task."
-                    )
-                salt = F.pmod(
-                    F.xxhash64(F.monotonically_increasing_id()),
-                    F.lit(self.salted_agg_partials),
-                ).alias("__salt__")
-                cnt_p = (
-                    [F.count(F.lit(1)).alias("__msg_cnt__")]
-                    if count_msgs else []
-                )
-                partial = messages.select(
-                    _q(MSG_VERTEX_ID), _q(PREGEL_MSG), salt
-                ).groupBy(_q(MSG_VERTEX_ID), F.col("__salt__")).agg(
-                    agg_expr, *cnt_p
-                )
-                return partial.groupBy(_q(MSG_VERTEX_ID)).agg(
-                    combine(_q(PREGEL_MSG)).alias(PREGEL_MSG),
+                return messages.groupBy(_q(MSG_VERTEX_ID)).agg(
+                    agg_expr,
                     *(
-                        [F.sum("__msg_cnt__").alias("__msg_cnt__")]
+                        [F.count(F.lit(1)).alias("__msg_cnt__")]
                         if count_msgs else []
                     ),
                 )
@@ -1195,10 +1130,6 @@ class PregelBuilder:
     def with_checkpoint(self, store, every: int = 5) -> "PregelBuilder":
         self._p.checkpoint_store = store
         self._p.checkpoint_interval = every
-        return self
-
-    def with_salted_aggregation(self, partials: int) -> "PregelBuilder":
-        self._p.salted_agg_partials = partials
         return self
 
     def with_message_counts(self, on: bool = True) -> "PregelBuilder":

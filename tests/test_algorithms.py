@@ -2655,9 +2655,13 @@ def test_every_job_is_a_materialization(spark, monkeypatch, name):
 
     def counting(df, *a, **kw):
         materialized.append(df.columns)
-        # with AQE off each broadcast exchange is built by a job of its own
+        # with AQE off each broadcast exchange is built by a job of its
+        # own; a reused one is not built again
         plan = df._jdf.queryExecution().executedPlan().toString()
-        builds.append(plan.count("BroadcastExchange"))
+        builds.append(sum(
+            "BroadcastExchange" in line and "ReusedExchange" not in line
+            for line in plan.splitlines()
+        ))
         return real(df, *a, **kw)
 
     monkeypatch.setattr(pregel_mod, "truncate_plan", counting)
@@ -2696,6 +2700,45 @@ def test_every_job_is_a_materialization(spark, monkeypatch, name):
         assert len(checkpoints) == len(materialized), (jobs, materialized)
         assert len(jobs) == len(materialized) + sum(builds), (jobs, builds)
         assert (sum(builds) > 0) == (source == "sized"), builds
+
+
+def test_k_core_builds_its_degree_filter_once_per_round(spark):
+    """A peeling round semi-joins the edges to its degree filter on both
+    endpoints.  The two joins read one filter plan, so on sized edges with
+    AQE off (each broadcast build a job of its own) a run launches one job
+    per materialization and at most one build per peeling round."""
+    import pandas as pd
+
+    from pregel_rs_spark.algorithms import k_core
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    edges = spark.createDataFrame(
+        pd.DataFrame(EDGES_ROUNDS, columns=["subject", "object"])
+    )
+    g = GraphFrame.from_edges(edges)
+    group = "k_core-degree-filter-builds"
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        res = k_core(g, k=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    # the 2-core of EDGES_ROUNDS is the 4-clique {1, 2, 3, 9}
+    assert {r.vertex_id: r.degree for r in res.collect()} == {
+        1: 3, 2: 3, 3: 3, 9: 3
+    }
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    checkpoints = [
+        j for j in jobs if store.job(j).name().startswith("localCheckpoint ")
+    ]
+    # materializations: the initial edges, one per peeling round, the result
+    rounds = len(checkpoints) - 2
+    assert rounds >= 2
+    assert len(jobs) - len(checkpoints) <= rounds, (len(jobs), len(checkpoints))
 
 
 def test_pagerank_stats_bootstrap_rides_a_materialization(spark, monkeypatch):

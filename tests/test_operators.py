@@ -324,22 +324,8 @@ def _make_wav(rate: int, n_frames: int) -> bytes:
     return buf.getvalue()
 
 
-def test_register_decoder_real_png_and_wav(spark):
-    """VERDICT r3 item 5: prove the multimodal plumbing end-to-end
-    against NON-synthetic formats with a registered real decoder — a
-    genuine PNG (pure-Python IHDR parse; oracle on width/height) and a
-    genuine WAV (stdlib wave; (sample_rate, n_frames) in the two int
-    slots).  Also pins the closure-capture contract: the registered
-    decoder must reach executor Python workers (which re-import the
-    module), so decode_media captures it at plan-build time."""
-    from pregel_rs_spark.operators.multimodal import (
-        decode_media,
-        register_decoder,
-        standard_decoder,
-        default_decoder,
-    )
-
-    media = spark.createDataFrame(
+def _real_media(spark):
+    return spark.createDataFrame(
         [
             (1, "image", bytearray(_make_png(320, 200))),
             (2, "audio", bytearray(_make_wav(8000, 123))),
@@ -347,41 +333,44 @@ def test_register_decoder_real_png_and_wav(spark):
         ],
         "doc_id long, media_type string, media binary",
     )
-    register_decoder(standard_decoder)
-    try:
-        got = {r.doc_id: r for r in decode_media(media).collect()}
-    finally:
-        register_decoder(default_decoder)
+
+
+def test_register_decoder_real_png_and_wav(spark):
+    """The multimodal plumbing end-to-end against non-synthetic formats:
+    a genuine PNG (pure-Python IHDR parse; oracle on width/height) and a
+    genuine WAV (stdlib wave; (sample_rate, n_frames) in the two int
+    slots) decode through ``standard_decoder``, passed as ``decoder=``
+    (the module-global registry this test was named after is gone) and
+    captured in the UDF closure so it reaches the executor Python
+    workers; non-media is rejected per row."""
+    from pregel_rs_spark.operators.multimodal import (
+        decode_media,
+        standard_decoder,
+    )
+
+    got = {r.doc_id: r for r in
+           decode_media(_real_media(spark), decoder=standard_decoder).collect()}
     assert got[1].ok and (got[1].width, got[1].height) == (320, 200)
     assert got[2].ok and (got[2].width, got[2].height) == (8000, 123)
     assert got[3].ok is False and "MMv1" in got[3].error
 
 
 def test_decode_media_explicit_decoder_param(spark):
-    """ADVICE r4: an explicit ``decoder=`` argument bypasses the mutable
-    module global entirely — two plans built concurrently can't race on
-    ``register_decoder`` — and wins over whatever is registered."""
+    """The ``decoder=`` argument is the one route to a real decoder:
+    without it the default decoder rejects a real PNG, and
+    ``resize_media`` takes the same argument."""
     from pregel_rs_spark.operators.multimodal import (
         decode_media,
         resize_media,
         standard_decoder,
     )
 
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(_make_png(64, 48)))],
-        "doc_id long, media_type string, media binary",
-    )
-    # global stays at default_decoder (which rejects a real PNG); the
-    # explicit standard_decoder must still decode it
-    got = decode_media(media, decoder=standard_decoder).collect()[0]
-    assert got.ok and (got.width, got.height) == (64, 48)
-    r = resize_media(media, 32, 32, decoder=standard_decoder).collect()[0]
-    assert r.ok and (r.width, r.height) == (64, 48)
+    media = _real_media(spark)
+    assert not {r.doc_id: r for r in decode_media(media).collect()}[1].ok
+    png = media.filter("doc_id = 1")
+    r = resize_media(png, 32, 32, decoder=standard_decoder).collect()[0]
+    assert r.ok and (r.width, r.height) == (320, 200)
     assert (r.target_w, r.target_h) == (32, 32)
-    # and without decoder=, the default (registered) decoder runs and
-    # rejects the non-synthetic blob — proving no global was mutated
-    bad = decode_media(media).collect()[0]
-    assert bad.ok is False
 
 
 def test_decode_media_pil_pixel_decode(spark):

@@ -264,87 +264,27 @@ def test_exact_convergence_early_stop(spark, graph_b):
     assert len(p.metrics) <= 4
 
 
-def test_salted_aggregation_matches_plain(spark, graph_a):
-    """Two-phase salted aggregation (hub-skew path) is semantically
-    identical to the plain path for combinable aggs."""
-    def build(salted):
-        b = (
-            PregelBuilder(graph_a)
-            .max_iterations(2)
-            .initial_message(F.lit(0))
-            .send_messages(MessageReceiver.OBJECT, F.lit(1))
-            .aggregate_messages(F.sum(msg()))
-            .v_prog(F.coalesce(msg(), F.lit(0)))
-        )
-        if salted:
-            b = b.with_salted_aggregation(4)
-        return b.build().run()
-
-    plain = {r.vertex_id: r.aux for r in build(False).collect()}
-    salted = {r.vertex_id: r.aux for r in build(True).collect()}
-    assert plain == salted
-
-
-def test_salted_aggregation_count(spark, graph_a):
-    """Salted final phase must SUM partial counts — re-applying `count`
-    would count salt groups, not messages (VERDICT r1 #3)."""
-    def build(salted):
-        b = (
-            PregelBuilder(graph_a)
-            .max_iterations(2)
-            .initial_message(F.lit(0))
-            .send_messages(MessageReceiver.OBJECT, F.lit(1))
-            .aggregate_messages(F.count(msg()))
-            .v_prog(F.coalesce(msg(), F.lit(0)))
-        )
-        if salted:
-            b = b.with_salted_aggregation(4)
-        return b.build().run()
-
-    plain = {r.vertex_id: r.aux for r in build(False).collect()}
-    salted = {r.vertex_id: r.aux for r in build(True).collect()}
-    # graph A in-degrees: [0,2,3,3,0] → count semantics, not salt groups
-    assert plain == salted
-    assert salted[2] == 3 and salted[3] == 3
-
-
-def test_salted_aggregation_inner_expression(spark, graph_a):
-    """sum(msg * 2): the final phase must combine partials with a plain sum,
-    not re-apply the doubling to already-doubled partials."""
-    def build(salted):
-        b = (
-            PregelBuilder(graph_a)
+def test_count_and_expression_aggregates(spark, graph_a):
+    """A ``count`` aggregate counts messages and an aggregate over an
+    expression of the message applies it once per message: after one
+    superstep each vertex holds its in-degree, and twice that."""
+    def run(agg):
+        return {
+            r.vertex_id: r.aux
+            for r in PregelBuilder(graph_a)
             .max_iterations(1)
             .initial_message(F.lit(0))
             .send_messages(MessageReceiver.OBJECT, F.lit(1))
-            .aggregate_messages(F.sum(msg() * 2))
+            .aggregate_messages(agg)
             .v_prog(F.coalesce(msg(), F.lit(0)))
-        )
-        if salted:
-            b = b.with_salted_aggregation(4)
-        return b.build().run()
+            .build()
+            .run()
+            .collect()
+        }
 
-    plain = {r.vertex_id: r.aux for r in build(False).collect()}
-    salted = {r.vertex_id: r.aux for r in build(True).collect()}
-    assert plain == salted
-    assert salted[2] == 6  # in-degree 3 × 2
-
-
-def test_salted_aggregation_rejects_nondecomposable(spark, graph_a):
-    """avg partials cannot be combined by re-aggregation — loud error, not
-    silently wrong results."""
-    p = (
-        PregelBuilder(graph_a)
-        .max_iterations(1)
-        .initial_message(F.lit(0.0))
-        .send_messages(MessageReceiver.OBJECT, F.lit(1.0))
-        .aggregate_messages(F.avg(msg()))
-        .v_prog(F.coalesce(msg(), F.lit(0.0)))
-        .with_salted_aggregation(4)
-        .build()
-    )
-    with pytest.raises(ValueError, match="salted_aggregation"):
-        p.run()
+    in_degrees = {0: 0, 1: 2, 2: 3, 3: 3, 4: 0}
+    assert run(F.count(msg())) == in_degrees
+    assert run(F.sum(msg() * 2)) == {v: 2 * d for v, d in in_degrees.items()}
 
 
 def test_join_pruning_expr_payloads(spark, graph_b):

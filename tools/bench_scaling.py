@@ -197,8 +197,7 @@ def main() -> None:
     ap.add_argument("--bank-dir", default=None,
                     help="write each leg's JSON here as it completes "
                          "(lo_R.json / hi_R.json) so an interrupted "
-                         "multi-repeat run can be assembled with "
-                         "tools/assemble_scaling.py instead of lost")
+                         "multi-repeat run keeps its finished legs")
     args = ap.parse_args()
 
     global MODE, FIXED_PARTITIONS

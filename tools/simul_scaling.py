@@ -2,9 +2,10 @@
 """Simultaneous disjoint-block paired scaling campaign (round 4).
 
 WHY a third protocol variant: the back-to-back calm-window campaign
-(tools/calm_scaling.py) controls for AMBIENT co-tenant traffic, but round
-4's same-day calibration triptych (tools/percore calibrations; committed
-in BENCH_SCALING.json.calibration) measured that on an OTHERWISE-IDLE
+(tools/calm_scaling.py, in git up to commit bac559a) controls for
+AMBIENT co-tenant traffic, but round 4's same-day calibration triptych
+(tools/percore calibrations; committed in BENCH_SCALING.json.calibration)
+measured that on an OTHERWISE-IDLE
 host the per-core RANDOM-ACCESS throughput of 8 active cores is only
 ~0.56x that of 2 active cores (pure CPU 0.99x, streaming 0.90x) — shared
 LLC/memory-latency contention that scales with the total number of BUSY
@@ -53,13 +54,35 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from bench_scaling import build_edges  # noqa: E402
-from calm_scaling import probe_window, recent_probe_median  # noqa: E402
 
 SCRATCH = "/tmp/spark_graft_scaling"
 KEY = "sec_per_superstep_median_step"
 GATE_FRAC = 0.85
 LEVEL_FRAC = 0.92
 PROBE_CORE = 20
+
+
+def probe_window(trace_path: str, t0: float, t1: float) -> dict:
+    """Median and minimum probe throughput recorded in ``[t0, t1]``."""
+    vals = []
+    with open(trace_path) as f:
+        for line in f:
+            try:
+                rec = json.loads(line)
+            except ValueError:
+                continue
+            if t0 <= rec["ts"] <= t1:
+                vals.append(rec["gbps"])
+    if not vals:
+        return {"n": 0, "median_gbps": None, "min_gbps": None}
+    return {"n": len(vals),
+            "median_gbps": round(statistics.median(vals), 3),
+            "min_gbps": round(min(vals), 3)}
+
+
+def recent_probe_median(trace_path: str, window_s: float = 60.0) -> float | None:
+    now = time.time()
+    return probe_window(trace_path, now - window_s, now)["median_gbps"]
 
 
 def run_leg_async(units: int, edges: str, steps: int, parts: int,

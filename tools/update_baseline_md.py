@@ -305,7 +305,8 @@ def section(d: dict) -> str:
             "",
             f"**Paired 1e-9 to-tolerance legs under the same "
             f"simultaneous protocol** ({len(cp['pairs'])} pairs, "
-            "`tools/conv_simul_r4.py`: the N leg converges while the 4N "
+            "`tools/conv_simul_r4.py`, kept in git up to commit bac559a: "
+            "the N leg converges while the 4N "
             "side loops back-to-back to-tolerance runs on its disjoint "
             "block): per-pair efficiencies "
             f"{sorted(effs)}, median **{cp['efficiency_median']}** — the "
@@ -391,7 +392,8 @@ def section(d: dict) -> str:
         out += [
             "",
             f"**Multi-executor state re-exchange, quantified** "
-            "(`tools/cluster_reexchange.py`, back-to-back single window): "
+            "(`tools/cluster_reexchange.py`, kept in git up to commit "
+            "bac559a; back-to-back single window): "
             f"local[8] single JVM {reex['sec_per_superstep_single']} "
             "sec/superstep vs local-cluster[2,4,8g] (2 executor JVMs, "
             "netty shuffle, per-superstep state re-exchange) "
