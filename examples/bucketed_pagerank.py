@@ -3,9 +3,10 @@
 The 100 TB workflow this demonstrates: an ingestion job buckets the edge
 table by ``subject`` ONCE (``sources/bucketed.py``); every later analytics
 job — degrees, rollups, each PageRank (re)start or checkpoint resume —
-reads the bucketed scan and never shuffles the edge table again
-(``with_prepartitioned_edges`` skips the loop's startup repartition; the
-degree aggregation plans with zero Exchange).
+reads the bucketed scan and never shuffles the edge table again (with
+one bucket per shuffle partition the graph's edge layout keeps the scan's
+bucketing, so its build and the degree aggregation plan with zero
+Exchange).
 
 Run locally:      python examples/bucketed_pagerank.py
 Run on a cluster: ./examples/submit.sh examples/bucketed_pagerank.py
@@ -51,12 +52,7 @@ def main() -> None:
               "Exchange" in spark._jvm.PythonSQLUtils.explainString(
                   deg._jdf.queryExecution(), "formatted"))
 
-        ranks = pagerank(
-            GraphFrame.from_edges(be),
-            tol=1e-6,
-            max_iterations=20,
-            prepartitioned_edges=True,
-        )
+        ranks = pagerank(GraphFrame.from_edges(be), tol=1e-6, max_iterations=20)
         ranks.orderBy(F.desc("rank")).select("vertex_id", "rank").show(10)
         spark.sql("DROP TABLE IF EXISTS cc_edges")
     spark.stop()

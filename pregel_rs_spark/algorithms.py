@@ -39,12 +39,10 @@ from pregel_rs_spark.pregel import (
 from pregel_rs_spark.unionfind import contract_partition
 
 
-def _with_out_degrees(
-    graph: GraphFrame, prepartitioned_edges: bool = False
-) -> GraphFrame:
+def _with_out_degrees(graph: GraphFrame) -> GraphFrame:
     """``graph`` over its memoized degree table (GraphFrame._degree_table),
     which keeps a vertex table's own ``out_degree`` column."""
-    return graph.with_vertices(graph._degree_table(prepartitioned_edges))
+    return graph.with_vertices(graph._degree_table())
 
 
 def pagerank(
@@ -56,7 +54,6 @@ def pagerank(
     checkpoint_every: int = 5,
     resume: bool = False,
     weight: str | None = None,
-    prepartitioned_edges: bool = False,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """Standard PageRank with damping and dangling-mass redistribution.
@@ -102,14 +99,14 @@ def pagerank(
     # the loop read the in-memory copy, and later calls on the same graph
     # shuffle nothing but their messages.  Its n / dangling counts were
     # observed on its own materialization: no job here.
-    g = _with_out_degrees(graph, prepartitioned_edges)
-    n, n_dangling = graph._vertex_counts(prepartitioned_edges)
+    g = _with_out_degrees(graph)
+    n, n_dangling = graph._vertex_counts()
     has_dangling = n_dangling > 0
     if weight is not None:
         # Total outgoing weight (the weighted fan-out denominator),
         # aggregated from the edge layout, which is already clustered on
         # the group key: no exchange on either side of the join.
-        out_w = g._edge_layout(prepartitioned_edges).groupBy(
+        out_w = g._edge_layout().groupBy(
             edge_(SUBJECT).alias(VERTEX_ID)
         ).agg(F.sum(edge_(weight)).cast("double").alias("out_weight"))
         g = g.with_vertices(
@@ -166,10 +163,6 @@ def pagerank(
         )
     if checkpoint_store is not None:
         builder = builder.with_checkpoint(checkpoint_store, checkpoint_every)
-    if prepartitioned_edges:
-        # edges come from a bucketed-by-subject scan (sources/bucketed.py):
-        # skip the loop's startup edge shuffle
-        builder = builder.with_prepartitioned_edges()
     engine = builder.build()
     res = engine.run(resume=resume)
     if init_ranks is not None:

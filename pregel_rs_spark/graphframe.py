@@ -175,9 +175,7 @@ class GraphFrame:
 
     # -- physical layout -----------------------------------------------------
 
-    def _edge_layout(
-        self, prepartitioned: bool = False, key: str = SUBJECT
-    ) -> DataFrame:
+    def _edge_layout(self, key: str = SUBJECT) -> DataFrame:
         """The ``edge.*``-prefixed edges, hash-partitioned on ``edge.<key>``
         (``subject`` or ``object``) at ``spark.sql.shuffle.partitions``,
         sorted within partitions, and materialized with that partitioning
@@ -185,9 +183,11 @@ class GraphFrame:
         keyed on ``subject``, the input of an exchange-free out-degree
         aggregate.  Built once per partition count and key; a second key
         re-keys the layout already built at that partition count, so the
-        edges' own plan runs once.  ``prepartitioned`` (the edges are
-        already hash-clustered on ``subject``, e.g. a bucketed scan) builds
-        the ``subject`` layout by the sort alone."""
+        edges' own plan runs once.  Edges read from a table bucketed on
+        ``key`` at that many buckets (sources/bucketed.py) are laid out
+        so already: the build keeps the bucketed scan and drops its
+        exchange.  A table bucketed at another count is exchanged, and
+        its scan runs one task per bucket."""
         spark = self._edges.sparkSession
         p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         if (p, key) not in self._edge_layouts:
@@ -196,13 +196,9 @@ class GraphFrame:
                 *[F.col(c).alias(alias("edge", c)) for c in self._edges.columns]
             )
             col = edge_(key)
-            # the declaration holds for the edges as given, not for
-            # another key's layout
-            if laid_out or not (prepartitioned and key == SUBJECT):
-                edges = edges.repartition(p, col)
             with _session_conf(spark, _LOOP_CONF):
                 self._edge_layouts[p, key] = truncate_plan(
-                    edges.sortWithinPartitions(col)
+                    edges.repartition(p, col).sortWithinPartitions(col)
                 )
         return self._edge_layouts[p, key]
 
@@ -219,7 +215,7 @@ class GraphFrame:
         self._layout_asks.add((p, key))
         return wanted
 
-    def _degree_table(self, prepartitioned: bool = False) -> DataFrame:
+    def _degree_table(self) -> DataFrame:
         """:meth:`out_degrees_full`, materialized and hash-partitioned on
         ``vertex_id`` at ``spark.sql.shuffle.partitions`` — the layout
         the Pregel state keeps, so a run starting from it never
@@ -234,7 +230,7 @@ class GraphFrame:
         if p not in self._degree_tables:
             table = self._vertices
             if "out_degree" not in table.columns:
-                counts = self._edge_layout(prepartitioned).groupBy(
+                counts = self._edge_layout().groupBy(
                     edge_(SUBJECT).alias(VERTEX_ID)
                 ).agg(F.count(edge_(OBJECT)).alias("out_degree"))
                 table = table.join(counts, VERTEX_ID, "left").withColumn(
@@ -254,11 +250,11 @@ class GraphFrame:
             self._degree_counts[p] = (seen["n"], seen["dangling"] or 0)
         return self._degree_tables[p]
 
-    def _vertex_counts(self, prepartitioned: bool = False) -> tuple[int, int]:
+    def _vertex_counts(self) -> tuple[int, int]:
         """``(vertices, dangling vertices)`` of :meth:`_degree_table` —
         the vertices and those with ``out_degree == 0`` — as observed on
         the table's materialization: memoized with the table, no job of
         their own."""
-        self._degree_table(prepartitioned)
+        self._degree_table()
         p = int(self._edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         return self._degree_counts[p]

@@ -404,10 +404,15 @@ def iterate(
 # co-partitioned, so AQE re-planning and size-driven broadcasts can only
 # cost; the one broadcast a "state" superstep makes is an explicit hint.
 # Graph layouts are built under the same settings so they come out
-# hash-partitioned at exactly ``spark.sql.shuffle.partitions``.
+# hash-partitioned at exactly ``spark.sql.shuffle.partitions``.  A scan
+# bucketed on the layout key at that many buckets already is: the planner
+# drops the layout's exchange over it, and with automatic bucketed scan on
+# it would then read the files unbucketed and the layout would advertise
+# no partitioning at all.
 _LOOP_CONF = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
 }
 
 
@@ -559,13 +564,6 @@ class Pregel:
     # Default (False) = union semantics (GraphFrames-style, documented
     # divergence SURVEY §5.3).
     first_send_only: bool = False
-    # edges already arrive hash-clustered on ``subject`` (e.g. a bucketed
-    # table scan — sources/bucketed.py): if the graph's edge layout is not
-    # built yet, build it by a within-partition sort only, so the 100 TB
-    # edge table is never shuffled at all.  Safe either way: if the claim
-    # is wrong, the superstep join plans its own Exchange (slower, never
-    # incorrect).
-    edges_prepartitioned: bool = False
     metrics: list[SuperstepMetrics] = field(default_factory=list)
 
     # ------------------------------------------------------------------ run --
@@ -759,7 +757,7 @@ class Pregel:
                         if receiver is MessageReceiver.OBJECT
                         else MessageReceiver.OBJECT
                     )
-            edges = self.graph._edge_layout(self.edges_prepartitioned, key=key)
+            edges = self.graph._edge_layout(key=key)
             # one fixed injection schema per run (stable plan → codegen
             # cache hit); integers stay bigint (exact past 2^53),
             # everything else double, NULL stats stay NULL rather than
@@ -1145,31 +1143,6 @@ class PregelBuilder:
         pregel.rs:825-834).  Off by default — the default is union
         semantics, the documented divergence (SURVEY §5.3)."""
         self._p.first_send_only = on
-        return self
-
-    def with_prepartitioned_edges(self, on: bool = True) -> "PregelBuilder":
-        """Declare the edge table already hash-clustered on ``subject``
-        (a bucketed-table scan, sources/bucketed.py) so the graph's edge
-        layout, when this run is the one that first builds it, is made by a
-        within-partition sort with no exchange — at web scale that is the
-        difference between shuffling the full edge table once per graph and
-        never shuffling it at all (the layout was paid once, at write
-        time).  A layout the graph already holds is reused as it is.  If
-        the declaration is wrong the superstep join inserts its own
-        Exchange: slower, never incorrect.
-
-        The declaration spares the ``subject`` layout only: a run on the
-        "state" plan (one JVM, every message to objects, a small state, a
-        graph run again) reads an ``object``-keyed layout, which is built
-        by an exchange as usual.  The ``subject`` layout is still what the
-        out-degree table aggregates.
-
-        For the in-loop triplet joins to stay exchange-free the bucket
-        count must equal ``spark.sql.shuffle.partitions`` (the state side
-        is hash-clustered at that width); with a different count Catalyst
-        re-exchanges one side per superstep — correct, but it forfeits
-        the benefit beyond the skipped layout shuffle."""
-        self._p.edges_prepartitioned = on
         return self
 
     def with_state_column(

@@ -15,9 +15,11 @@ it, and any later scan exposes ``HashPartitioning(key, n)`` to the
 planner — so a ``groupBy(key)`` or a
 join against an identically-bucketed table plans with ZERO Exchange, in
 every job, forever, including the fresh process a checkpoint resume
-starts in (tests/test_bucketed.py pins both plan shapes).  With
-``with_prepartitioned_edges`` the graph's edge layout is then built from
-the bucketed scan by a within-partition sort alone.
+starts in (tests/test_bucketed.py pins both plan shapes).  A graph's
+edge layout on the bucket key, when the bucket count equals
+``spark.sql.shuffle.partitions``, is then built from the bucketed scan
+by a within-partition sort alone: the planner drops the layout's
+exchange, which the scan already satisfies.
 
 This is deliberately the reference's missing storage layer re-thought for
 Spark (weso/pregel-rs holds edges in a transient in-memory Polars frame —

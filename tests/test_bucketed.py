@@ -1,17 +1,19 @@
 """Bucketed edge store (sources/bucketed.py): the write-once co-location
 layer.  Pins the two plan shapes that make it worth having at 100 TB —
 aggregation and co-bucketed join over the bucketed scan plan with ZERO
-Exchange — and result parity for the Pregel fast path that consumes it
-(``with_prepartitioned_edges``)."""
+Exchange — and the graph edge layout built over it with no shuffle, with
+Pregel results equal to the plain path's."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from pregel_rs_spark import GraphFrame, MessageReceiver, PregelBuilder, msg, subject
+from pregel_rs_spark.columns import OBJECT, SUBJECT
 from pregel_rs_spark.sources.bucketed import (
     read_bucketed,
     write_bucketed,
     write_bucketed_edges,
+    write_bucketed_edges_by_object,
 )
 
 
@@ -90,8 +92,8 @@ def test_cobucketed_join_has_no_exchange(spark, edges_df, tmp_path):
         spark.sql("DROP TABLE IF EXISTS test_s_cb")
 
 
-def _max_value(graph: GraphFrame, prepartitioned: bool):
-    b = (
+def _max_value(graph: GraphFrame):
+    return (
         PregelBuilder(graph)
         .max_iterations(4)
         .with_vertex_column("max_value")
@@ -99,20 +101,47 @@ def _max_value(graph: GraphFrame, prepartitioned: bool):
         .send_messages(MessageReceiver.OBJECT, subject("max_value"))
         .aggregate_messages(F.max(msg()))
         .v_prog(F.greatest(F.col("max_value"), msg()))
+        .build()
+        .run()
     )
-    if prepartitioned:
-        b = b.with_prepartitioned_edges()
-    return b.build().run()
 
 
-def test_pregel_prepartitioned_edges_parity(spark, edges_df, tmp_path):
-    """max-value propagation over a bucketed edge scan with
-    ``with_prepartitioned_edges`` equals the plain path exactly.  (The flag
-    only skips the startup repartition; a wrong declaration would still be
-    correct via Catalyst's own Exchange — this pins the fast path's
-    results, not just its safety.)"""
-    write_bucketed_edges(edges_df, "test_edges_pp", buckets=8,
-                         path=str(tmp_path / "edges_pp"))
+def _shuffle_bytes(spark, group: str) -> list[int]:
+    """Shuffle bytes written by each stage of the jobs under ``group``
+    that wrote any; the group must have run a job."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs, group
+    stage_ids = set()
+    for jid in jobs:
+        stage_ids.update(tracker.getJobInfo(jid).stageIds)
+    written = []
+    for sid in sorted(stage_ids):
+        info = tracker.getStageInfo(sid)
+        if info is not None and info.numCompletedTasks:
+            n = store.lastStageAttempt(sid).shuffleWriteBytes()
+            if n:
+                written.append(n)
+    return written
+
+
+@pytest.mark.parametrize(
+    "key,write",
+    [(SUBJECT, write_bucketed_edges), (OBJECT, write_bucketed_edges_by_object)],
+    ids=[SUBJECT, OBJECT],
+)
+def test_edge_layout_over_bucketed_scan(spark, edges_df, tmp_path, key, write):
+    """A table bucketed on the layout key at
+    ``spark.sql.shuffle.partitions`` buckets is laid out already: the
+    graph's edge layout on that key keeps the scan's hash partitioning,
+    one partition per bucket, and its build writes no shuffle.  Max-value
+    propagation over that graph equals the plain path exactly."""
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    name = f"test_edges_layout_{key}"
+    write(edges_df, name, buckets=p, path=str(tmp_path / name))
     try:
         vertices = edges_df.select(
             F.col("subject").alias("vertex_id")
@@ -120,16 +149,27 @@ def test_pregel_prepartitioned_edges_parity(spark, edges_df, tmp_path):
             edges_df.select(F.col("object").alias("vertex_id"))
         ).distinct().withColumn("value", (F.col("vertex_id") * 13) % 101)
 
-        plain = _max_value(GraphFrame(vertices, edges_df), False)
-        fast = _max_value(
-            GraphFrame(vertices, read_bucketed(spark, "test_edges_pp")),
-            True,
-        )
+        bucketed = GraphFrame(vertices, read_bucketed(spark, name))
+        group = f"bucketed-layout-{key}"
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            layout = bucketed._edge_layout(key=key)
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        part = layout._jdf.queryExecution().executedPlan().outputPartitioning()
+        assert part.toString().startswith(f"hashpartitioning(edge.{key}#")
+        assert part.toString().endswith(f", {p})"), part
+        assert layout._ck_rdd.getNumPartitions() == p
+        assert _shuffle_bytes(spark, group) == []
+
+        plain = _max_value(GraphFrame(vertices, edges_df))
+        fast = _max_value(bucketed)
         a = {r.vertex_id: r.max_value for r in plain.collect()}
         b = {r.vertex_id: r.max_value for r in fast.collect()}
         assert a == b
+        bucketed.unpersist()
     finally:
-        spark.sql("DROP TABLE IF EXISTS test_edges_pp")
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_write_bucketed_edges_requires_edge_columns(spark):
@@ -141,8 +181,6 @@ def test_write_bucketed_edges_requires_edge_columns(spark):
 def test_object_bucketed_indegrees_no_exchange(spark, edges_df, tmp_path):
     """The dual layout: bucketed by object → in-degree aggregation plans
     with zero Exchange, and values equal the plain-scan in-degrees."""
-    from pregel_rs_spark.sources.bucketed import write_bucketed_edges_by_object
-
     write_bucketed_edges_by_object(
         edges_df, "t_edges_by_object", buckets=8,
         path=str(tmp_path / "by_object"),

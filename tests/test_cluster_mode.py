@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pregel_rs_spark import GraphFrame  # noqa: E402
 from pregel_rs_spark.algorithms import pagerank  # noqa: E402
+from pregel_rs_spark.columns import SUBJECT, alias, edge_  # noqa: E402
 from pregel_rs_spark.pregel import truncate_plan  # noqa: E402
 
 
@@ -168,9 +169,14 @@ def test_star_cc_matches_between_local_and_cluster(cluster_spark):
     for clustered in (True, False):
         g = GraphFrame.from_edges(df if clustered else df.repartition(3))
         if not clustered:
-            # declared clustered, laid out round-robin: every partition
-            # holds an arbitrary slice of the edges
-            g._edge_layout(prepartitioned=True)
+            # laid out round-robin: every partition holds an arbitrary
+            # slice of the edges
+            p = int(cluster_spark.conf.get("spark.sql.shuffle.partitions"))
+            g._edge_layouts[p, SUBJECT] = truncate_plan(
+                g.edges.select(
+                    *[F.col(c).alias(alias("edge", c)) for c in g.edges.columns]
+                ).sortWithinPartitions(edge_(SUBJECT))
+            )
         res = connected_components(g, method="star")
         got = {r.vertex_id: r.component for r in res.collect()}
         assert got == expected, clustered

@@ -189,9 +189,8 @@ def test_changing_shuffle_partitions_rebuilds_layout(spark):
 
 def test_second_layout_rekeys_the_first(spark, star, monkeypatch):
     """A second key's layout re-keys the first one at its partition
-    count: it does not run the edges' own plan again, and a
-    ``prepartitioned`` declaration, which is about the edges as given,
-    does not spare it the exchange."""
+    count: it does not run the edges' own plan again, and it is
+    hash-partitioned on its own key."""
     plans = []
     real = graphframe_mod.truncate_plan
 
@@ -201,7 +200,7 @@ def test_second_layout_rekeys_the_first(spark, star, monkeypatch):
 
     monkeypatch.setattr(graphframe_mod, "truncate_plan", recording)
     by_object = star._edge_layout(key=OBJECT)
-    by_subject = star._edge_layout(prepartitioned=True)
+    by_subject = star._edge_layout()
     # only the first build renames the edges' own columns
     assert [" AS edge.subject" in p for p in plans] == [True, False], plans
     for layout, key in ((by_object, OBJECT), (by_subject, SUBJECT)):

@@ -455,17 +455,18 @@ def _tiny_pregel(graph_b, max_iter=1):
 
 
 def test_session_configs_restored_on_success_and_error(spark, graph_b):
-    """Pregel.run scopes spark.sql.adaptive.enabled and
-    autoBroadcastJoinThreshold to the loop — both must come back to the
-    caller's values on the happy path AND when the run dies during plan
-    prep (Catalyst analysis error), which happens before the loop's inner
-    try/finally."""
-    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    bc0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    """Pregel.run scopes every key of ``pregel._LOOP_CONF`` to the loop —
+    each must come back to the caller's value on the happy path AND when
+    the run dies during plan prep (Catalyst analysis error), which
+    happens before the loop's inner try/finally."""
+    from pregel_rs_spark import pregel as pregel_mod
+
+    before = {k: spark.conf.get(k) for k in pregel_mod._LOOP_CONF}
+    assert "spark.sql.adaptive.enabled" in before
+    assert "spark.sql.autoBroadcastJoinThreshold" in before
 
     _tiny_pregel(graph_b).run()
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == bc0
+    assert {k: spark.conf.get(k) for k in before} == before
 
     # analysis error in prep: v_prog references a column that doesn't exist
     bad = (
@@ -480,8 +481,7 @@ def test_session_configs_restored_on_success_and_error(spark, graph_b):
     )
     with pytest.raises(Exception):
         bad.run()
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == bc0
+    assert {k: spark.conf.get(k) for k in before} == before
 
     # and the error path released the concurrency guard: a new run works
     _tiny_pregel(graph_b).run()

@@ -38,3 +38,16 @@ def test_every_tool_imports_without_spark():
         cwd=ROOT, capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr[-2000:]
+
+
+def test_no_tool_names_its_checkout():
+    """Each script finds its checkout from its own file, so a second
+    checkout (a parent's tree, for a before/after run) imports and
+    writes its own files, not this one's."""
+    named = []
+    for f in sorted(os.listdir(TOOLS)):
+        if f.endswith(".py"):
+            with open(os.path.join(TOOLS, f), encoding="utf-8") as fh:
+                if ROOT in fh.read():
+                    named.append(f)
+    assert named == [], named

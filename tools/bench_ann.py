@@ -19,7 +19,7 @@ scan; the build cost is paid once at ingest (same amortization argument
 as the bucketed edge store).
 
 Usage:
-  PYTHONPATH=/root/repo python tools/bench_ann.py [--n 200000] [--dim 64]
+  PYTHONPATH=. python tools/bench_ann.py [--n 200000] [--dim 64]
       [--cells 64] [--queries 30] [--k 10] [--nprobe 4,16]
       [--out /tmp/bench_ann.json]
 """
@@ -28,10 +28,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

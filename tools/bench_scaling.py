@@ -25,7 +25,7 @@ efficiency ≥ 0.8 from N to 4N executors; sandbox protocol per BASELINE.md §3)
    CheckpointStore snapshots — final ranks must agree to 1e-6.
 
 Usage: python tools/bench_scaling.py [--pages 3000000] [--steps 12]
-       [--n-executors 1] [--repeats 5] [--out /root/repo/BENCH_SCALING.json]
+       [--n-executors 1] [--repeats 5] [--out BENCH_SCALING.json]
 """
 
 from __future__ import annotations
@@ -38,6 +38,8 @@ import statistics
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCRATCH = "/tmp/spark_graft_scaling"
 
 
@@ -45,7 +47,7 @@ def build_edges(n_pages: int, link_factor: int = 1) -> str:
     path = os.path.join(SCRATCH, f"edges_n{n_pages}_lf{link_factor}_seed42.parquet")
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from pregel_rs_spark.functions.extract import pages_to_edges
     from pregel_rs_spark.sources.io import get_spark
     from pregel_rs_spark.sources.synth import synth_pages
@@ -75,7 +77,7 @@ def run_level(units: int, edges_path: str, steps: int, tol: float = 0.0,
     # loss in local-cluster mode.
     cmd = [
         sys.executable,
-        "/root/repo/tools/scaling_run.py",
+        os.path.join(ROOT, "tools", "scaling_run.py"),
         str(units),
         edges_path,
         str(steps),
@@ -183,7 +185,7 @@ def main() -> None:
                     help="discarded (N, 4N) pairs run first: page-cache + "
                          "JIT-profile first-touch otherwise lands entirely "
                          "on the first measured pair")
-    ap.add_argument("--out", default="/root/repo/BENCH_SCALING.json")
+    ap.add_argument("--out", default=os.path.join(ROOT, "BENCH_SCALING.json"))
     ap.add_argument("--skip-convergence", action="store_true")
     ap.add_argument("--skip-resume", action="store_true")
     ap.add_argument("--fixed-partitions", type=int, default=None,

@@ -3,14 +3,17 @@
 query: name, what it verifies (from the query fn's docstring), and whether
 its oracle is exact SQL.  Regenerate after adding rows:
 
-    PYTHONPATH=/root/repo python tools/gen_operator_index.py
+    PYTHONPATH=. python tools/gen_operator_index.py
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 
@@ -24,7 +27,7 @@ def main() -> None:
         f"{len(qs)} queries registered in `__spark_entry__.py`; "
         f"{sum(1 for k in qs if k in os_)} have exact DuckDB SQL oracles "
         "(the rest are rows-only checks).  Replay locally with "
-        "`PYTHONPATH=/root/repo python tools/check_oracle.py "
+        "`PYTHONPATH=. python tools/check_oracle.py "
         "/root/testdata/sf0.01`.",
         "",
         "| # | query | oracle | what it verifies |",
@@ -39,7 +42,7 @@ def main() -> None:
         lines.append(
             f"| {i} | `{name}` | {'SQL' if name in os_ else 'rows'} | {doc} |"
         )
-    out = "/root/repo/docs/OPERATORS.md"
+    out = os.path.join(ROOT, "docs", "OPERATORS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out} ({len(qs)} rows)")

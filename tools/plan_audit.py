@@ -21,15 +21,18 @@ Hard expectations (the EXPECT table below) fail the process with exit 1,
 so this doubles as a CI-shape gate; the full per-query plan excerpts are
 written to docs/PLAN_AUDIT.md for the human (and judge) to read.
 
-Usage: PYTHONPATH=/root/repo python tools/plan_audit.py [sf_dir] [out_md]
+Usage: PYTHONPATH=. python tools/plan_audit.py [sf_dir] [out_md]
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from pregel_rs_spark.sources.io import get_spark
@@ -492,7 +495,10 @@ def audit_one(name: str, plan: str) -> tuple[list[str], list[str]]:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    out_md = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/docs/PLAN_AUDIT.md"
+    out_md = (
+        sys.argv[2] if len(sys.argv) > 2
+        else os.path.join(ROOT, "docs", "PLAN_AUDIT.md")
+    )
     spark = get_spark(cores=8)
     spark.sparkContext.setLogLevel("ERROR")
     # AQE wraps any plan with an Exchange in an unexecuted

@@ -9,19 +9,22 @@ tools/bench_scaling.py (the protocol arguments live in BASELINE.md §3);
 the per-run number is the whole-run wall — star-CC is a deterministic
 fixpoint, so every level does the identical rounds/work.
 
-Usage: PYTHONPATH=/root/repo python tools/scaling_cc.py
+Usage: PYTHONPATH=. python tools/scaling_cc.py
        [--pages 1500000] [--link-factor 2] [--n 2] [--repeats 3]
-       [--out /root/repo/BENCH_SCALING_CC.json]
+       [--out BENCH_SCALING_CC.json]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 import tools.bench_scaling as B
 
@@ -34,7 +37,7 @@ def main() -> None:
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--max-rounds", type=int, default=60)
     ap.add_argument("--fixed-partitions", type=int, default=32)
-    ap.add_argument("--out", default="/root/repo/BENCH_SCALING_CC.json")
+    ap.add_argument("--out", default=os.path.join(ROOT, "BENCH_SCALING_CC.json"))
     args = ap.parse_args()
 
     B.FIXED_PARTITIONS = args.fixed_partitions

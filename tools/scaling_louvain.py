@@ -12,19 +12,22 @@ per-round shape (neighbor-label join + three hash aggs + arg-max) is the
 heaviest shuffle mix of the three scaling algorithms — the worst-case
 datapoint for the shuffle-bound claim.
 
-Usage: PYTHONPATH=/root/repo python tools/scaling_louvain.py
+Usage: PYTHONPATH=. python tools/scaling_louvain.py
        [--pages 1500000] [--link-factor 2] [--rounds 4] [--n 2]
-       [--repeats 3] [--out /root/repo/BENCH_SCALING_LOUVAIN.json]
+       [--repeats 3] [--out BENCH_SCALING_LOUVAIN.json]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 import tools.bench_scaling as B
 
@@ -37,7 +40,7 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=2)
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--fixed-partitions", type=int, default=32)
-    ap.add_argument("--out", default="/root/repo/BENCH_SCALING_LOUVAIN.json")
+    ap.add_argument("--out", default=os.path.join(ROOT, "BENCH_SCALING_LOUVAIN.json"))
     args = ap.parse_args()
 
     B.FIXED_PARTITIONS = args.fixed_partitions

@@ -46,7 +46,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CKPT_TOKEN = "scaling-pagerank-d0.85"  # config hash shared across legs
 

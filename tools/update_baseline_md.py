@@ -8,7 +8,10 @@ Usage: python tools/update_baseline_md.py [BENCH_SCALING.json] [BASELINE.md]
 from __future__ import annotations
 
 import json
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 MARK = "## 4. Measured results"
 
@@ -431,8 +434,10 @@ def section(d: dict) -> str:
 
 
 def main() -> None:
-    jpath = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/BENCH_SCALING.json"
-    mpath = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/BASELINE.md"
+    jpath = (sys.argv[1] if len(sys.argv) > 1
+             else os.path.join(ROOT, "BENCH_SCALING.json"))
+    mpath = (sys.argv[2] if len(sys.argv) > 2
+             else os.path.join(ROOT, "BASELINE.md"))
     with open(jpath) as f:
         d = json.load(f)
     with open(mpath) as f:
